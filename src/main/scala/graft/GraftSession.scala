@@ -24,13 +24,10 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cpus.toString)
     // AQE starts wide and coalesces: big shuffles keep 8x cores partitions (smaller
     // per-task sorts -> less spill on 100 TB-class SMJs), small ones coalesce back to
-    // ~advisory size so the extra granularity costs nothing when data is small.
-    // SPARK_GRAFT_NARROW_START disables the wide start for A/B measurement only: it
-    // exists to prove (or disprove) that wide-start is innocent when a bench number
-    // regresses on a noisy host.
-    if (!sys.env.contains("SPARK_GRAFT_NARROW_START"))
-      b.config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (cpus * 8).toString)
+    // ~advisory size so the extra granularity costs nothing when data is small
+    // (cleared of the r8 bench anomalies in bench_ab_widestart_r9.json).
     b
+      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", (cpus * 8).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

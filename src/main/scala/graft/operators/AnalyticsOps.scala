@@ -333,22 +333,18 @@ object AnalyticsOps {
    * the basket total rides a 1-row broadcast and the final cut is a 20-row
    * TakeOrdered. Lift is rounded to 6 BEFORE ranking so both engines order identical
    * numbers, ties by the pair keys.
+   *
+   * The distinct (okey, item) basket frame feeds FOUR consumers — both self-join
+   * sides, the item support count, and the basket total — and without materialization
+   * each one re-runs the lineitem scan + the m-row distinct exchange (ReuseExchange
+   * only dedups the two identically-keyed join sides). localCheckpoint materializes it
+   * once; eager like qRfm's base (r14, adopted in bench_dedup_r14.json).
    */
   def qBasketLift(spark: SparkSession, dir: String, k: Int = 20,
-      minSupport: Long = 3): DataFrame =
-    qBasketLiftImpl(spark, dir, k, minSupport, fusedItems = true)
-
-  /** r14 `fusedItems` (guide §1.2/§2.4 — the qSssp prologue treatment): the distinct
-    * (okey, item) basket frame feeds FOUR consumers — both self-join sides, the item
-    * support count, and the basket total — and without materialization each one re-runs
-    * the lineitem scan + the m-row distinct exchange (ReuseExchange only dedups the two
-    * identically-keyed join sides). localCheckpoint materializes it once; eager like
-    * qRfm's base. The un-fused twin stays for the interleaved A/B. */
-  private[graft] def qBasketLiftImpl(spark: SparkSession, dir: String, k: Int,
-      minSupport: Long, fusedItems: Boolean): DataFrame = {
-    val items0 = TableIO.lineitem(spark, dir)
+      minSupport: Long = 3): DataFrame = {
+    val items = TableIO.lineitem(spark, dir)
       .select(col("l_orderkey").as("okey"), col("l_partkey").as("item")).distinct()
-    val items = if (fusedItems) items0.localCheckpoint() else items0
+      .localCheckpoint()
     val supp = items.groupBy(col("item")).agg(count(lit(1)).as("c"))
     val nBaskets = items.select(col("okey")).distinct().agg(count(lit(1)).as("n"))
     val pairs = items.as("a")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.sources.TableIO
@@ -38,75 +39,12 @@ object GraphOps {
    * ZERO exchanges (guide §2.4; the r12 push form paid one m-row contribution exchange
    * per iteration). The pull rule sums pr(u)/deg(u) over u ∈ N(v), equal to the push
    * rule's in-contribution sum exactly because the documented input contract is a
-   * SYMMETRIC edge list. The r7-r11 row-per-edge form stays as [[pageRankArray]] and
-   * the push form as [[pageRankPacked]] — the A/B twins the probe and the equality
-   * spec hold the pull path against.
+   * SYMMETRIC edge list. Pull was adopted over push in bench_graph_pull_r14.json
+   * (interleaved pairs at sf0.1 and sf1, equal results); the push form remains the
+   * live path past the 2M-vertex gate.
    */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85): DataFrame =
     pageRankImpl(edges, iterations, damping, pull = true)
-
-  /** Row-per-edge PageRank (the r7-r11 form) — kept as [[pageRank]]'s A/B twin. */
-  def pageRankArray(edges: DataFrame, iterations: Int, damping: Double = 0.85): DataFrame = {
-    // Adjacency-set build: ONE shuffle (groupBy src) dedups multi-edges, computes the
-    // out-degree, and leaves the frame hash-partitioned on src all at once — the
-    // explode back to (src, dst, w=1/deg) is map-only and keeps that partitioning for
-    // the cached per-iteration frame. (The GraphX representation: per-vertex adjacency;
-    // per-group memory is one node's neighbor set, the same bound GraphX carries.)
-    val ew = edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("dsts"))
-      .select(col("src"), explode(col("dsts")).as("dst"),
-        (lit(1.0) / size(col("dsts"))).as("w"))
-      .cache()
-    // Node count off the CACHED frame (first action, so it also populates the cache);
-    // counting via `deg` would re-run the whole edge lineage a second time.
-    val n = ew.select(col("src")).distinct().count()
-    // Scale-adaptive join strategy, decided off the ALREADY-KNOWN vertex count (an
-    // AQE-style runtime decision, not a hardcoded hint): the per-iteration ranks frame
-    // is one (id, pr) row per vertex, so when it is broadcast-sized (≤2M rows ≈ 32 MB)
-    // each iteration is ONE map-side join + ONE groupBy shuffle — no per-iteration
-    // shuffle of the rank frame and no sort of the edge frame. Past the threshold the
-    // same plan falls back to the partitioned shuffle join (cluster-scale graphs).
-    // In-suite this also halves block-manager traffic, which round-5 driver benches
-    // showed is what inflates the iterative pack under memory/IO contention.
-    val smallRanks = n <= 2000000L
-    var ranks = ew.select(col("src").as("id")).distinct()
-      .select(col("id"), lit(1.0 / n).as("pr")).localCheckpoint()
-    var it = 0
-    while (it < iterations) {
-      val rankSide = ranks.withColumnRenamed("id", "src")
-      val contribs = ew
-        .join(if (smallRanks) broadcast(rankSide) else rankSide, Seq("src"))
-        .select(col("dst").as("id"), (col("pr") * col("w")).as("c"))
-      val next = contribs.groupBy(col("id"))
-        .agg((lit((1.0 - damping) / n) + lit(damping) * sum(col("c"))).as("pr"))
-        .localCheckpoint()
-      ranks.unpersist()
-      ranks = next
-      it += 1
-    }
-    ew.unpersist()
-    ranks
-  }
-
-  /**
-   * Packed-adjacency PageRank twin (r12 experiment): the adjacency is held as ONE row
-   * per vertex carrying its out-neighbor list in delta-varint `binary`
-   * ([[org.apache.spark.sql.graft.VarintCodec]]) plus the out-degree, instead of one
-   * row per out-edge. The cached per-iteration frame shrinks from m edge rows to n
-   * vertex rows (~1.5 B per neighbor in the payload), the rank join probes n rows
-   * instead of m, and neighbor ids re-materialize only inside the per-iteration
-   * map-side explode (`unpack_sorted_varint`). The per-iteration contribution
-   * EXCHANGE is unchanged by construction — it carries partial-summed (dst, double)
-   * rows whose size is independent of the adjacency encoding — which is why the win
-   * is a steady 5-25%, not the triangles-class 2-3x (that one shrank a BROADCAST
-   * whose bytes were the bottleneck). Identical fixed-iteration semantics; A/B'd
-   * against [[pageRankArray]] in bench_pagerank_packed_r12.json (interleaved pairs
-   * at sf0.1 and sf1, equal results). Since r14 this PUSH form is the A/B twin the
-   * pull default ([[pageRank]]) is held against — and the live cluster-scale path
-   * past the 2M broadcast gate.
-   */
-  def pageRankPacked(edges: DataFrame, iterations: Int, damping: Double = 0.85): DataFrame =
-    pageRankImpl(edges, iterations, damping, pull = false)
 
   /**
    * Shared packed-adjacency PageRank body. `pull = true` (r14, broadcast-gated regime
@@ -176,11 +114,6 @@ object GraphOps {
   }
 
   /**
-   * `q_pagerank`: top-50 parts by PageRank over the co-purchase graph (parts sharing an
-   * order, both directions). Scores rounded to 6 decimals for a total cross-engine
-   * order (pr6 desc, then partkey).
-   */
-  /**
    * Co-purchase edge list (parts sharing an order, both directions) WITHOUT a fact-fact
    * self-join: one groupBy(order) shuffle of the scan (vs shuffling both join sides),
    * then the per-order part set expands to ordered pairs map-side (orders hold a handful
@@ -200,18 +133,14 @@ object GraphOps {
       .filter(col("src") =!= col("dst"))
   }
 
+  /**
+   * `q_pagerank`: top-50 parts by PageRank over the co-purchase graph (parts sharing an
+   * order, both directions). Scores rounded to 6 decimals for a total cross-engine
+   * order (pr6 desc, then partkey).
+   */
   def qPagerank(spark: SparkSession, dir: String): DataFrame = {
     val edges = coPurchaseEdges(spark, dir)
     pageRank(edges, iterations = 3)
-      .select(col("id").as("l_partkey"), round(col("pr"), 6).as("pr6"))
-      .orderBy(col("pr6").desc, col("l_partkey"))
-      .limit(50)
-  }
-
-  /** [[qPagerank]] through [[pageRankArray]] — the A/B twin (same result contract). */
-  def qPagerankArray(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coPurchaseEdges(spark, dir)
-    pageRankArray(edges, iterations = 3)
       .select(col("id").as("l_partkey"), round(col("pr"), 6).as("pr6"))
       .orderBy(col("pr6").desc, col("l_partkey"))
       .limit(50)
@@ -261,62 +190,30 @@ object GraphOps {
    *
    * `edges`: directed (src, dst), multi-edges fine; `seeds`: (id). Returns (id, hop).
    */
-  def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
-    bfsImpl(edges, seeds, maxHops, gateFrontier = false)
-
-  /**
-   * r13: `gateFrontier` applies pageRank/labelPropagation's scale-adaptive broadcast to
-   * the per-round frontier join. MEASURED OFF for bfs (interleaved A/B,
-   * bench_frontier_gate_r13.json): the packed adjacency row is thin (~1.5 B/neighbor
-   * varint), so the ungated shuffle join is cheap, while a 2-hop frontier grows to
-   * nearly the whole vertex set by round 2 — force-broadcasting it cost 10-60% in the
-   * warm sf0.1 pairs and washed at sf1. sssp is the opposite case (fat
-   * array<struct<dst,w>> adjacency rows whose shuffle+sort dominates; checkpointed
-   * frontiers carry no stats so auto-broadcast never fires pre-AQE) and keeps its
-   * gate ON — measured 1.3-2.1x faster in 6 of 7 pairs.
-   */
-  private[graft] def bfsImpl(
-      edges: DataFrame, seeds: DataFrame, maxHops: Int, gateFrontier: Boolean,
-      pullSymmetric: Boolean = false): DataFrame = {
+  def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
     import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
     // r12: packed adjacency (the pageRank treatment) — one cached row per vertex,
-    // multi-edges collapsed by the set build (the old form deduped after expansion:
-    // same result, strictly less per-round work), neighbor ids re-materializing only
-    // inside the per-round map-side explode. The frontier shuffle is unchanged.
-    //
-    // r14 `pullSymmetric` (valid ONLY for symmetric edge lists — bfs's public contract
-    // is DIRECTED, so this is a caller opt-in, not the API default): v is newly
-    // reached iff N(v) ∩ frontier ≠ ∅, so instead of expanding the frontier's
-    // adjacency and paying an m_frontier-row `distinct()` exchange, each adjacency
-    // row probes the BROADCAST frontier on its exploded neighbors and the dedup
-    // aggregate is keyed by the row's own vertex — already the cached frame's hash
-    // partitioning — so the per-round reach set needs NO exchange (guide §2.4).
-    // Requires the frontier broadcastable; gated by the same 2M vertex count.
+    // multi-edges collapsed by the set build, neighbor ids re-materializing only
+    // inside the per-round map-side explode (bench_graphpack_packed_r12.json). The
+    // frontier join stays an unhinted shuffle join: the packed row is thin, while a
+    // 2-hop frontier grows to nearly the whole vertex set, so broadcasting it lost
+    // (bench_frontier_gate_r13.json); pulling onto the adjacency's partitioning lost
+    // too (bench_graph_pull_r14.json) and would only be sound on symmetric input.
     val adj = edges.select(col("src"), col("dst"))
       .groupBy(col("src"))
       .agg(packSortedVarint(sort_array(collect_set(col("dst")))).as("nbrs"))
       .cache()
-    val smallGraph = adj.count() <= 2000000L
-    val smallFrontier = gateFrontier && smallGraph
-    val pull = pullSymmetric && smallGraph
     var visited = seeds.select(col("id")).distinct()
       .select(col("id"), lit(0).as("hop")).localCheckpoint()
     var frontier = visited.select(col("id"))
     var h = 1
     var drained = false
     while (h <= maxHops && !drained) {
-      val next = (if (pull) {
-        adj.select(col("src").as("id"), explode(unpackSortedVarint(col("nbrs"))).as("nbr"))
-          .join(broadcast(frontier.withColumnRenamed("id", "nbr")), Seq("nbr"))
-          .select(col("id")).dropDuplicates("id")
-          .join(broadcast(visited.select(col("id"))), Seq("id"), "left_anti")
-      } else {
-        val frontierSide = frontier.withColumnRenamed("id", "src")
-        (if (smallFrontier) broadcast(frontierSide) else frontierSide)
-          .join(adj, Seq("src"))
-          .select(explode(unpackSortedVarint(col("nbrs"))).as("id")).distinct()
-          .join(visited, Seq("id"), "left_anti")
-      }).select(col("id"), lit(h).as("hop")).localCheckpoint()
+      val next = frontier.withColumnRenamed("id", "src")
+        .join(adj, Seq("src"))
+        .select(explode(unpackSortedVarint(col("nbrs"))).as("id")).distinct()
+        .join(visited, Seq("id"), "left_anti")
+        .select(col("id"), lit(h).as("hop")).localCheckpoint()
       drained = next.isEmpty
       if (!drained) {
         visited = visited.unionByName(next).localCheckpoint()
@@ -328,56 +225,22 @@ object GraphOps {
     visited
   }
 
-  /** Row-per-edge BFS (the pre-r12 form) — kept as [[bfs]]'s A/B twin. */
-  private[graft] def bfsArray(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).repartition(col("src")).cache()
-    var visited = seeds.select(col("id")).distinct()
-      .select(col("id"), lit(0).as("hop")).localCheckpoint()
-    var frontier = visited.select(col("id"))
-    var h = 1
-    var drained = false
-    while (h <= maxHops && !drained) {
-      val next = frontier.withColumnRenamed("id", "src")
-        .join(e, Seq("src"))
-        .select(col("dst").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .select(col("id"), lit(h).as("hop")).localCheckpoint()
-      drained = next.isEmpty
-      if (!drained) {
-        visited = visited.unionByName(next).localCheckpoint()
-        frontier = next.select(col("id"))
-      }
-      h += 1
-    }
-    e.unpersist()
-    visited
-  }
-
   /**
    * `q_bfs`: hop distance from the partkey%97==0 seed parts over the co-purchase graph,
    * bounded at 2 hops. Pure integer arithmetic — the DuckDB oracle unrolls the two
    * frontier steps as CTEs and must hash-match exactly.
-   */
-  def qBfs(spark: SparkSession, dir: String): DataFrame =
-    qBfsImpl(spark, dir, fusedPrologue = true)
-
-  /**
-   * r13 prologue fusion — the bfs analog of [[qSsspImpl]]: the r12 form ran the
-   * co-purchase lineage (scan → groupBy(l_orderkey) → double explode) TWICE, once for
-   * the seeds action and once for the adjacency cache build. One localCheckpoint of
-   * the edge list feeds both. No repartition here: bfs's adjacency groupBy(src) is
-   * the only m-row aggregate downstream and its collect_set partial-aggregates
+   *
+   * One localCheckpoint of the edge list feeds both the seeds action and the adjacency
+   * build, which otherwise each re-run the co-purchase lineage (adopted in
+   * bench_graph_prologue_r13.json). No repartition here: bfs's adjacency groupBy(src)
+   * is the only m-row aggregate downstream and its collect_set partial-aggregates
    * map-side — a pre-shuffle by src would trade that combine away for nothing.
    */
-  private[graft] def qBfsImpl(spark: SparkSession, dir: String,
-      fusedPrologue: Boolean, pullFrontier: Boolean = false): DataFrame = {
-    val edges0 = coPurchaseEdges(spark, dir)
-    val edges = if (fusedPrologue) edges0.localCheckpoint() else edges0
+  def qBfs(spark: SparkSession, dir: String): DataFrame = {
+    val edges = coPurchaseEdges(spark, dir).localCheckpoint()
     val seeds = edges.select(col("src").as("id"))
       .filter(col("id") % 97 === 0).distinct()
-    // pullFrontier is sound here because the co-purchase edge list is symmetric —
-    // see bfsImpl's r14 note (the PUBLIC bfs contract stays directed/push).
-    bfsImpl(edges, seeds, maxHops = 2, gateFrontier = false, pullSymmetric = pullFrontier)
+    bfs(edges, seeds, maxHops = 2)
       .select(col("id").as("l_partkey"), col("hop"))
       .orderBy(col("l_partkey"))
   }
@@ -428,8 +291,8 @@ object GraphOps {
    * Returns one row: the global triangle count. The count is orientation-invariant, so
    * the DuckDB oracle uses plain id-orientation and must match exactly.
    *
-   * r14 `spreadIntersect` (VERDICT r13 Next #6 — the 1.07 c8-vs-c32 scaling ratio):
-   * on the broadcast path the intersect stage's parallelism IS the checkpointed edge
+   * Intersect-stage spread (r14, adopted in bench_triangles_spread_r14.json): on the
+   * broadcast path the intersect stage's parallelism IS the checkpointed edge
    * list's partition count, and that checkpoint job is AQE-final — the oriented frame
    * is byte-SMALL (16 B/edge) but compute-HEAVY downstream (O(m^1.5) wedge
    * intersections), so AQE's byte-based coalescing (64 MB advisory) collapses it to a
@@ -442,8 +305,7 @@ object GraphOps {
    * (defaultParallelism, not a local constant); the partitioned SMJ path past the
    * broadcast gate gets its parallelism from the join exchange as before.
    */
-  def triangleCount(edges: DataFrame, broadcastGateEdges: Long = 32000000L,
-      spreadIntersect: Boolean = true): DataFrame = {
+  def triangleCount(edges: DataFrame, broadcastGateEdges: Long = 32000000L): DataFrame = {
     import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, packedIntersectSize}
     val und = edges
       .select(least(col("src"), col("dst")).cast("long").as("u"),
@@ -457,17 +319,14 @@ object GraphOps {
     // localCheckpoint: the oriented edge list feeds THREE consumers (the edge stream and
     // both adjacency joins) — without materialization Spark re-derives the whole
     // scan+groupBy+distinct lineage once per consumer (measured 3x the work at sf0.1).
-    val oriented0 = und
+    val oriented = und
       .join(deg.select(col("id").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), Seq("v"))
       .select(when(uFirst, col("u")).otherwise(col("v")).as("a"),
         when(uFirst, col("v")).otherwise(col("u")).as("b"))
-    // explicit partition count: an un-numbered repartition is itself AQE-coalescible,
-    // which would undo the spread (see Scaladoc)
-    val oriented = (if (spreadIntersect)
-        oriented0.repartition(
-          edges.sparkSession.sparkContext.defaultParallelism * 2, col("a"), col("b"))
-      else oriented0)
+      // explicit partition count: an un-numbered repartition is itself
+      // AQE-coalescible, which would undo the spread (see Scaladoc)
+      .repartition(edges.sparkSession.sparkContext.defaultParallelism * 2, col("a"), col("b"))
       .localCheckpoint()
     // Scale-adaptive broadcast off the ALREADY-MATERIALIZED edge count (free on the
     // checkpointed RDD): the packed adjacency frame holds exactly m delta-varints
@@ -571,7 +430,7 @@ object GraphOps {
    * receives from N_in(v)); integer counts, no float-order caveat. Past the 2M-vertex
    * gate the label frame must not broadcast and a pull join would shuffle m exploded
    * rows — strictly worse — so the cluster-scale path keeps the r12 push round
-   * unchanged.
+   * unchanged. Pull was adopted in bench_graph_pull_r14.json.
    */
   private[graft] def labelPropagationImpl(edges: DataFrame, rounds: Int,
       pull: Boolean): DataFrame = {
@@ -619,33 +478,6 @@ object GraphOps {
       r += 1
     }
     adj.unpersist()
-    labels
-  }
-
-  /** Row-per-edge label propagation (the pre-r12 form) — [[labelPropagation]]'s A/B twin. */
-  private[graft] def labelPropagationArray(edges: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(collect_set(col("dst")).as("dsts"))
-      .select(col("src"), explode(col("dsts")).as("dst"))
-      .cache()
-    var labels = e.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("label")).localCheckpoint()
-    val smallLabels = labels.count() <= 2000000L
-    var r = 0
-    while (r < rounds) {
-      val labelSide = labels.withColumnRenamed("id", "src")
-      val votes = e.join(if (smallLabels) broadcast(labelSide) else labelSide, Seq("src"))
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
-      val next = votes
-        .groupBy(col("dst"))
-        .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("dst").as("id"), (-col("m.nl")).as("label"))
-        .localCheckpoint()
-      labels.unpersist()
-      labels = next
-      r += 1
-    }
-    e.unpersist()
     labels
   }
 
@@ -713,7 +545,14 @@ object GraphOps {
   def sssp(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame =
     ssspImpl(edges, sources, rounds, gateFrontier = true)
 
-  /** r13 frontier-broadcast gate — same rationale and A/B as [[bfsImpl]]. */
+  /**
+   * `gateFrontier` broadcasts the per-round frontier while the vertex count is under
+   * the 2M gate (adopted for sssp in bench_frontier_gate_r13.json: the fat
+   * array<struct<dst,w>> adjacency rows make the ungated shuffle join the bill, and
+   * checkpointed frontiers carry no stats for auto-broadcast). `false` is the
+   * unbroadcast path every graph past the gate takes; specs pass it to reach that
+   * path on small inputs.
+   */
   private[graft] def ssspImpl(
       edges: DataFrame, sources: DataFrame, rounds: Int, gateFrontier: Boolean): DataFrame = {
     val adj = edges.select(col("src"), struct(col("dst"), col("w")).as("e"))
@@ -748,83 +587,30 @@ object GraphOps {
     dist
   }
 
-  /** Row-per-edge Bellman-Ford (the pre-r12 form) — kept as [[sssp]]'s A/B twin. */
-  private[graft] def ssspArray(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst"), col("w"))
-      .repartition(col("src")).cache()
-    var dist = sources.select(col("id")).distinct()
-      .select(col("id"), lit(0L).as("dist")).localCheckpoint()
-    var frontier = dist
-    var r = 0
-    var drained = false
-    while (r < rounds && !drained) {
-      val relax = frontier.withColumnRenamed("id", "src")
-        .join(e, Seq("src"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      val next = dist.unionByName(relax)
-        .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
-      frontier = next.join(dist.withColumnRenamed("dist", "old"), Seq("id"), "left")
-        .filter(col("old").isNull || col("dist") < col("old"))
-        .select(col("id"), col("dist")).localCheckpoint()
-      drained = frontier.isEmpty
-      dist.unpersist()
-      dist = next
-      r += 1
-    }
-    e.unpersist()
-    dist
-  }
-
   /**
    * `q_sssp`: <=3-edge shortest distances from the partkey%101==0 seed set over the
    * co-purchase graph, with integer edge weights w = max(1, 6 − co-purchase count)
    * (stronger ties are closer). Integer min-plus is exact, so the DuckDB oracle
    * (three unrolled relaxation rounds) hash-matches exactly.
+   *
+   * Prologue (r13 fusion, adopted in bench_graph_prologue_r13.json; r14 cache, adopted
+   * in bench_graph_pull_r14.json): the weighted edge set feeds both the seeds action
+   * and sssp's adjacency build, so it is materialized ONCE instead of re-running
+   * scan → groupBy(l_orderkey) → explode → groupBy(src,dst) per consumer. An explicit
+   * `repartition(src)` sits BEFORE the (src,dst) count so HashPartitioning(src)
+   * satisfies the aggregate's ClusteredDistribution (src is a prefix of the keys). The
+   * frame is materialized with cache() rather than localCheckpoint(): the cached plan
+   * keeps that HashPartitioning(src), so sssp's adjacency groupBy(src) needs no
+   * exchange of its own either, while a checkpoint surfaces as a LogicalRDD with
+   * UnknownPartitioning (plans/r13/q_sssp_prologue_after.txt). Per-m-row exchange
+   * passes: okey and repartition(src), nothing else.
    */
-  def qSssp(spark: SparkSession, dir: String): DataFrame =
-    qSsspImpl(spark, dir, fusedPrologue = true)
-
-  /**
-   * r13 prologue fusion (guide §2.4 — remove shuffles outright; A/B'd in
-   * bench_graph_prologue_r13.json, adopted — fused won all 7 interleaved pairs,
-   * 1.1-2.5x at sf0.1 and ~2x in the cleanest sf1 pair): the r12 form computed the
-   * weighted edge lineage TWICE — `seeds` is its own action (inside sssp's
-   * localCheckpoint of sources) and the adjacency cache build is another, each
-   * re-running scan → groupBy(l_orderkey) → explode → groupBy(src,dst). The fused
-   * form materializes the weighted edge set ONCE, with an explicit
-   * `repartition(src)` placed BEFORE the (src,dst) count so HashPartitioning(src)
-   * satisfies the aggregate's ClusteredDistribution (src is a prefix of the keys)
-   * and the count needs no exchange of its own. Per-m-row exchange passes drop from
-   * five (okey x2 runs, (src,dst) x2 runs, adjacency src x1) to three (okey,
-   * repartition(src), adjacency src). NOTE the adjacency groupBy(src) still pays its
-   * exchange: localCheckpoint surfaces as a LogicalRDD with UnknownPartitioning
-   * (plans/r13/q_sssp_prologue_after.txt), so Catalyst cannot prove co-partitioning
-   * — the win is the deduped lineage and the fused count, not that last exchange.
-   * Results are identical (probe equality + oracle hash-match through the rework);
-   * the un-fused twin stays for the interleaved A/B.
-   */
-  private[graft] def qSsspImpl(spark: SparkSession, dir: String,
-      fusedPrologue: Boolean, prologueCache: Boolean = true): DataFrame = {
-    val weighted = if (fusedPrologue) {
-      // r14 `prologueCache`: materialize the shared weighted-edge frame via cache()
-      // instead of localCheckpoint(). Identical dedup of the lineage, but the CACHED
-      // plan keeps its outputPartitioning — HashPartitioning(src) from the explicit
-      // repartition, which the (src,dst) count already rides — so sssp's adjacency
-      // groupBy(src) (ClusteredDistribution(src)) needs NO exchange of its own. The
-      // r13 checkpoint form surfaced as a LogicalRDD with UnknownPartitioning and
-      // paid that third m-row exchange (the caveat in the r13 note below);
-      // per-m-row exchange passes drop 3 → 2 (guide §2.4).
-      val w0 = coPurchaseEdges(spark, dir)
-        .repartition(col("src"))
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
-        .select(col("src"), col("dst"), greatest(lit(1L), lit(6L) - col("cnt")).as("w"))
-      if (prologueCache) w0.cache() else w0.localCheckpoint()
-    } else {
-      coPurchaseEdges(spark, dir)
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
-        .select(col("src"), col("dst"), greatest(lit(1L), lit(6L) - col("cnt")).as("w"))
-    }
+  def qSssp(spark: SparkSession, dir: String): DataFrame = {
+    val weighted = coPurchaseEdges(spark, dir)
+      .repartition(col("src"))
+      .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
+      .select(col("src"), col("dst"), greatest(lit(1L), lit(6L) - col("cnt")).as("w"))
+      .cache()
     val seeds = weighted.select(col("src").as("id"))
       .filter(col("id") % 101 === 0).distinct()
     sssp(weighted, seeds, rounds = 3)
@@ -875,57 +661,24 @@ object GraphOps {
    * rounds). Edges are deduplicated on entry (simple-graph degree semantics), assumed
    * symmetric, so per-src out-degree IS the undirected degree.
    *
-   * Since r14 this delegates to the packed incremental-decrement form
-   * ([[kcorePeelPacked]]): one m-row exchange total, vertex-sized per-round state,
-   * per-round work proportional to the PEELED part. The edge-rewrite peel stays as
-   * [[kcorePeelEdgeRewrite]] and the vertex-carry form as [[kcorePeelVertex]] — the
-   * A/B twins the probe and the equality spec hold the default against.
    * localCheckpoint keeps the plan O(1) in rounds. Returns each surviving vertex with
    * its degree in the R-times-peeled graph.
-   */
-  def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame =
-    kcorePeelPacked(edges, k, rounds)
-
-  /**
-   * Edge-rewrite peel (the r12b-r13 default) — kept as [[kcorePeel]]'s A/B twin.
-   * Materialization contract: each round localCheckpoints the SURVIVING edge set —
-   * O(m_r) per round, O(m·rounds) worst case when little peels, plus the initial
-   * full-m `distinct()` exchange. The r13 sf1 sweep measured this at 26.2 s — the
-   * single most expensive entry in the suite — which is what the packed
-   * incremental-decrement form ([[kcorePeelPacked]]) replaces.
-   */
-  private[graft] def kcorePeelEdgeRewrite(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var e = edges.select(col("src"), col("dst")).distinct().localCheckpoint()
-    var r = 0
-    while (r < rounds) {
-      val keep = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("id"))
-      e = e.join(keep.withColumnRenamed("id", "src"), Seq("src"), "left_semi")
-        .join(keep.withColumnRenamed("id", "dst"), Seq("dst"), "left_semi")
-        .select(col("src"), col("dst")).localCheckpoint()
-      r += 1
-    }
-    e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-  }
-
-  /**
-   * Packed incremental-decrement peel (r14 default; guide §2.3/§2.4 via VERDICT r13
-   * Next #1). Three structural changes over the edge-rewrite form:
+   *
+   * Packed incremental-decrement peel (r14; adopted over the r12b-r13 edge-rewrite
+   * peel in bench_kcore_packed_r14.json, 26.2 s → 12.7 s at sf1, after the vertex-carry
+   * form lost in bench_kcore_vertex_r13.json):
    *
    *  1. ONE m-row exchange total: the adjacency build's groupBy(src) + collect_set
    *     dedups multi-edges AND yields the round-1 degree (`size`) in the same
-   *     aggregate — the edge-rewrite form paid a full-m `distinct()` exchange, then a
-   *     fresh O(m_r) degree exchange every round.
+   *     aggregate — no full-m `distinct()` and no fresh degree exchange per round.
    *  2. Nothing m-sized is ever rewritten: the packed adjacency (delta-varint
    *     neighbor lists, ~1.5 B/neighbor) is cached once; per-round state is the
-   *     vertex-sized (src, deg) frame — the edge-rewrite form localCheckpointed an
-   *     O(m_r) edge set every round (the storage churn VERDICT r13 named as the 26 s
-   *     sf1 bill).
+   *     vertex-sized (src, deg) frame.
    *  3. Per-round work is proportional to the PEELED part, not the survivors: the
    *     induced degree is maintained incrementally — deg_r(v) = deg_{r-1}(v) −
    *     |N(v) ∩ dropped_{r-1}| (dropped sets are disjoint and N(v) is fixed, so the
-   *     decrements telescope; equality with the edge-rewrite peel follows by
-   *     induction and is pinned bit-for-bit in GraphOpsSpec). Only DROPPED vertices'
+   *     decrements telescope to the degree in the graph induced on the survivors;
+   *     GraphOpsSpec pins this against a plain-Scala peel). Only DROPPED vertices'
    *     adjacency rows are exploded each round; the decrement aggregate partial-sums
    *     map-side, so its exchange carries at most vertex-sized rows.
    *
@@ -935,10 +688,10 @@ object GraphOps {
    * past it the same plan degrades to shuffle joins (checkpointed frames carry no
    * stats, so the gate is decided off the materialized count, AQE-style).
    * A survivor can end a round with deg 0 (all its ≥k neighbors dropped); it peels in
-   * the next round's filter, and the final `deg > 0` filter reproduces the
-   * edge-rewrite form's "no surviving edges ⇒ absent from the degree aggregate".
+   * the next round's filter, and the final `deg > 0` filter drops vertices with no
+   * surviving edge, which have no degree in the peeled graph.
    */
-  private[graft] def kcorePeelPacked(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
     val adj = edges.select(col("src"), col("dst"))
       .groupBy(col("src")).agg(sort_array(collect_set(col("dst"))).as("ds"))
@@ -953,6 +706,9 @@ object GraphOps {
     // the res materialization below): at rehearsal scale the peel is fixed-cost-bound,
     // and each eager vertex-sized checkpoint is a full driver-synced job.
     var cur = adj.select(col("src"), col("deg"))
+    // the checkpoint `cur` currently reads, released once its successor has
+    // materialized (its blocks cannot be recomputed after release)
+    var held: Option[DataFrame] = None
     var r = 0
     while (r < rounds) {
       val dropped = cur.filter(col("deg") < k).select(col("src"))
@@ -963,54 +719,26 @@ object GraphOps {
       val next = cur.filter(col("deg") >= k)
         .join(gate(dec), Seq("src"), "left")
         .select(col("src"), (col("deg") - coalesce(col("dcnt"), lit(0L))).as("deg"))
-      cur = if (r < rounds - 1) next.localCheckpoint() else next
+      if (r < rounds - 1) {
+        cur = next.localCheckpoint()
+        held.foreach(releaseCheckpoint)
+        held = Some(cur)
+      } else cur = next
       r += 1
     }
     val res = cur.filter(col("deg") > 0).localCheckpoint()
+    held.foreach(releaseCheckpoint)
     adj.unpersist()
     res
   }
 
-  /**
-   * Vertex-carry k-core twin: the ORIGINAL deduped edge set stays cached (one write,
-   * ever); each round recomputes degrees by semi-joining it against the current
-   * survivor VERTEX set (vertex-sized — Spark broadcasts it when it fits) and carries
-   * only the shrinking survivor set forward. Equivalent by induction: survivors_r ⊆
-   * survivors_{r-1} (a vertex outside the previous cut has zero surviving edges), so
-   * the graph induced on survivors_r equals the edge-rewrite version's round-r edge
-   * set — GraphOpsSpec pins bit-for-bit equality. Trade: per-round probe work stays
-   * O(m) instead of shrinking with the peel, but nothing m-sized is ever rewritten —
-   * at billion-edge scale the rewrite's O(m·rounds) storage churn is the bottleneck
-   * this removes.
-   */
-  private[graft] def kcorePeelVertex(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val e = edges.select(col("src"), col("dst")).distinct().cache()
-    // scale-adaptive broadcast (the graph pack's standard 2M gate), decided once off the
-    // round-1 survivor count — survivor sets only shrink after that
-    var small = false
-    def induced(survivors: DataFrame): DataFrame = {
-      def side(as: String) = {
-        val s = survivors.withColumnRenamed("id", as)
-        if (small) broadcast(s) else s
-      }
-      e.join(side("src"), Seq("src"), "left_semi")
-        .join(side("dst"), Seq("dst"), "left_semi")
+  /** Drop a localCheckpoint'd frame's blocks. `Dataset.unpersist` only reaches the
+    * CacheManager, and a checkpointed frame is a LogicalRDD that never entered it. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
     }
-    var survivors: DataFrame = null
-    var r = 0
-    while (r < rounds) {
-      val g = if (survivors == null) e else induced(survivors)
-      survivors = g.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("id")).localCheckpoint()
-      if (r == 0) small = survivors.count() <= 2000000L
-      r += 1
-    }
-    // eager vertex-sized checkpoint so the cached edge set can be released here
-    val res = (if (survivors == null) e else induced(survivors))
-      .groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint()
-    e.unpersist()
-    res
-  }
 
   /**
    * `q_kcore`: two peeling rounds at k=100 over the co-purchase graph (median degree

@@ -69,36 +69,19 @@ object Dedup {
       }.toDF("doc_id", "gh", "sz")
   }
 
-  /** Exact Jaccard for a (a_id, b_id) candidate-pair frame via hashed-gram intersection.
-    * The intersection is the native two-pointer `sorted_intersect_size` kernel over the
-    * sorted gram arrays — codegen, zero allocation per pair (array_intersect's per-row
-    * hash set measured ~10x slower over 125k candidates). */
-  /** Probe-only access to [[verifiedJaccard]] (DedupProbe's pre-r14 candidate twin). */
-  private[graft] def verifiedJaccardForProbe(candidates: DataFrame, g: DataFrame): DataFrame =
-    verifiedJaccard(candidates, g)
-
-  private def verifiedJaccard(candidates: DataFrame, g: DataFrame): DataFrame = {
-    import org.apache.spark.sql.graft.VectorExpressions.sortedIntersectSize
-    val ga = g.select(col("doc_id").as("a_id"), col("gh").as("ga"), col("sz").as("sza"))
-    val gb = g.select(col("doc_id").as("b_id"), col("gh").as("gb"), col("sz").as("szb"))
-    candidates
-      .join(ga, "a_id").join(gb, "b_id")
-      .withColumn("inter", sortedIntersectSize(col("ga"), col("gb")))
-      .withColumn("jacc",
-        col("inter") * lit(1.0) / (col("sza") + col("szb") - col("inter")))
-      .select(col("a_id"), col("b_id"), col("jacc"))
-  }
-
-  /** Threshold-aware [[verifiedJaccard]] (r14): same joins, but the intersect kernel
-    * bails out of a pair's merge as soon as its best-achievable Jaccard falls below the
-    * threshold (-1 sentinel; the row is dropped here, exactly as its true sub-threshold
-    * jacc would be by the caller's `jacc >= threshold`). On candidate sets that are
-    * >99.9% false positives — sf1 measured 15.7M candidates for 2.5k true pairs — the
-    * gate cuts most of each false pair's O(|a|+|b|) merge. Pairs at or above the
-    * threshold complete the full merge: emitted (a_id, b_id, jacc) rows are
-    * bit-identical to the ungated form filtered at the same threshold (DedupSpec pins
-    * this; callers still apply their own `jacc >= threshold` filter on top). */
-  private def verifiedJaccardGated(candidates: DataFrame, g: DataFrame,
+  /** Exact Jaccard for a (a_id, b_id) candidate-pair frame via hashed-gram intersection,
+    * over the sorted gram arrays with the native two-pointer merge — codegen, zero
+    * allocation per pair (array_intersect's per-row hash set measured ~10x slower over
+    * 125k candidates). Threshold-aware (r14, adopted in bench_dedup_r14.json): the
+    * kernel bails out of a pair's merge as soon as its best-achievable Jaccard falls
+    * below the threshold (-1 sentinel; the row is dropped here, exactly as its true
+    * sub-threshold jacc would be by the caller's `jacc >= threshold`). On candidate sets
+    * that are >99.9% false positives — sf1 measured 15.7M candidates for 2.5k true
+    * pairs — the gate cuts most of each false pair's O(|a|+|b|) merge. Pairs at or
+    * above the threshold complete the full merge, so emitted (a_id, b_id, jacc) rows
+    * carry their exact Jaccard (DedupSpec pins them against an all-pairs reference;
+    * callers still apply their own `jacc >= threshold` filter on top). */
+  private def verifiedJaccard(candidates: DataFrame, g: DataFrame,
       threshold: Double): DataFrame = {
     import org.apache.spark.sql.graft.VectorExpressions.sortedIntersectSizeGated
     val ga = g.select(col("doc_id").as("a_id"), col("gh").as("ga"), col("sz").as("sza"))
@@ -222,7 +205,7 @@ object Dedup {
     val candidates = x.join(y, Seq("band", "bh"))
       .filter(col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id")).distinct()
-    verifiedJaccardGated(candidates, g, threshold) // r14: early-exit merge, see its doc
+    verifiedJaccard(candidates, g, threshold) // early-exit merge, see its doc
       .filter(col("jacc") >= threshold)
   }
 
@@ -311,7 +294,7 @@ object Dedup {
     // the 15.7M sf1 candidates — at t=0.5 the prefix ranks are small enough that the
     // bound always clears — so the groupBy-with-mins just re-spelled the distinct()
     // at equal cost. Kept as the simpler any-row form; the verification COST is
-    // attacked in the kernel instead (sortedIntersectSizeGated below).
+    // attacked in the kernel instead (see [[verifiedJaccard]]).
     a.join(b, Seq("h"))
       .filter(col("a_id") < col("b_id"))
       .filter(least(col("sza"), col("szb")) >= lit(threshold) * greatest(col("sza"), col("szb")))
@@ -328,7 +311,7 @@ object Dedup {
    * inverted index, as round 2 did, re-shuffles every index row per DAG branch instead.)
    */
   def ngramJaccardPairs(g: DataFrame, threshold: Double): DataFrame =
-    verifiedJaccardGated(ngramCandidates(g, threshold), g, threshold) // r14 early-exit merge
+    verifiedJaccard(ngramCandidates(g, threshold), g, threshold) // early-exit merge
       .filter(col("jacc") >= threshold)
 
   /** N-gram Jaccard near-dup over the documents table (see [[ngramJaccardPairs]]) —

@@ -20,7 +20,7 @@ import graft.sources.TableIO
  * localCheckpoint'd because it feeds four consumers whose per-consumer pruning
  * defeats ReuseExchange, and marginals broadcast-join back. Everything after the one
  * scan is arithmetic over that tiny frame. (The r12 form ran one scan per feature
- * per consumer — 12 scans for q_feature_mi's 3 features; see qFeatureMiImpl.)
+ * per consumer — 12 scans for q_feature_mi's 3 features; see qFeatureMi.)
  *
  * MI  = Σ_xy (n_xy/N) · ln(N·n_xy / (n_x·n_y))       (natural log, > 0 terms only by
  *                                                     construction since n_xy >= 1)
@@ -85,22 +85,7 @@ object FeatureStats {
    * oracle hash-matches. [[dependence]] keeps the single-feature contract for its
    * API/tests.
    */
-  def qFeatureMi(spark: SparkSession, dir: String): DataFrame =
-    qFeatureMiImpl(spark, dir, fused = true)
-
-  private[graft] def qFeatureMiImpl(spark: SparkSession, dir: String,
-      fused: Boolean): DataFrame = {
-    if (!fused) {
-      val l = TableIO.lineitem(spark, dir)
-      val feats: Seq[(String, DataFrame => Column)] = Seq(
-        "qty_bin" -> (d => floor((col("l_quantity") - 1) / 10).cast("int")),
-        "disc_bin" -> (d => floor(col("l_discount") * 20).cast("int")),
-        "linestatus" -> (d => col("l_linestatus")))
-      return feats.map { case (name, f) =>
-        dependence(l, f(l).cast("string"), col("l_returnflag"))
-          .select(lit(name).as("feature"), col("mi6"), col("chi2r"))
-      }.reduce(_ unionByName _).orderBy(col("feature"))
-    }
+  def qFeatureMi(spark: SparkSession, dir: String): DataFrame = {
     val l = TableIO.lineitem(spark, dir)
     val pairs = array(
       struct(lit("qty_bin").as("feature"),

@@ -147,14 +147,16 @@ case class L2Distance(left: Expression, right: Expression)
  * interpreted per (vector, centroid) pair — n·k·dim interpreted steps per Lloyd round.
  * This is the same long arithmetic ((x-y)² summed in a long accumulator, exact and
  * order-independent — what makes the fixed-point k-means oracle-able) as one codegen'd
- * loop. Null parity with the HOF form: a length mismatch (zip_with pads with null) or
- * a null element yields a null distance.
+ * loop. A length mismatch (zip_with pads with null) or a null element yields a null
+ * distance, as the HOF form did — so the result is nullable even when both inputs are
+ * not.
  */
 case class SqDistLong(left: Expression, right: Expression)
     extends BinaryExpression with ExpectsInputTypes {
 
   override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType), ArrayType(LongType))
   override def dataType: DataType = LongType
+  override def nullable: Boolean = true
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "sq_dist_long"
 

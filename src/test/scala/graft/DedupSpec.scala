@@ -106,33 +106,38 @@ class DedupSpec extends AnyFunSuite {
     } finally g.unpersist()
   }
 
-  test("r14 gated verification equals the ungated kernel at every threshold") {
+  test("ngramJaccardPairs equals an all-pairs plain-Scala Jaccard at every threshold") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
-    // random doc corpus with planted near-dups at several similarity grades
-    val rnd = new scala.util.Random(73)
-    val vocab = Vector.tabulate(60)(i => s"w$i")
-    def doc(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
-    val base = Seq.tabulate(120)(i => (i.toLong, doc(12 + rnd.nextInt(30))))
-    val mutated = base.take(40).map { case (id, text) =>
-      val toks = text.split(" ")
-      val k = 1 + rnd.nextInt(4) // 1-4 token edits: a spread of jaccard grades
-      val out = toks.clone()
-      (0 until k).foreach(_ => out(rnd.nextInt(out.length)) = vocab(rnd.nextInt(vocab.size)))
-      (1000L + id, out.mkString(" "))
-    }
-    val docs = (base ++ mutated).toDF("doc_id", "text")
-    val g = Dedup.gramHashSets(docs).cache()
-    for (t <- Seq(0.3, 0.5, 0.8)) {
-      val gated = Dedup.ngramJaccardPairs(g, t)
-        .select($"a_id", $"b_id", round($"jacc", 9).as("j"))
-        .collect().map(_.toSeq).toSet
-      val ungated = Dedup.verifiedJaccardForProbe(Dedup.ngramCandidates(g, t), g)
-        .filter($"jacc" >= t)
-        .select($"a_id", $"b_id", round($"jacc", 9).as("j"))
-        .collect().map(_.toSeq).toSet
-      assert(gated == ungated, s"t=$t: gated verification diverged")
-      assert(gated.nonEmpty, s"t=$t: degenerate test corpus (no pairs)")
+    for (seed <- Seq(73L, 173L, 273L)) {
+      // random doc corpus with planted near-dups at several similarity grades
+      val rnd = new scala.util.Random(seed)
+      val vocab = Vector.tabulate(60)(i => s"w$i")
+      def doc(n: Int) = Seq.fill(n)(vocab(rnd.nextInt(vocab.size))).mkString(" ")
+      val base = Seq.tabulate(120)(i => (i.toLong, doc(12 + rnd.nextInt(30))))
+      val mutated = base.take(40).map { case (id, text) =>
+        val out = text.split(" ")
+        val k = 1 + rnd.nextInt(4) // 1-4 token edits: a spread of jaccard grades
+        (0 until k).foreach(_ => out(rnd.nextInt(out.length)) = vocab(rnd.nextInt(vocab.size)))
+        (1000L + id, out.mkString(" "))
+      }
+      val g = Dedup.gramHashSets((base ++ mutated).toDF("doc_id", "text")).cache()
+      try {
+        // reference: exact jaccard over every pair of the collected gram sets, the same
+        // double arithmetic as the kernel's (inter * 1.0 / union)
+        val sets = g.collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSet).toMap
+        val ids = sets.keys.toSeq.sorted
+        val all = for {
+          i <- ids.indices; j <- (i + 1) until ids.size
+          a = sets(ids(i)); b = sets(ids(j)); inter = (a & b).size
+        } yield (ids(i), ids(j)) -> inter * 1.0 / (a.size + b.size - inter)
+        for (t <- Seq(0.3, 0.5, 0.8)) {
+          val got = Dedup.ngramJaccardPairs(g, t)
+            .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+          val want = all.filter(_._2 >= t).toMap
+          assert(got == want, s"seed $seed t=$t: ${got.size} vs ${want.size} pairs")
+          assert(got.nonEmpty, s"seed $seed t=$t: degenerate test corpus (no pairs)")
+        }
+      } finally g.unpersist()
     }
   }
 

@@ -8,18 +8,97 @@ class GraphOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val sf = SparkTestBase.sf
 
+  // ---- plain-Scala references: independent of the adjacency build, run on small
+  // seeded random graphs (fixed seeds, several trials — the PropertySpec idiom)
+
+  /** `m` random pairs over `n` vertices, self-loops dropped (multi-edges kept). */
+  private def randomPairs(seed: Long, n: Int, m: Int): Seq[(Long, Long)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.fill(m)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong)).filter { case (a, b) => a != b }
+  }
+
+  private def symmetric(pairs: Seq[(Long, Long)]): Seq[(Long, Long)] = pairs ++ pairs.map(_.swap)
+
+  /** Deduplicated out-neighbor sets. */
+  private def adjacency(edges: Seq[(Long, Long)]): Map[Long, Set[Long]] =
+    edges.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
+
   /** In-memory power-iteration reference: same fixed-iteration, symmetric-graph rule. */
   private def referencePr(edges: Seq[(Long, Long)], iters: Int): Map[Long, Double] = {
-    val out = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val out = adjacency(edges)
     val n = out.size.toDouble
     var pr = out.keys.map(_ -> 1.0 / n).toMap
     (1 to iters).foreach { _ =>
-      val contribs = edges.groupBy(_._2).view.mapValues { in =>
-        in.map { case (s, _) => pr(s) / out(s).size }.sum
-      }.toMap
+      val contribs = out.toSeq.flatMap { case (s, ds) => ds.map(_ -> pr(s) / ds.size) }
+        .groupBy(_._1).view.mapValues(_.map(_._2).sum).toMap
       pr = out.keys.map(id => id -> (0.15 / n + 0.85 * contribs.getOrElse(id, 0.0))).toMap
     }
     pr
+  }
+
+  /** Synchronous label propagation: most frequent neighbor label, smallest on ties. */
+  private def referenceLpa(edges: Seq[(Long, Long)], rounds: Int): Map[Long, Long] = {
+    val nbrs = adjacency(edges)
+    var labels = nbrs.keys.map(v => v -> v).toMap
+    (1 to rounds).foreach { _ =>
+      labels = nbrs.map { case (v, ns) =>
+        val (_, negLabel) = ns.toSeq.map(labels).groupBy(identity).toSeq
+          .map { case (l, ls) => (ls.size, -l) }.max
+        v -> -negLabel
+      }
+    }
+    labels
+  }
+
+  /** Hop-bounded multi-source BFS over directed edges. */
+  private def referenceBfs(edges: Seq[(Long, Long)], seeds: Seq[Long], maxHops: Int): Map[Long, Int] = {
+    val out = adjacency(edges)
+    var hops = seeds.distinct.map(_ -> 0).toMap
+    var frontier = hops.keySet
+    var h = 1
+    while (h <= maxHops && frontier.nonEmpty) {
+      frontier = frontier.flatMap(v => out.getOrElse(v, Set.empty)) -- hops.keySet
+      hops ++= frontier.map(_ -> h)
+      h += 1
+    }
+    hops
+  }
+
+  /** Bounded Bellman-Ford: shortest distance over paths of at most `rounds` edges. */
+  private def referenceSssp(edges: Seq[(Long, Long, Long)], seeds: Seq[Long],
+      rounds: Int): Map[Long, Long] = {
+    var dist = seeds.distinct.map(_ -> 0L).toMap
+    (1 to rounds).foreach { _ =>
+      val relaxed = edges.collect { case (u, v, w) if dist.contains(u) => v -> (dist(u) + w) }
+      dist = (dist.toSeq ++ relaxed).groupBy(_._1).view.mapValues(_.map(_._2).min).toMap
+    }
+    dist
+  }
+
+  /** Edge-rewrite k-core peel: drop vertices of degree < k, `rounds` times, then degrees. */
+  private def referenceKcore(edges: Seq[(Long, Long)], k: Int, rounds: Int): Map[Long, Long] = {
+    var e = edges.toSet
+    (1 to rounds).foreach { _ =>
+      val keep = e.groupBy(_._1).collect { case (v, es) if es.size >= k => v }.toSet
+      e = e.filter { case (a, b) => keep(a) && keep(b) }
+    }
+    e.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+  }
+
+  private def prMap(df: org.apache.spark.sql.DataFrame): Map[Long, Double] =
+    df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+
+  private def longMap(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  private def hopMap(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
+    df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+
+  private def assertPrClose(got: Map[Long, Double], want: Map[Long, Double], ctx: String): Unit = {
+    assert(got.keySet == want.keySet, ctx)
+    got.foreach { case (id, pr) =>
+      assert(math.abs(pr - want(id)) < 1e-12, s"$ctx node $id: $pr vs ${want(id)}")
+    }
   }
 
   test("pageRank matches the in-memory power iteration on a hand graph") {
@@ -38,151 +117,142 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(math.abs(got.values.sum - 1.0) < 1e-9, "rank mass is conserved on a symmetric graph")
   }
 
-  test("packed-adjacency pageRank equals the row-per-edge twin bit-for-bit") {
+  test("pageRank equals a plain-Scala power iteration on seeded random graphs") {
     import spark.implicits._
-    val rnd = new scala.util.Random(41)
-    val raw = Seq.fill(500)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-      .filter { case (a, b) => a != b }
-    val sym = raw ++ raw.map(_.swap)
-    val packed = GraphOps.pageRank(sym.toDF("src", "dst"), iterations = 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val array = GraphOps.pageRankArray(sym.toDF("src", "dst"), iterations = 3)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(packed.keySet == array.keySet)
-    // same per-node additions in a different grouping order can differ by float
-    // summation order; on these magnitudes the twins must still agree to 1e-12
-    packed.foreach { case (id, pr) =>
-      assert(math.abs(pr - array(id)) < 1e-12, s"node $id: packed $pr vs array ${array(id)}")
+    for (seed <- Seq(41L, 141L, 241L)) {
+      val sym = symmetric(randomPairs(seed, n = 60, m = 500))
+      assertPrClose(prMap(GraphOps.pageRank(sym.toDF("src", "dst"), iterations = 3)),
+        referencePr(sym, 3), s"seed $seed")
     }
   }
 
-  test("packed-adjacency bfs and labelPropagation equal their row-per-edge twins exactly") {
+  test("bfs and labelPropagation equal plain-Scala references on seeded random graphs") {
     import spark.implicits._
-    val rnd = new scala.util.Random(43)
-    val raw = Seq.fill(600)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
-      .filter { case (a, b) => a != b }
-    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
-    // integer outputs: the twins must agree bit-for-bit, no tolerance
-    val lpP = GraphOps.labelPropagation(sym, rounds = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lpA = GraphOps.labelPropagationArray(sym, rounds = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lpP == lpA)
-    val seeds = Seq(0L, 7L).toDF("id")
-    val bfP = GraphOps.bfs(sym, seeds, maxHops = 3)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bfA = GraphOps.bfsArray(sym, seeds, maxHops = 3)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(bfP == bfA)
-  }
-
-  test("frontier-broadcast gate on/off produce identical bfs and sssp results") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(53)
-    val raw = Seq.fill(500)((rnd.nextInt(60).toLong, rnd.nextInt(60).toLong))
-      .filter { case (a, b) => a != b }
-    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
-    val seeds = Seq(0L, 5L).toDF("id")
-    val bfGated = GraphOps.bfsImpl(sym, seeds, maxHops = 3, gateFrontier = true)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bfPlain = GraphOps.bfsImpl(sym, seeds, maxHops = 3, gateFrontier = false)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(bfGated == bfPlain)
-    val wedges = raw.map { case (a, b) => (a, b, (1 + (a + b) % 7)) }.toDF("src", "dst", "w")
-    val ssGated = GraphOps.ssspImpl(wedges, seeds, rounds = 3, gateFrontier = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val ssPlain = GraphOps.ssspImpl(wedges, seeds, rounds = 3, gateFrontier = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ssGated == ssPlain)
-  }
-
-  test("fused qSssp/qBfs prologues produce identical results to the unfused twins") {
-    // r13 prologue fusion: single checkpointed lineage (+ repartition(src) for sssp)
-    // must be a pure plan change — same rows, same values, both queries.
-    val ssOld = GraphOps.qSsspImpl(spark, sf, fusedPrologue = false)
-      .collect().map(_.toString).toSeq
-    val ssNew = GraphOps.qSsspImpl(spark, sf, fusedPrologue = true)
-      .collect().map(_.toString).toSeq
-    assert(ssOld == ssNew)
-    val bfOld = GraphOps.qBfsImpl(spark, sf, fusedPrologue = false)
-      .collect().map(_.toString).toSeq
-    val bfNew = GraphOps.qBfsImpl(spark, sf, fusedPrologue = true)
-      .collect().map(_.toString).toSeq
-    assert(bfOld == bfNew)
-  }
-
-  test("vertex-carry k-core equals the edge-rewrite peel bit-for-bit") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(59)
-    val raw = Seq.fill(900)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
-      .filter { case (a, b) => a != b }
-    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
-    for (k <- Seq(2, 8, 15); rounds <- Seq(1, 3)) {
-      val edge = GraphOps.kcorePeel(sym, k, rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val vertex = GraphOps.kcorePeelVertex(sym, k, rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(edge == vertex, s"k=$k rounds=$rounds diverged")
+    for (seed <- Seq(43L, 143L, 243L)) {
+      val sym = symmetric(randomPairs(seed, n = 80, m = 600))
+      val df = sym.toDF("src", "dst")
+      // integer outputs: exact
+      assert(longMap(GraphOps.labelPropagation(df, rounds = 3)) == referenceLpa(sym, 3),
+        s"seed $seed: labelPropagation")
+      val seeds = Seq(0L, 7L)
+      assert(hopMap(GraphOps.bfs(df, seeds.toDF("id"), maxHops = 3)) ==
+        referenceBfs(sym, seeds, 3), s"seed $seed: bfs")
     }
-    // all-peels case: both empty
-    assert(GraphOps.kcorePeelVertex(sym, k = 500, rounds = 2).isEmpty)
   }
 
-  test("r14 packed decrement peel equals edge-rewrite and vertex-carry bit-for-bit") {
+  test("bfs and sssp (frontier gate on/off) equal plain-Scala references on digraphs") {
     import spark.implicits._
-    val rnd = new scala.util.Random(61)
-    val raw = Seq.fill(900)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
-      .filter { case (a, b) => a != b }
-    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
-    for (k <- Seq(2, 8, 15); rounds <- Seq(1, 2, 4)) {
-      val packed = GraphOps.kcorePeelPacked(sym, k, rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val edge = GraphOps.kcorePeelEdgeRewrite(sym, k, rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      val vertex = GraphOps.kcorePeelVertex(sym, k, rounds)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(packed == edge, s"k=$k rounds=$rounds packed vs edge-rewrite diverged")
-      assert(packed == vertex, s"k=$k rounds=$rounds packed vs vertex-carry diverged")
+    for (seed <- Seq(53L, 153L, 253L)) {
+      // directed input: bfs's contract is directed, and sssp's gate seam (`false` is
+      // the unbroadcast path past the 2M gate) must not change a distance
+      val raw = randomPairs(seed, n = 60, m = 500)
+      val seeds = Seq(0L, 5L)
+      assert(hopMap(GraphOps.bfs(raw.toDF("src", "dst"), seeds.toDF("id"), maxHops = 3)) ==
+        referenceBfs(raw, seeds, 3), s"seed $seed: bfs")
+      val weighted = raw.map { case (a, b) => (a, b, 1 + (a + b) % 7) }
+      val want = referenceSssp(weighted, seeds, 3)
+      for (gate <- Seq(true, false)) {
+        val got = longMap(GraphOps.ssspImpl(weighted.toDF("src", "dst", "w"),
+          seeds.toDF("id"), rounds = 3, gateFrontier = gate))
+        assert(got == want, s"seed $seed gateFrontier=$gate: sssp")
+      }
     }
-    // all-peels case: empty through the packed path too
-    assert(GraphOps.kcorePeelPacked(sym, k = 500, rounds = 2).isEmpty)
   }
 
-  test("r14 pull iterations equal push bit-for-bit: pagerank, labelProp, bfs, ssspCache") {
+  test("q_sssp and q_bfs equal plain-Scala references over the co-purchase graph") {
+    // the co-purchase graph from the collected (order, part) rows: every ordered pair
+    // of distinct parts sharing an order, weighted by max(1, 6 - shared-order count)
+    val li = graft.sources.TableIO.lineitem(spark, sf)
+      .select("l_orderkey", "l_partkey").collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pairCounts = li.groupBy(_._1).values.toSeq
+      .flatMap { rows =>
+        val ps = rows.map(_._2).distinct.toSeq
+        for (a <- ps; b <- ps if a != b) yield (a, b)
+      }
+      .groupBy(identity).view.mapValues(_.size.toLong).toMap
+    val edges = pairCounts.keys.toSeq
+    val srcs = edges.map(_._1).distinct
+    val bfsWant = referenceBfs(edges, srcs.filter(_ % 97 == 0), 2).toSeq.sorted
+    val bfsGot = GraphOps.qBfs(spark, sf).collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(bfsGot.size > srcs.count(_ % 97 == 0), "degenerate bfs: nothing reached")
+    assert(bfsGot == bfsWant)
+    val weighted = pairCounts.toSeq.map { case ((a, b), c) => (a, b, math.max(1L, 6L - c)) }
+    val ssspWant = referenceSssp(weighted, srcs.filter(_ % 101 == 0), 3).toSeq.sorted
+    val ssspGot = GraphOps.qSssp(spark, sf).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(ssspGot.size > 1, "degenerate sssp: nothing reached")
+    assert(ssspGot == ssspWant)
+  }
+
+  test("kcorePeel equals a plain-Scala edge-rewrite peel on seeded random graphs") {
     import spark.implicits._
-    val rnd = new scala.util.Random(67)
-    val raw = Seq.fill(700)((rnd.nextInt(80).toLong, rnd.nextInt(80).toLong))
-      .filter { case (a, b) => a != b }
-    val sym = (raw ++ raw.map(_.swap)).toDF("src", "dst")
-    // pagerank: double sums regroup, so compare at the query's own 6-decimal grain
-    // and to 1e-12 absolute (the twin-pin tolerance)
-    val prPull = GraphOps.pageRankImpl(sym, 3, 0.85, pull = true)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val prPush = GraphOps.pageRankImpl(sym, 3, 0.85, pull = false)
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(prPull.keySet == prPush.keySet)
-    prPull.foreach { case (id, pr) =>
-      assert(math.abs(pr - prPush(id)) < 1e-12, s"node $id: pull $pr vs push ${prPush(id)}")
+    for (seed <- Seq(59L, 159L, 259L)) {
+      val sym = symmetric(randomPairs(seed, n = 90, m = 900))
+      val df = sym.toDF("src", "dst")
+      for (k <- Seq(2, 8, 15); rounds <- Seq(1, 3)) {
+        assert(longMap(GraphOps.kcorePeel(df, k, rounds)) == referenceKcore(sym, k, rounds),
+          s"seed $seed k=$k rounds=$rounds diverged")
+      }
+      // all-peels case: empty
+      assert(GraphOps.kcorePeel(df, k = 500, rounds = 2).isEmpty)
     }
-    // labelProp: integer labels, exact
-    val lpPull = GraphOps.labelPropagationImpl(sym, 3, pull = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val lpPush = GraphOps.labelPropagationImpl(sym, 3, pull = false)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(lpPull == lpPush)
-    // bfs pull (symmetric-only opt-in): integer hops, exact
-    val seeds = Seq(0L, 7L).toDF("id")
-    val bfPull = GraphOps.bfsImpl(sym, seeds, 3, gateFrontier = false, pullSymmetric = true)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    val bfPush = GraphOps.bfsImpl(sym, seeds, 3, gateFrontier = false, pullSymmetric = false)
-      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(bfPull == bfPush)
-    // qSssp prologue cache-vs-checkpoint is a pure plan change: same rows
-    val ssCache = GraphOps.qSsspImpl(spark, sf, fusedPrologue = true, prologueCache = true)
-      .collect().map(_.toString).toSeq
-    val ssCkpt = GraphOps.qSsspImpl(spark, sf, fusedPrologue = true, prologueCache = false)
-      .collect().map(_.toString).toSeq
-    assert(ssCache == ssCkpt)
+  }
+
+  test("kcorePeel matches the plain-Scala peel round-for-round and only shrinks") {
+    import spark.implicits._
+    for (seed <- Seq(61L, 161L)) {
+      val sym = symmetric(randomPairs(seed, n = 90, m = 900))
+      val df = sym.toDF("src", "dst")
+      for (k <- Seq(2, 8, 15)) {
+        val perRound = (1 to 4).map { rounds =>
+          val got = longMap(GraphOps.kcorePeel(df, k, rounds))
+          assert(got == referenceKcore(sym, k, rounds), s"seed $seed k=$k rounds=$rounds diverged")
+          got
+        }
+        // one more round never revives a vertex nor raises a surviving degree
+        perRound.sliding(2).foreach { case Seq(a, b) =>
+          assert(b.keySet.subsetOf(a.keySet), s"seed $seed k=$k: a peeled vertex came back")
+          b.foreach { case (v, d) => assert(d <= a(v), s"seed $seed k=$k node $v: degree rose") }
+        }
+      }
+      assert(GraphOps.kcorePeel(df, k = 500, rounds = 4).isEmpty)
+    }
+  }
+
+  test("kcorePeel leaves only its result persisted: superseded checkpoints released") {
+    import spark.implicits._
+    import org.apache.spark.storage.StorageLevel
+    val sym = symmetric(randomPairs(61L, n = 90, m = 900)).toDF("src", "dst")
+    val sc = spark.sparkContext
+    // getPersistentRDDs holds its RDDs weakly, so a GC can hide a leaked checkpoint;
+    // pin every persisted RDD seen during the call and check which stay persisted
+    val before = sc.getPersistentRDDs.keySet
+    val seen = scala.collection.concurrent.TrieMap.empty[Int, org.apache.spark.rdd.RDD[_]]
+    @volatile var polling = true
+    val poller = new Thread(() => while (polling) {
+      sc.getPersistentRDDs.foreach { case (id, rdd) => seen.putIfAbsent(id, rdd) }
+      Thread.sleep(1)
+    })
+    poller.start()
+    try GraphOps.kcorePeel(sym, k = 8, rounds = 4).collect()
+    finally { polling = false; poller.join() }
+    sc.getPersistentRDDs.foreach { case (id, rdd) => seen.putIfAbsent(id, rdd) }
+    val left = seen.collect {
+      case (id, rdd) if !before(id) && rdd.getStorageLevel != StorageLevel.NONE => id
+    }
+    assert(left.size <= 1, s"kcorePeel left ${left.size} persisted RDDs: $left")
+  }
+
+  test("push forms of pageRank and labelPropagation equal plain-Scala references") {
+    import spark.implicits._
+    // pull = false is the path past the 2M-vertex gate; the defaults above run pull
+    for (seed <- Seq(67L, 167L, 267L)) {
+      val sym = symmetric(randomPairs(seed, n = 80, m = 700))
+      val df = sym.toDF("src", "dst")
+      assertPrClose(prMap(GraphOps.pageRankImpl(df, 3, 0.85, pull = false)),
+        referencePr(sym, 3), s"seed $seed: pageRank push")
+      assert(longMap(GraphOps.labelPropagationImpl(df, 3, pull = false)) ==
+        referenceLpa(sym, 3), s"seed $seed: labelPropagation push")
+    }
   }
 
   test("kcorePeel strips the pendant tail and keeps the clique; multi-edges count once") {
@@ -199,21 +269,19 @@ class GraphOpsSpec extends AnyFunSuite {
     assert(GraphOps.kcorePeel(sym, k = 10, rounds = 1).isEmpty)
   }
 
-  test("row-per-vertex sssp equals the row-per-edge twin exactly") {
+  test("sssp equals a plain-Scala Bellman-Ford on weighted multi-edge digraphs") {
     import spark.implicits._
-    val rnd = new scala.util.Random(47)
-    // weighted digraph with deliberate multi-edges (min-plus must keep the cheapest)
-    val edges = Seq.fill(700)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong,
-        (1 + rnd.nextInt(9)).toLong))
-      .filter { case (a, b, _) => a != b }
-      .toDF("src", "dst", "w")
-    val seeds = Seq(0L, 13L, 42L).toDF("id")
-    // integer min-plus: the twins must agree bit-for-bit, no tolerance
-    val packed = GraphOps.sssp(edges, seeds, rounds = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val array = GraphOps.ssspArray(edges, seeds, rounds = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(packed == array)
+    for (seed <- Seq(47L, 147L, 247L)) {
+      val rnd = new scala.util.Random(seed)
+      // deliberate multi-edges: min-plus must keep the cheapest
+      val edges = Seq.fill(700)((rnd.nextInt(70).toLong, rnd.nextInt(70).toLong,
+          (1 + rnd.nextInt(9)).toLong))
+        .filter { case (a, b, _) => a != b }
+      val seeds = Seq(0L, 13L, 42L)
+      // integer min-plus: exact
+      assert(longMap(GraphOps.sssp(edges.toDF("src", "dst", "w"), seeds.toDF("id"), rounds = 4))
+        == referenceSssp(edges, seeds, 4), s"seed $seed")
+    }
   }
 
   test("q_pagerank returns a full top-50 with a total deterministic order") {

@@ -59,26 +59,60 @@ class SpatialMlSpec extends AnyFunSuite {
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq) // bit-stable rerun
   }
 
-  test("r14 native sq_dist_long equals the interpreted HOF form, incl. null/length parity") {
+  test("sq_dist_long equals a plain-Scala squared distance, null on length mismatch") {
     import spark.implicits._
     import org.apache.spark.sql.graft.VectorExpressions.sqDistLong
-    val rnd = new scala.util.Random(71)
-    val rows = Seq.tabulate(500) { i =>
-      (i.toLong, Array.fill(16)(rnd.nextInt(4001).toLong - 2000),
-        Array.fill(16)(rnd.nextInt(4001).toLong - 2000))
+    // reference: sum of (x - y)^2 in a long accumulator; null when the lengths differ
+    // or either side holds a null element
+    def reference(a: Seq[Option[Long]], b: Seq[Option[Long]]): Option[Long] =
+      if (a.length != b.length || a.exists(_.isEmpty) || b.exists(_.isEmpty)) None
+      else Some(a.flatten.zip(b.flatten).map { case (x, y) => (x - y) * (x - y) }.sum)
+    for (seed <- Seq(71L, 171L, 271L)) {
+      val rnd = new scala.util.Random(seed)
+      def vec(n: Int) = Seq.fill(n) {
+        if (rnd.nextInt(50) == 0) None else Some(rnd.nextInt(4001).toLong - 2000)
+      }
+      val rows = Seq.tabulate(500) { i =>
+        val n = 16
+        // ~1 row in 10 gets a length mismatch
+        (i.toLong, vec(n), vec(if (rnd.nextInt(10) == 0) n + 1 - 2 * rnd.nextInt(2) else n))
+      }
+      val got = rows.toDF("id", "a", "b")
+        .select(col("id"), sqDistLong(col("a"), col("b")))
+        .collect().map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
+        .toMap
+      rows.foreach { case (id, a, b) =>
+        assert(got(id) == reference(a, b), s"seed $seed row $id")
+      }
+      assert(got.values.exists(_.isEmpty) && got.values.exists(_.nonEmpty), s"seed $seed")
     }
-    val df = rows.toDF("id", "a", "b")
-    val both = df.select(col("id"),
-        sqDistLong(col("a"), col("b")).as("native"),
-        Clustering.sqDistHof(col("a"), col("b")).as("hof"))
-      .collect()
-    both.foreach(r => assert(r.getLong(1) == r.getLong(2), s"row ${r.getLong(0)} diverged"))
-    // length mismatch: zip_with pads with null -> HOF null; native must be null too
-    val mism = Seq((1L, Array(1L, 2L), Array(1L, 2L, 3L))).toDF("id", "a", "b")
-      .select(sqDistLong(col("a"), col("b")).as("native"),
-        Clustering.sqDistHof(col("a"), col("b")).as("hof"))
-      .collect()(0)
-    assert(mism.isNullAt(0) && mism.isNullAt(1))
+  }
+
+  test("sq_dist_long is null on mismatched non-nullable arrays, codegen and interpreted") {
+    import org.apache.spark.sql.graft.VectorExpressions.sqDistLong
+    // array(...) over the non-nullable range id: neither input is nullable and nothing
+    // folds at plan time, so the expression's own nullability decides the output
+    val modes = Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
+    for ((mode, wholeStage) <- modes) {
+      val prev = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
+        .map(k => k -> spark.conf.getOption(k))
+      try {
+        spark.conf.set("spark.sql.codegen.factoryMode", mode)
+        spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+        val rows = spark.range(4).select(col("id"),
+            sqDistLong(array(col("id"), lit(2L)), array(lit(1L))).as("mism"),
+            sqDistLong(array(col("id")), array(lit(1L))).as("same"))
+          .collect()
+        rows.foreach { r =>
+          val id = r.getLong(0)
+          assert(r.isNullAt(1), s"$mode id $id: length mismatch must be null")
+          assert(r.getLong(2) == (id - 1) * (id - 1), s"$mode id $id")
+        }
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
   }
 
   // ----------------------------------------------------------------------- OLS

@@ -176,13 +176,37 @@ class TemporalFeatureSpec extends AnyFunSuite {
     assert(math.abs(mi - math.log(4)) < 1e-6, s"mi=$mi expected ln4=${math.log(4)}")
   }
 
-  test("fused q_feature_mi equals the per-feature-scan twin") {
-    // r13 one-pass fusion: same contingency cells, same statistics, same rounding.
-    val old = FeatureStats.qFeatureMiImpl(spark, sf, fused = false)
-      .collect().map(_.toString).toSeq
-    val fused = FeatureStats.qFeatureMiImpl(spark, sf, fused = true)
-      .collect().map(_.toString).toSeq
-    assert(old == fused)
+  test("q_feature_mi equals a plain-Scala MI and chi-squared per feature") {
+    // reference: one contingency table per feature from the collected rows, the same
+    // binning and double arithmetic; the engine rounds (mi to 6, chi² to 4 decimals)
+    // and may sum in another order, so each must sit within half its grain
+    val rows = graft.sources.TableIO.lineitem(spark, sf)
+      .select("l_quantity", "l_discount", "l_linestatus", "l_returnflag").collect()
+      .map(r => (r.getDouble(0), r.getDouble(1), r.getString(2), r.getString(3)))
+    val features: Seq[(String, ((Double, Double, String, String)) => String)] = Seq(
+      "disc_bin" -> (r => math.floor(r._2 * 20).toLong.toInt.toString),
+      "linestatus" -> (r => r._3),
+      "qty_bin" -> (r => math.floor((r._1 - 1) / 10).toLong.toInt.toString))
+    val want = features.map { case (name, f) =>
+      val cont = rows.groupBy(r => (f(r), r._4)).view.mapValues(_.length.toLong).toMap
+      val nx = cont.groupBy(_._1._1).view.mapValues(_.values.sum).toMap
+      val ny = cont.groupBy(_._1._2).view.mapValues(_.values.sum).toMap
+      val n = cont.values.sum
+      val mi = cont.map { case ((x, y), nxy) =>
+        nxy.toDouble / n * math.log(n.toDouble * nxy / (nx(x).toDouble * ny(y)))
+      }.sum
+      val chi2 = cont.map { case ((x, y), nxy) =>
+        nxy.toDouble * nxy / (nx(x).toDouble * ny(y) / n)
+      }.sum - n.toDouble
+      (name, mi, chi2)
+    }
+    val got = FeatureStats.qFeatureMi(spark, sf).collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2))).toSeq
+    assert(got.map(_._1) == want.map(_._1))
+    got.zip(want).foreach { case ((f, mi6, chi2r), (_, mi, chi2)) =>
+      assert(math.abs(mi6 - mi) <= 0.5e-6 + 1e-9, s"$f: mi $mi6 vs $mi")
+      assert(math.abs(chi2r - chi2) <= 0.5e-4 + 1e-6, s"$f: chi2 $chi2r vs $chi2")
+    }
   }
 
   // --- bloom semi-join reduction ----------------------------------------------------
