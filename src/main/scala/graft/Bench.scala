@@ -110,6 +110,7 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
     // Warm the JVM itself (parquet reader, shuffle, codegen infrastructure).
     try {
+      // direct read, not TableIO.parquet, on purpose: the warm-up costs the same on every commit
       exec(spark.read.parquet(s"$sfDir/lineitem.parquet").groupBy("l_returnflag").count())
       exec(spark.range(1000).selectExpr("sum(id)"))
     } catch { case _: Throwable => () }

@@ -86,7 +86,7 @@ object GraphOps {
           .agg((lit((1.0 - damping) / n) + lit(damping) * sum(col("c"))).as("pr"))
           .select(col("src").as("id"), col("pr"), (col("pr") / col("deg")).as("c"))
           .localCheckpoint()
-        ranks.unpersist()
+        releaseCheckpoint(ranks)
         ranks = next
         it += 1
       }
@@ -104,7 +104,7 @@ object GraphOps {
         val next = contribs.groupBy(col("id"))
           .agg((lit((1.0 - damping) / n) + lit(damping) * sum(col("c"))).as("pr"))
           .localCheckpoint()
-        ranks.unpersist()
+        releaseCheckpoint(ranks)
         ranks = next
         it += 1
       }
@@ -206,6 +206,9 @@ object GraphOps {
     var visited = seeds.select(col("id")).distinct()
       .select(col("id"), lit(0).as("hop")).localCheckpoint()
     var frontier = visited.select(col("id"))
+    // the checkpoint `frontier` reads after round 1, released once the round that
+    // reads it has materialized its successor
+    var held: Option[DataFrame] = None
     var h = 1
     var drained = false
     while (h <= maxHops && !drained) {
@@ -214,13 +217,18 @@ object GraphOps {
         .select(explode(unpackSortedVarint(col("nbrs"))).as("id")).distinct()
         .join(visited, Seq("id"), "left_anti")
         .select(col("id"), lit(h).as("hop")).localCheckpoint()
+      held.foreach(releaseCheckpoint)
+      held = Some(next)
       drained = next.isEmpty
       if (!drained) {
-        visited = visited.unionByName(next).localCheckpoint()
+        val grown = visited.unionByName(next).localCheckpoint()
+        releaseCheckpoint(visited)
+        visited = grown
         frontier = next.select(col("id"))
       }
       h += 1
     }
+    held.foreach(releaseCheckpoint)
     adj.unpersist()
     visited
   }
@@ -473,7 +481,7 @@ object GraphOps {
           .select(col("dst").as("id"), (-col("m.nl")).as("label"))
           .localCheckpoint()
       }
-      labels.unpersist()
+      releaseCheckpoint(labels)
       labels = next
       r += 1
     }
@@ -575,14 +583,18 @@ object GraphOps {
         .localCheckpoint()
       // delta iteration: only nodes whose distance IMPROVED this round can improve a
       // neighbor next round
-      frontier = next.join(dist.withColumnRenamed("dist", "old"), Seq("id"), "left")
+      val improved = next.join(dist.withColumnRenamed("dist", "old"), Seq("id"), "left")
         .filter(col("old").isNull || col("dist") < col("old"))
         .select(col("id"), col("dist")).localCheckpoint()
-      drained = frontier.isEmpty
-      dist.unpersist()
+      drained = improved.isEmpty
+      // both superseded checkpoints (one frame in round 1) are read by nothing left
+      releaseCheckpoint(frontier)
+      releaseCheckpoint(dist)
       dist = next
+      frontier = improved
       r += 1
     }
+    if (frontier ne dist) releaseCheckpoint(frontier)
     adj.unpersist()
     dist
   }

@@ -238,7 +238,7 @@ object MaterializedViews {
       }
       if (!fresh(spark, basePath, d)) return None // stale view must never answer
 
-      val mvPlan = spark.read.parquet(d.mvPath).queryExecution.analyzed
+      val mvPlan = graft.sources.TableIO.parquet(spark, d.mvPath).queryExecution.analyzed
       val mvAttr: Map[String, Attribute] = mvPlan.output.map(a => a.name -> a).toMap
       // older views (pre cnt_<col>) lack the avg/count(col) divisor columns; the
       // attr lookup bails those rewrites rather than failing analysis

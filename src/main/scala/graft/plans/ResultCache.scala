@@ -88,6 +88,6 @@ object ResultCache {
       // overwrite: a previous partial write (no _SUCCESS) is debris, not an answer
       df.write.mode("overwrite").parquet(entry)
     }
-    spark.read.parquet(entry)
+    graft.sources.TableIO.parquet(spark, entry)
   }
 }

@@ -218,13 +218,12 @@ class GraphOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("kcorePeel leaves only its result persisted: superseded checkpoints released") {
-    import spark.implicits._
+  /** Ids of the RDDs `body` persisted and left persisted. getPersistentRDDs holds its
+    * RDDs weakly, so a GC can hide a leaked checkpoint; every persisted RDD seen during
+    * the call is pinned, then checked for whether it stayed persisted. */
+  private def persistedLeftBy(body: => Any): Iterable[Int] = {
     import org.apache.spark.storage.StorageLevel
-    val sym = symmetric(randomPairs(61L, n = 90, m = 900)).toDF("src", "dst")
     val sc = spark.sparkContext
-    // getPersistentRDDs holds its RDDs weakly, so a GC can hide a leaked checkpoint;
-    // pin every persisted RDD seen during the call and check which stay persisted
     val before = sc.getPersistentRDDs.keySet
     val seen = scala.collection.concurrent.TrieMap.empty[Int, org.apache.spark.rdd.RDD[_]]
     @volatile var polling = true
@@ -233,13 +232,51 @@ class GraphOpsSpec extends AnyFunSuite {
       Thread.sleep(1)
     })
     poller.start()
-    try GraphOps.kcorePeel(sym, k = 8, rounds = 4).collect()
+    try body
     finally { polling = false; poller.join() }
     sc.getPersistentRDDs.foreach { case (id, rdd) => seen.putIfAbsent(id, rdd) }
-    val left = seen.collect {
+    seen.collect {
       case (id, rdd) if !before(id) && rdd.getStorageLevel != StorageLevel.NONE => id
     }
+  }
+
+  test("kcorePeel leaves only its result persisted: superseded checkpoints released") {
+    import spark.implicits._
+    val sym = symmetric(randomPairs(61L, n = 90, m = 900)).toDF("src", "dst")
+    val left = persistedLeftBy(GraphOps.kcorePeel(sym, k = 8, rounds = 4).collect())
     assert(left.size <= 1, s"kcorePeel left ${left.size} persisted RDDs: $left")
+  }
+
+  test("pageRank, pull and push, leaves only its result persisted") {
+    import spark.implicits._
+    val sym = symmetric(randomPairs(71L, n = 90, m = 900)).toDF("src", "dst")
+    val left = Seq(true, false).map { pull =>
+      pull -> persistedLeftBy(GraphOps.pageRankImpl(sym, 3, 0.85, pull).collect()).size
+    }.toMap
+    assert(left.values.forall(_ <= 1), s"persisted RDDs left, by pull: $left")
+  }
+
+  test("labelPropagation leaves only its result persisted") {
+    import spark.implicits._
+    val sym = symmetric(randomPairs(73L, n = 90, m = 900)).toDF("src", "dst")
+    val left = persistedLeftBy(GraphOps.labelPropagation(sym, rounds = 3).collect())
+    assert(left.size <= 1, s"labelPropagation left ${left.size} persisted RDDs: $left")
+  }
+
+  test("sssp leaves only its result persisted: superseded distances and frontiers released") {
+    import spark.implicits._
+    val edges = randomPairs(79L, n = 90, m = 400).zipWithIndex
+      .map { case ((a, b), i) => (a, b, 1L + i % 5) }.toDF("src", "dst", "w")
+    val left = persistedLeftBy(
+      GraphOps.sssp(edges, Seq(0L, 1L).toDF("id"), rounds = 3).collect())
+    assert(left.size <= 1, s"sssp left ${left.size} persisted RDDs: $left")
+  }
+
+  test("bfs leaves only its result persisted: superseded visited sets and frontiers released") {
+    import spark.implicits._
+    val edges = randomPairs(83L, n = 90, m = 200).toDF("src", "dst")
+    val left = persistedLeftBy(GraphOps.bfs(edges, Seq(0L).toDF("id"), maxHops = 3).collect())
+    assert(left.size <= 1, s"bfs left ${left.size} persisted RDDs: $left")
   }
 
   test("push forms of pageRank and labelPropagation equal plain-Scala references") {

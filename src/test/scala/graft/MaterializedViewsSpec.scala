@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCounter
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -209,6 +210,20 @@ class MaterializedViewsSpec extends AnyFunSuite {
       MaterializedViews.refresh(spark, base)
       assert(q().inputFiles.forall(_.contains("/mv")), "refresh re-enables the rewrite")
       assert(q().collect().map(r => r.getString(0) -> r.getLong(1)).toMap == fromBase)
+    } finally MaterializedViews.deregister(base)
+  }
+
+  test("re-optimizing an MV-rewritten query starts no job") {
+    val root = tmp("mv-jobs"); val base = s"$root/base"; val mv = s"$root/mv"
+    mkBase(base, 1000)
+    MaterializedViews.create(spark, base, mv, Seq("g"), Seq("v_long"))
+    try {
+      val b = spark.read.parquet(base)
+      def q() = b.groupBy(col("g")).agg(sum(col("v_long")).as("s"))
+      assert(q().inputFiles.forall(_.contains("/mv")), "the query must rewrite")
+      // the rule reads the view on every query it matches; its schema is already known
+      val jobs = JobCounter.count(spark.sparkContext)(q().queryExecution.optimizedPlan)
+      assert(jobs == 0, s"re-optimizing started $jobs jobs")
     } finally MaterializedViews.deregister(base)
   }
 }
