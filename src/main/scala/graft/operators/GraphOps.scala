@@ -746,7 +746,7 @@ object GraphOps {
 
   /** Drop a localCheckpoint'd frame's blocks. `Dataset.unpersist` only reaches the
     * CacheManager, and a checkpointed frame is a LogicalRDD that never entered it. */
-  private def releaseCheckpoint(df: DataFrame): Unit =
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical.foreach {
       case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>

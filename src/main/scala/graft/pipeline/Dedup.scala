@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.FastHash
+import graft.operators.GraphOps
 import graft.sources.TableIO
 
 /**
@@ -530,7 +531,7 @@ object Dedup {
    * minimum label among itself and its neighbors; stop when no label changes. Rounds =
    * O(graph diameter) — near-dup clusters are shallow (dupes of dupes of one origin), so
    * this converges in a handful of rounds even at corpus scale. Each round is one shuffle
-   * on the edge key; labels are cached and the previous iteration unpersisted — the
+   * on the edge key; labels are checkpointed and the previous round released — the
    * standard large-scale CC shape (what GraphX/GraphFrames do internally).
    *
    * Returns (doc_id, component) for every node that appears in a pair.
@@ -547,7 +548,7 @@ object Dedup {
     // localCheckpoint truncates the logical plan to the materialized RDD each round —
     // without it the plan (and Catalyst re-analysis cost) grows with every iteration,
     // the classic iterative-algorithm trap on Spark. Previous rounds' checkpoints are
-    // unpersisted once the next one is materialized so storage stays O(1) in iterations.
+    // released once the next one is materialized so storage stays O(1) in iterations.
     // Checkpoints also carry their outputPartitioning, which is what keeps the loop at
     // ONE shuffle per round: labels arrive partitioned on doc_id, the rename to u is
     // alias-aware (ProjectExec preserves partitioning through aliases), so the edge join
@@ -574,7 +575,7 @@ object Dedup {
         .join(labels.withColumnRenamed("component", "old"), Seq("doc_id"))
         .localCheckpoint()
       changed = next.filter(col("component") =!= col("old")).count()
-      checkpointed.unpersist()
+      GraphOps.releaseCheckpoint(checkpointed) // its successor is materialized
       checkpointed = next
       labels = next.select(col("doc_id"), col("component"))
     }

@@ -16,6 +16,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
 
+import graft.sources.TableIO
+
 /**
  * Materialized aggregate views with AUTOMATIC query rewrite — the Calcite/BigQuery/
  * Snowflake MV behavior self-hosted on parquet and a Catalyst optimizer rule: a
@@ -35,14 +37,15 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
  * engine ships. Integer/long aggregates are bit-identical; decimal inputs are
  * excluded outright (partial-sum precision widening would change the result TYPE).
  *
- * STALENESS IS A CORRECTNESS GATE, not advisory: the view records the base's file
- * inventory (count, max mtime, total bytes over a RECURSIVE listing — so
- * hive-partitioned bases with files under `part=…/` subdirectories are stamped by
- * their leaf data files, and appending a new partition changes the stamp) at
- * materialization; the rule re-checks that inventory before every rewrite and
- * silently falls back to the base scan when the base has changed. A stale view can
- * therefore never serve a wrong answer — the same contract as [[ResultCache]],
- * enforced the same way (file-inventory comparison, driver-side, metadata-class cost).
+ * STALENESS IS A CORRECTNESS GATE, not advisory: [[create]] records the digest of the
+ * listing its own base read made — `TableIO.listingDigest`, graft's one freshness rule
+ * (path, length, mtime of every file the read listed; the listing is recursive, so a
+ * new `part=…/` partition of a hive-partitioned base changes it). The rule rewrites a
+ * scan only when that scan's relation listed exactly those files, and otherwise leaves
+ * the base scan in place. A rewrite therefore answers for exactly the files the
+ * unrewritten plan would scan — a frame read before an append and a refresh keeps its
+ * own rows — and the decision makes no listing of its own. [[ResultCache]] and
+ * `sources.StarCache` key on the same digest.
  *
  * Scope guards (bail -> no rewrite, never a wrong plan): a filter between the
  * aggregate and the scan rewrites ONLY when it references group columns exclusively
@@ -53,68 +56,27 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
  * REGISTRATIONS PERSIST: `create` writes the definition (base path, group/value
  * columns) to `_mv_def` next to the view data; a NEW session re-enables the rewrite
  * with `attach(spark, mvPath)` — one call, no re-materialization (the staleness gate
- * still applies, so an attach over a changed base simply never rewrites until
- * `refresh`). The in-memory registry itself is process-local by design: an optimizer
- * rule consulting remote state on every plan would be a scale bug, not a feature.
+ * still applies, so an attach over a changed base, or of a view stamped by an older
+ * binary, simply never rewrites until `refresh`). The in-memory registry itself is
+ * process-local by design: an optimizer rule consulting remote state on every plan
+ * would be a scale bug, not a feature.
  *
  * Scale: this is the 100 TB pattern where it matters most — a dashboard aggregate
  * over an append-mostly fact table runs against gigabytes of view instead of the
- * full scan, and the rewrite decision costs one driver file listing.
+ * full scan, and the rewrite decision costs a digest of the listing the query's own
+ * read already made.
  */
 object MaterializedViews {
 
-  /** Registered view: base path -> (view path, group cols, value cols). */
-  private case class MvDef(mvPath: String, groupCols: Seq[String], valueCols: Seq[String])
+  /** Registered view: base path -> (view path, group cols, value cols, the listing
+    * digest of the base read the view was built from). */
+  private case class MvDef(mvPath: String, groupCols: Seq[String], valueCols: Seq[String],
+      listing: String)
 
   private val registry = TrieMap.empty[String, MvDef]
 
   private def norm(p: String): String =
     p.stripPrefix("file:").stripSuffix("/")
-
-  /** Base-table inventory stamp: (n files, max mtime, total bytes) over a RECURSIVE
-    * listing — any append, overwrite, delete, or new/changed PARTITION changes it.
-    * (A non-recursive listing would see only directories under a hive-partitioned
-    * root and stamp every state identically — defeating the staleness gate for
-    * exactly the layout a 100 TB fact table uses.)
-    *
-    * Cost control: the listing is O(files in the base) per call. By default every
-    * rewrite decision re-lists (strict freshness). On a very large base set
-    * `spark.graft.mv.stampTtlMs` to a small positive value to reuse a stamp for that
-    * many milliseconds — bounded staleness ≤ TTL, the standard trade metadata caches
-    * make; [[create]]/[[refresh]] invalidate the cache for their base uncondition-
-    * ally, so the engine's own re-materializations are always seen immediately. */
-  private val stampCache = TrieMap.empty[String, (Long, String)]
-
-  private def cachedStamp(spark: SparkSession, basePath: String): String = {
-    val ttl = spark.conf.getOption("spark.graft.mv.stampTtlMs").map(_.toLong).getOrElse(0L)
-    if (ttl <= 0L) stamp(spark, basePath)
-    else {
-      val now = System.currentTimeMillis()
-      stampCache.get(basePath) match {
-        case Some((at, s)) if now - at < ttl => s
-        case _ =>
-          val s = stamp(spark, basePath)
-          stampCache.put(basePath, (now, s))
-          s
-      }
-    }
-  }
-
-  private def stamp(spark: SparkSession, basePath: String): String = {
-    val p = new Path(basePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var n = 0L; var maxM = 0L; var bytes = 0L
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && st.getPath.getName.endsWith(".parquet")) {
-        n += 1
-        if (st.getModificationTime > maxM) maxM = st.getModificationTime
-        bytes += st.getLen
-      }
-    }
-    s"$n:$maxM:$bytes"
-  }
 
   private def metaPath(mvPath: String) = new Path(s"$mvPath/_mv_meta")
   private def defPath(mvPath: String) = new Path(s"$mvPath/_mv_def")
@@ -140,18 +102,21 @@ object MaterializedViews {
     // deregister during the build: the build's own aggregate must scan the BASE, never
     // the view it is about to overwrite (read-your-own-overwrite would race the job)
     registry.remove(norm(basePath))
-    val base = spark.read.parquet(basePath)
+    val base = TableIO.parquet(spark, basePath)
+    // the stamp is the listing this very read made: the aggregate below scans exactly
+    // those files, so a write landing after the read can never be stamped as included
+    val listing = TableIO.listingOf(base)
+      .getOrElse(throw new IllegalArgumentException(s"$basePath has no file listing"))
     val aggs = count(lit(1)).as("cnt") +: valueCols.flatMap(c => Seq(
       count(col(c)).as(s"cnt_$c"), // per-column NON-NULL count: avg's true divisor
       sum(col(c)).as(s"sum_$c"), min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
     base.groupBy(groupCols.map(col): _*).agg(aggs.head, aggs.tail: _*)
       .write.mode("overwrite").parquet(mvPath)
-    writeFile(spark, metaPath(mvPath), stamp(spark, basePath))
+    writeFile(spark, metaPath(mvPath), listing)
     // persisted definition: one line per field, tab-joined column lists
     writeFile(spark, defPath(mvPath), Seq(norm(basePath),
       groupCols.mkString("\t"), valueCols.mkString("\t")).mkString("\n"))
-    stampCache.remove(norm(basePath))
-    registry.put(norm(basePath), MvDef(mvPath, groupCols, valueCols))
+    registry.put(norm(basePath), MvDef(mvPath, groupCols, valueCols, listing))
   }
 
   /** Re-enable the rewrite in a NEW session from the definition [[create]] persisted
@@ -160,7 +125,8 @@ object MaterializedViews {
     val lines = readFile(spark, defPath(mvPath)).split("\n", -1).toSeq
     require(lines.length == 3, s"malformed _mv_def at $mvPath")
     val split = (s: String) => if (s.isEmpty) Seq.empty[String] else s.split("\t").toSeq
-    registry.put(lines(0), MvDef(mvPath, split(lines(1)), split(lines(2)))): Unit
+    registry.put(lines(0), MvDef(mvPath, split(lines(1)), split(lines(2)),
+      readFile(spark, metaPath(mvPath)))): Unit
   }
 
   /** Alias of [[create]] — re-materializes after base changes. */
@@ -173,20 +139,16 @@ object MaterializedViews {
   /** Drop a registration (the files stay; only the rewrite stops). */
   def deregister(basePath: String): Unit = registry.remove(norm(basePath)): Unit
 
-  private def fresh(spark: SparkSession, basePath: String, d: MvDef): Boolean =
-    try readFile(spark, metaPath(d.mvPath)) == cachedStamp(spark, basePath)
-    catch { case scala.util.control.NonFatal(_) => false }
-
   // ------------------------------------------------------------------ the rule
 
   /** Optimizer rule: rewrite derivable aggregates over registered bases onto their
     * fresh materialized views. Injected via [[GraftExtensions]]. */
   object MvRewriteRule extends Rule[LogicalPlan] {
 
-    private def pathOf(plan: LogicalPlan): Option[String] = plan match {
+    private def pathOf(plan: LogicalPlan): Option[(String, LogicalPlan)] = plan match {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) =>
         fs.location.rootPaths.map(p => norm(p.toString)).distinct match {
-          case Seq(single) if registry.contains(single) => Some(single)
+          case Seq(single) if registry.contains(single) => Some((single, plan))
           case _ => None
         }
       case _ => None
@@ -198,31 +160,33 @@ object MaterializedViews {
     }
 
     /** Match `[Project?] [Filter?] [Project?] scan-of-registered-base`, returning the
-      * base path and the (optional) filter condition. A filter is rewritable only if
-      * it references GROUP columns exclusively — every row of a fine group shares
-      * those values, so filtering the view's group rows filters exactly the same base
-      * rows — and is deterministic. */
-    private def basePathOf(plan: LogicalPlan): Option[(String, Option[Expression])] =
+      * base path, the scan and the (optional) filter condition. A filter is rewritable
+      * only if it references GROUP columns exclusively — every row of a fine group
+      * shares those values, so filtering the view's group rows filters exactly the same
+      * base rows — and is deterministic. */
+    private def basePathOf(plan: LogicalPlan)
+        : Option[(String, LogicalPlan, Option[Expression])] =
       stripProjects(plan) match {
-        case Filter(cond, c) => pathOf(stripProjects(c)).map(p => (p, Some(cond)))
-        case other => pathOf(other).map(p => (p, None))
+        case Filter(cond, c) =>
+          pathOf(stripProjects(c)).map { case (p, scan) => (p, scan, Some(cond)) }
+        case other => pathOf(other).map { case (p, scan) => (p, scan, None) }
       }
 
     override def apply(plan: LogicalPlan): LogicalPlan =
       if (registry.isEmpty) plan
       else plan.transformUp {
         case agg @ Aggregate(_, _, child, _) =>
-          basePathOf(child).flatMap { case (base, cond) =>
+          basePathOf(child).flatMap { case (base, scan, cond) =>
             // Bail, never a wrong plan OR a broken one: any defect in the view's
             // on-disk state (data deleted under a surviving _mv_meta, an attach()ed
             // _mv_def whose columns disagree with the actual view schema) must fall
             // back to the base scan, not fail the user's query inside the optimizer.
-            try tryRewrite(agg, base, cond, registry(base))
+            try tryRewrite(agg, scan, cond, registry(base))
             catch { case scala.util.control.NonFatal(_) => None }
           }.getOrElse(agg)
       }
 
-    private def tryRewrite(agg: Aggregate, basePath: String, cond: Option[Expression],
+    private def tryRewrite(agg: Aggregate, scan: LogicalPlan, cond: Option[Expression],
         d: MvDef): Option[Aggregate] = {
       val spark = SparkSession.active
       // grouping must be plain columns forming a subset of the view's group columns
@@ -236,9 +200,10 @@ object MaterializedViews {
         if (!c.deterministic) return None
         if (!c.references.forall(a => d.groupCols.contains(a.name))) return None
       }
-      if (!fresh(spark, basePath, d)) return None // stale view must never answer
+      // the view answers only for the files this scan listed: a stale view never answers
+      if (!TableIO.listingDigest(scan).contains(d.listing)) return None
 
-      val mvPlan = graft.sources.TableIO.parquet(spark, d.mvPath).queryExecution.analyzed
+      val mvPlan = TableIO.parquet(spark, d.mvPath).queryExecution.analyzed
       val mvAttr: Map[String, Attribute] = mvPlan.output.map(a => a.name -> a).toMap
       // older views (pre cnt_<col>) lack the avg/count(col) divisor columns; the
       // attr lookup bails those rewrites rather than failing analysis

@@ -1,13 +1,13 @@
 package graft.sources
 
 import java.util.UUID
-import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.concurrent.TrieMap
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
 /**
  * One-time materialization of a derived star schema to parquet — the views become
@@ -43,21 +43,20 @@ import org.apache.spark.sql.SparkSession
  *
  * Cache layout: `<java.io.tmpdir>/graft_star/v<Version>_<star>_<sfHash>_<stamp>/<view>/`,
  * where `sfHash` identifies the source directory (several scale factors coexist) and
- * `stamp` hashes its recursive listing (name, length, mtime of every file) —
- * regenerated test data or a changed view definition (bump [[Version]]) lands in a
- * fresh directory rather than silently serving stale rows. The stamp listing is
- * cached per source dir for `spark.graft.star.stampTtlMs` (default 60 s): one
- * O(files) metadata scan per TTL window instead of one per query call, the same
- * bounded-staleness trade the MV freshness gate makes (plans.MaterializedViews).
- * Builds are atomic: views are written under a nonce-named sibling that is renamed
- * into place only after a `_STAR_COMPLETE` marker is written inside it; a lost
- * rename race discards the duplicate build and reuses the winner's. Sweeping (build
- * path only): dead layout versions and orphaned stars go immediately; superseded
- * stamps of the same (star, source dir) are deferred ONE generation, because a
- * sibling session in the JVM may still hold views over the newest old stamp until
- * its own next tryEnsure; crash-stranded build nonces are reaped only when the
- * newest write anywhere one level inside is over an hour old (per-view child dirs
- * are the build's heartbeat — the tmp dir's own mtime goes stale during a long
+ * `stamp` is graft's one freshness rule, `TableIO.listingDigest`, over the base views
+ * the caller has just registered with `TableIO.registerAll`: the listing (path,
+ * length, mtime of every file) those reads already made. Regenerated test data or a
+ * changed view definition (bump [[Version]]) lands in a fresh directory rather than
+ * silently serving stale rows; the stamp is exact on every call, and StarCache makes
+ * no listing and starts no job to compute it. Builds are atomic: views are written under
+ * a nonce-named sibling that is renamed into place only after a `_STAR_COMPLETE` marker
+ * is written inside it; a lost rename race discards the duplicate build and reuses the
+ * winner's. Sweeping (build path only): dead layout versions and orphaned stars go
+ * immediately; superseded stamps of the same (star, source dir) are deferred ONE
+ * generation, because a sibling session in the JVM may still hold views over the newest
+ * old stamp until its own next tryEnsure; crash-stranded build nonces are reaped only
+ * when the newest write anywhere one level inside is over an hour old (per-view child
+ * dirs are the build's heartbeat — the tmp dir's own mtime goes stale during a long
  * multi-view write).
  *
  * Session isolation: the non-bucketed views register as session-local TEMP views,
@@ -106,14 +105,10 @@ object StarCache {
   // Value = (registered base, last-bound millis). The bind time bounds how long a
   // binding can pin a superseded on-disk generation: sessions have no death hook, so
   // a binding from a discarded session would otherwise protect a multi-GB generation
-  // FOREVER (any live session re-derives the current stamp within the 60 s TTL on its
-  // next query and rebinds, refreshing the timestamp — only in-flight work needs the
-  // pin, and 24 h bounds any plausible in-flight query).
+  // FOREVER (any live session re-derives the current stamp on its next query and
+  // rebinds, refreshing the timestamp — only in-flight work needs the pin, and 24 h
+  // bounds any plausible in-flight query).
   private val registered = TrieMap.empty[(String, String), (String, Long)]
-
-  /** Test hook: number of real recursive listings performed (see stampTtlMs). */
-  private[graft] val stampListings = new AtomicLong(0)
-  private val stampCache = TrieMap.empty[String, (Long, String)]
 
   /** Fact views get range-partitioned + sorted on their date surrogate key so
     * date-band predicates (q21/q37/q82-style) skip whole files and row groups;
@@ -145,40 +140,23 @@ object StarCache {
       n
     }
 
-  private def listingStamp(spark: SparkSession, sfDir: String): String = {
-    val p = new Path(sfDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // RECURSIVE listing: a source table that is a directory of part-files must rotate
-    // the stamp when any file inside changes, even if the directory entry itself keeps
-    // its mtime — the same staleness class the MV freshness gate was bitten by (r6).
-    val files = scala.collection.mutable.ArrayBuffer.empty[String]
-    val it = fs.listFiles(p, true)
-    while (it.hasNext) {
-      val st = it.next()
-      files += s"${st.getPath.toUri.getPath}:${st.getLen}:${st.getModificationTime}"
-    }
-    stampListings.incrementAndGet()
-    md5hex(sfDir + "|" + files.sorted.mkString(","))
-  }
-
-  /** The listing above is O(all source files) of driver metadata calls — per QUERY
-    * that is a driver pause at the 100 TB design point. Amortize it: one listing per
-    * (source dir, TTL window); bounded staleness ≤ TTL, and strict-freshness callers
-    * set the TTL to 0. */
+  /** The source stamp: the listings of the base views `TableIO.registerAll(spark, sfDir)`
+    * registered in this session. A base view that is missing, or was read from another
+    * directory, fails the call instead of stamping the wrong source. */
   private def stamp(spark: SparkSession, sfDir: String): String = {
-    val ttl = spark.conf.getOption("spark.graft.star.stampTtlMs").map(_.toLong)
-      .getOrElse(60000L)
-    if (ttl <= 0L) listingStamp(spark, sfDir)
-    else {
-      val now = System.currentTimeMillis()
-      stampCache.get(sfDir) match {
-        case Some((at, s)) if now - at < ttl => s
-        case _ =>
-          val s = listingStamp(spark, sfDir)
-          stampCache.put(sfDir, (now, s))
-          s
+    val fs = new Path(sfDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    md5hex(TableIO.tableNames.map { n =>
+      // the plan the view stored when registered: looking it up analyzes nothing
+      val plan = spark.sessionState.catalog.getTempView(n)
+        .getOrElse(sys.error(s"base view $n is not registered"))
+      val roots = plan.collectLeaves().flatMap {
+        case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location.rootPaths
+        case _ => Nil
       }
-    }
+      require(roots == Seq(fs.makeQualified(new Path(s"$sfDir/$n.parquet"))),
+        s"base view $n is not read from $sfDir")
+      TableIO.listingDigest(plan).getOrElse(sys.error(s"base view $n has no file listing"))
+    }.mkString(","))
   }
 
   private def md5hex(s: String): String =
@@ -297,9 +275,10 @@ object StarCache {
 
   /**
    * Materialize `views` (defining SQL supplied by `sql`, which may reference the base
-   * temp views — the caller must have registered them) once per (source-data stamp,
-   * star name), then register each — as a bucketed catalog table for the item-
-   * clustered facts, as a temp view over plain parquet for everything else. Returns
+   * temp views — the caller must have registered them with `TableIO.registerAll(spark,
+   * sfDir)`, whose listing is the stamp) once per (source-data stamp, star name), then
+   * register each — as a bucketed catalog table for the item-clustered facts, as a
+   * temp view over plain parquet for everything else. Returns
    * false — leaving the caller on its inline-CTE fallback — if anything goes wrong.
    */
   def tryEnsure(spark: SparkSession, sfDir: String, star: String, views: Seq[String],

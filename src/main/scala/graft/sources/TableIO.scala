@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 
 import org.apache.commons.codec.digest.DigestUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
@@ -26,7 +27,8 @@ import org.apache.spark.sql.types.StructType
  * while the path's file listing (the path, length and mtime of every file) digests the
  * same as when it was inferred, under the same session confs. Each read still lists the
  * path as before, so reads are exactly as fresh as a bare `spark.read.parquet`; there is
- * deliberately no TTL and no option.
+ * deliberately no TTL and no option. The same digest, [[listingDigest]], is the one
+ * freshness rule of StarCache, the MaterializedViews rewrite and ResultCache.
  */
 object TableIO {
   val tableNames: Seq[String] = Seq(
@@ -56,13 +58,13 @@ object TableIO {
     val confs = confDigest(spark)
     Option(resolved.get(path)).filter(_.confs == confs)
       .map(r => (r, spark.read.schema(r.schema).parquet(path)))
-      .collect { case (r, df) if listingDigest(df).contains(r.listing) => df }
+      .collect { case (r, df) if listingOf(df).contains(r.listing) => df }
       .getOrElse {
         val df = spark.read.parquet(path)
         // CHAR/VARCHAR fields (inferred under spark.sql.preserveCharVarcharTypeInfo) are
         // refused in a given schema, so such a schema is inferred on every read
         if (!CharVarcharUtils.hasCharVarchar(df.schema))
-          listingDigest(df).foreach(l => resolved.put(path, Resolved(confs, l, df.schema)))
+          listingOf(df).foreach(l => resolved.put(path, Resolved(confs, l, df.schema)))
         df
       }
   }
@@ -75,15 +77,33 @@ object TableIO {
     DigestUtils.md5Hex(spark.conf.getAll.toSeq.filterNot(_._1.startsWith("spark.graft."))
       .sorted.map { case (k, v) => s"$k=$v" }.mkString("\n"))
 
-  /** MD5 of the listing a file read's index made: path, length and mtime per file.
-    * None for a relation not backed by a listed file index (never reused). */
-  private def listingDigest(df: DataFrame): Option[String] =
-    df.queryExecution.analyzed.collectFirst {
-      case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
-    }.collect { case index: PartitioningAwareFileIndex =>
-      DigestUtils.md5Hex(index.allFiles()
-        .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted.mkString("\n"))
+  /**
+   * The one freshness rule every graft cache keys on: MD5 of the listing that the file
+   * relations in `plan` (subqueries included) made when they were read — path, length
+   * and mtime of every file. Reading it starts no job and makes no filesystem call: it
+   * is the listing each relation's `InMemoryFileIndex` already holds, so it names
+   * exactly the files the plan scans. None when the plan has no leaf or some leaf has
+   * no listed file index (an in-memory frame, Range, Arrow/V2 or streaming source):
+   * such a plan has no file listing to be fresh against.
+   */
+  private[graft] def listingDigest(plan: LogicalPlan): Option[String] = {
+    val listings = plan.collectWithSubqueries { case leaf if leaf.children.isEmpty =>
+      leaf match {
+        case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location match {
+          case index: PartitioningAwareFileIndex => Some(index.allFiles())
+          case _ => None
+        }
+        case _ => None
+      }
     }
+    if (listings.isEmpty || listings.contains(None)) None
+    else Some(DigestUtils.md5Hex(listings.flatten.flatten
+      .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted.mkString("\n")))
+  }
+
+  /** [[listingDigest]] of `df`'s analyzed plan. */
+  private[graft] def listingOf(df: DataFrame): Option[String] =
+    listingDigest(df.queryExecution.analyzed)
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
@@ -125,10 +145,9 @@ object TableIO {
 
   /** Read Arrow-IPC (`.arrow` / Feather v2) files — the reference's namesake
     * arrow-data-source format. One file per task; schema from the file footer.
-    * See org.apache.spark.sql.graft.ArrowIpc for the mechanism. */
+    * See org.apache.spark.sql.graft.ArrowSourceV2 for the mechanism. */
   def readArrow(spark: SparkSession, path: String): DataFrame =
     // DataSourceV2 path: column pruning reaches the scan, batches deliver columnar
-    // (ArrowSourceV2; the RDD-based ArrowIpc.read remains as the minimal fallback)
     spark.read.format(classOf[org.apache.spark.sql.graft.ArrowSourceV2].getName).load(path)
 
   /**

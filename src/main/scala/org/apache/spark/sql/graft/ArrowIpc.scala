@@ -1,58 +1,26 @@
 package org.apache.spark.sql.graft
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector.ipc.ArrowFileReader
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.classic.{DataFrame, SparkSession => ClassicSession}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.classic.DataFrame
 import org.apache.spark.sql.util.ArrowUtils
-import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector, ColumnarBatch}
 
 /**
- * Arrow-IPC (Feather v2 / `.arrow`) file READ path — the Spark-native analog of the
- * reference's namesake arrow-data-source (gazelle_plugin: arrow-data-source/standard/
- * src/main/scala/com/intel/oap/spark/sql/execution/datasources/v2/arrow/
- * ArrowDataSourceV2.scala:1, which scans Arrow-format data through a native reader).
- *
- * graft rides Spark's OWN columnar machinery instead of a native reader: each task opens
- * one Arrow file, wraps each record batch's vectors in Spark's public
- * `ArrowColumnVector`, and iterates rows off a `ColumnarBatch` — Spark's tested
- * per-type accessors, zero per-type conversion code here. The Spark schema falls out of
- * the file's own footer via `ArrowUtils.fromArrowSchema` (the same mapping the Arrow
- * python bridge uses), which is why this object lives in the org.apache.spark.sql
- * namespace: schema mapping and `internalCreateDataFrame` are private[sql].
- *
- * Scale shape: the driver touches ONE footer for the schema; file bodies are read
- * entirely executor-side, one file per partition (Arrow-IPC is not block-splittable the
- * way parquet is — a file is the parallelism unit, as in the reference). Batches stream:
- * one batch is resident per task at a time, rows are copied out before the next batch
- * loads, and allocator/reader close on task completion even if the iterator is abandoned.
+ * Arrow-IPC (Feather v2 / `.arrow`) file WRITE path; [[ArrowSourceV2]] is the read path
+ * (`TableIO.readArrow`). graft rides Spark's OWN Arrow machinery: Spark's `ArrowWriter`
+ * fills the vectors and `ArrowUtils.toArrowSchema` maps the schema (the same mapping
+ * the Arrow python bridge uses), which is why this object lives in the
+ * org.apache.spark.sql namespace: both are private[sql].
  */
 object ArrowIpc {
-
-  /** Read `path` (a `.arrow` file, or a directory of them) as a DataFrame. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val files = listArrowFiles(path)
-    require(files.nonEmpty, s"no .arrow files under $path")
-    val session = spark.asInstanceOf[ClassicSession]
-    val schema = readSchema(files.head)
-    val rdd = session.sparkContext
-      .parallelize(files, files.size)
-      .flatMap(fileRows)
-    session.internalCreateDataFrame(rdd.setName(s"arrow-ipc:$path"), schema)
-  }
 
   /**
    * Write `df` as Arrow-IPC files, one `.arrow` file per partition, executor-side
    * (Spark's own ArrowWriter fills the vectors — zero per-type code here; batches flush
    * every `batchRows` rows so memory stays bounded). Targets a shared/local filesystem
-   * path visible to all executors — the round-trip twin of `read`, and the graft analog
-   * of the reference's ArrowWriteExtension (gazelle_plugin: arrow-data-source/standard/
-   * src/main/scala/com/intel/oap/spark/sql/ArrowWriteExtension.scala:1).
+   * path visible to all executors — the round-trip twin of [[ArrowSourceV2]], and the
+   * graft analog of the reference's ArrowWriteExtension (gazelle_plugin:
+   * arrow-data-source/standard/src/main/scala/com/intel/oap/spark/sql/
+   * ArrowWriteExtension.scala:1).
    */
   def write(df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], path: String,
       batchRows: Int = 4096): Unit = {
@@ -90,63 +58,5 @@ object ArrowIpc {
       }
     }.count() // action: materialize the write
     ()
-  }
-
-  private def listArrowFiles(path: String): Seq[String] = {
-    val p = new java.io.File(path)
-    if (p.isDirectory)
-      p.listFiles().filter(f => f.isFile && f.getName.endsWith(".arrow"))
-        .map(_.getAbsolutePath).sorted.toSeq
-    else if (p.isFile) Seq(p.getAbsolutePath)
-    else Seq.empty
-  }
-
-  /** Driver-side: map the first file's footer schema to a Spark schema. */
-  private def readSchema(file: String): StructType = {
-    val alloc = new RootAllocator(Long.MaxValue)
-    try {
-      val ch = java.nio.channels.FileChannel.open(
-        java.nio.file.Paths.get(file), java.nio.file.StandardOpenOption.READ)
-      val reader = new ArrowFileReader(ch, alloc)
-      try ArrowUtils.fromArrowSchema(reader.getVectorSchemaRoot.getSchema)
-      finally reader.close()
-    } finally alloc.close()
-  }
-
-  /** Executor-side: stream one file's record batches as copied InternalRows. */
-  private def fileRows(file: String): Iterator[InternalRow] = {
-    val alloc = new RootAllocator(Long.MaxValue)
-    val ch = java.nio.channels.FileChannel.open(
-      java.nio.file.Paths.get(file), java.nio.file.StandardOpenOption.READ)
-    val reader = new ArrowFileReader(ch, alloc)
-    val root = reader.getVectorSchemaRoot
-    var closed = false
-    def closeAll(): Unit = if (!closed) {
-      closed = true
-      try reader.close() finally alloc.close()
-    }
-    // a killed/limited task never exhausts the iterator — release off-heap Arrow
-    // buffers on task completion, not GC
-    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => closeAll()))
-    new Iterator[InternalRow] {
-      private var batchRows: Iterator[InternalRow] = Iterator.empty
-      override def hasNext: Boolean = {
-        if (batchRows.hasNext) true
-        else if (closed) false
-        else if (reader.loadNextBatch()) {
-          val cols: Array[ColumnVector] =
-            root.getFieldVectors.asScala.map(v => new ArrowColumnVector(v): ColumnVector).toArray
-          val batch = new ColumnarBatch(cols, root.getRowCount)
-          // copy() detaches each row from the arrow buffers so the next loadNextBatch
-          // (which recycles them) cannot corrupt already-yielded rows
-          batchRows = batch.rowIterator().asScala.map(_.copy())
-          hasNext
-        } else { closeAll(); false }
-      }
-      override def next(): InternalRow = {
-        if (!hasNext) throw new NoSuchElementException("end of arrow file")
-        batchRows.next()
-      }
-    }
   }
 }

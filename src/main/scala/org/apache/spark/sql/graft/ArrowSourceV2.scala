@@ -24,7 +24,7 @@ import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnVector, Columna
  * implements SupportsPushDownFilters and feeds the pushed predicates into the native
  * dataset scan — ArrowScanBuilder.scala:34-41).
  *
- * Where the ArrowIpc.read RDD path copies every column of every row into InternalRows,
+ * Where a row-based reader would copy every column of every row into InternalRows,
  * this scan:
  *   - implements `SupportsPushDownRequiredColumns`, so Catalyst's column pruning reaches
  *     the source: only the REQUIRED Arrow field vectors are wrapped and shipped (a

@@ -37,6 +37,20 @@ class DedupSpec extends AnyFunSuite {
     assert(comp == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 10L -> 10L, 11L -> 10L))
   }
 
+  test("connectedComponents leaves only its result persisted") {
+    import spark.implicits._
+    // a chain whose minimum id sits at one end: the label walks one hop per round, so
+    // the loop runs several rounds and supersedes several checkpoints
+    val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    var comp = Map.empty[Long, Long]
+    val left = SparkTestBase.persistedLeftBy {
+      comp = Dedup.connectedComponents(pairs).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(comp == (1L to 8L).map(_ -> 1L).toMap)
+    assert(left.size <= 1, s"connectedComponents left ${left.size} persisted RDDs: $left")
+  }
+
   test("simhash recall on strong near-duplicates (jaccard >= 0.9)") {
     val strong = Dedup.dedupNgramJaccard(spark, sf, threshold = 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -10,6 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
  * The engine reads environment variables only for deployment settings. An A/B switch
  * for an experiment (a `SPARK_GRAFT_*` flag that picks between two plans) lives only as
  * long as its experiment; adding one makes this spec fail, so it shows up in review.
+ * The same holds for graft's own `spark.graft.*` conf keys: src/main reads only the
+ * per-session nonce StarCache sets itself, so a new tuning knob fails this spec too.
  */
 class EnvSettingsSpec extends AnyFunSuite {
 
@@ -20,6 +22,10 @@ class EnvSettingsSpec extends AnyFunSuite {
   private val envRead = """sys\.env\b|System\.getenv\b""".r
   private val literalKey =
     """(?:sys\.env(?:\.(?:get|getOrElse|contains|apply))?|System\.getenv)\(\s*"([^"]+)"""".r
+
+  private val graftConfKeys = Set("spark.graft.star.sessionNonce")
+
+  private val graftConfKey = """"(spark\.graft\.[^"]+)"""".r
 
   private def mainSources: Seq[Path] = {
     val walk = Files.walk(Paths.get("src/main/scala"))
@@ -45,5 +51,12 @@ class EnvSettingsSpec extends AnyFunSuite {
     }.toSet
     assert(keys == deploymentSettings,
       s"unexpected: ${keys -- deploymentSettings}; missing: ${deploymentSettings -- keys}")
+  }
+
+  test("src/main reads no spark.graft.* conf key but StarCache's session nonce") {
+    val keys = mainSources.flatMap(p => Files.readAllLines(p).asScala)
+      .flatMap(line => graftConfKey.findAllMatchIn(line).map(_.group(1))).toSet
+    assert(keys == graftConfKeys,
+      s"unexpected: ${keys -- graftConfKeys}; missing: ${graftConfKeys -- keys}")
   }
 }

@@ -162,35 +162,37 @@ class MaterializedViewsSpec extends AnyFunSuite {
     } finally MaterializedViews.deregister(base)
   }
 
-  test("stamp TTL bounds listing cost; create/refresh invalidate their base's cache") {
+  test("a rewrite answers for the files its relation listed") {
     import spark.implicits._
-    val root = tmp("mvt"); val base = s"$root/base"; val mv = s"$root/mv"
+    val root = tmp("mvl"); val base = s"$root/base"; val mv = s"$root/mv"
     mkBase(base, 1000)
-    spark.conf.set("spark.graft.mv.stampTtlMs", "600000")
     MaterializedViews.create(spark, base, mv, Seq("g"), Seq("v_long"))
-    def q() = spark.read.parquet(base).groupBy(col("g")).agg(sum(col("v_long")).as("s"))
     try {
-      assert(q().inputFiles.forall(_.contains("/mv")), "fresh view rewrites under TTL")
-      val before = q().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      Thread.sleep(1100)
+      val q0 = spark.read.parquet(base) // lists the base before the append
+      def agg(df: org.apache.spark.sql.DataFrame) =
+        df.groupBy(col("g")).agg(sum(col("v_long")).as("s"))
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      Thread.sleep(1100) // distinct mtimes on coarse filesystems
       (1 to 100).map(i => (s"g${i % 7}", "hX", 5000000L + i, 0.0))
         .toDF("g", "h", "v_long", "v_dbl").write.mode("append").parquet(base)
-      // within the TTL the cached stamp still matches: BOUNDED staleness by contract
-      assert(q().inputFiles.forall(_.contains("/mv")),
-        "within the TTL the cached stamp is reused (documented bounded staleness)")
-      assert(q().collect().map(r => r.getString(0) -> r.getLong(1)).toMap == before)
-      // refresh re-materializes AND invalidates the cache: answers are current again
-      MaterializedViews.refresh(spark, base)
-      val after = q()
-      assert(after.inputFiles.forall(_.contains("/mv")))
-      val got = after.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-      assert(got != before && got.values.sum == before.values.sum
-        + (1 to 100).map(_ + 5000000L).sum,
-        "post-refresh rewrite must include the appended rows")
-    } finally {
-      spark.conf.unset("spark.graft.mv.stampTtlMs")
+      MaterializedViews.refresh(spark, base) // the view now includes the appended rows
+      // a fresh read lists the appended file and rewrites onto the refreshed view
+      val fresh = agg(spark.read.parquet(base))
+      assert(fresh.inputFiles.forall(_.contains("/mv")), "refresh re-enables the rewrite")
+      assert(rows(fresh).values.sum == (1 to 1000).sum + (1 to 100).map(_ + 5000000L).sum,
+        "the refreshed view must include the appended rows")
+      // q0 never listed the appended file: it must keep scanning its own files
+      val old = agg(q0)
+      val got = rows(old)
       MaterializedViews.deregister(base)
-    }
+      val unrewritten = rows(agg(q0))
+      assert(got.values.sum == unrewritten.values.sum && got == unrewritten,
+        "the answer must equal the unrewritten plan's")
+      assert(got.values.sum == (1 to 1000).sum)
+      assert(old.inputFiles.forall(_.contains("/base")),
+        "a relation listed before the refresh must not rewrite onto the view")
+    } finally MaterializedViews.deregister(base)
   }
 
   test("stale view never answers: base change disables the rewrite until refresh") {

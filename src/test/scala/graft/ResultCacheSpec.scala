@@ -71,6 +71,21 @@ class ResultCacheSpec extends AnyFunSuite {
     assert(!ResultCache.isCached(b, cache), "bypassed plans never claim cached")
   }
 
+  test("a rewritten Arrow directory is never served from the cache") {
+    val cache = tmp("rc5")
+    val dir = tmp("rc5a")
+    def writeX(n: Int): Unit =
+      org.apache.spark.sql.graft.ArrowIpc.write(spark.range(n).toDF("x").coalesce(1), dir)
+    def q() = TableIO.readArrow(spark, dir).groupBy().sum("x")
+    writeX(100)
+    assert(ResultCache.run(q(), cache).head().getLong(0) == 4950L)
+    writeX(10) // the same part file, rewritten with other rows
+    val fresh = q().head().getLong(0)
+    assert(fresh == 45L)
+    assert(ResultCache.run(q(), cache).head().getLong(0) == fresh,
+      "a source with no file listing must bypass the cache, not serve the old answer")
+  }
+
   test("wide projections differing past the 25th field get distinct fingerprints") {
     val base = TableIO.lineitem(spark, sf).limit(10)
     // 30 identical columns, then one differing column at position 31

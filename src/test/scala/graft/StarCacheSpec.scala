@@ -47,9 +47,6 @@ class StarCacheSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_starstamp")
     for (t <- TableIO.tableNames)
       copyTree(Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet"))
-    // Strict freshness for this test: the default TTL would (by design) serve the
-    // cached stamp for 60 s and mask the rotation this test exists to prove.
-    spark.conf.set("spark.graft.star.stampTtlMs", "0")
     try {
       TableIO.registerAll(spark, dir.toString)
       assert(StarCache.tryEnsure(spark, dir.toString, "tpcds", TpcdsRealQueries.viewNames,
@@ -68,42 +65,7 @@ class StarCacheSpec extends AnyFunSuite {
         TpcdsRealQueries.viewSql))
       val after = spark.table("item").count()
       assert(after < before, s"item count $before -> $after: cache did not rotate")
-    } finally spark.conf.unset("spark.graft.star.stampTtlMs")
-    deleteTree(dir)
-  }
-
-  test("stamp TTL: repeated tryEnsure pays one listing per window, rotation still " +
-      "detected after expiry") {
-    import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_starttl")
-    for (t <- TableIO.tableNames)
-      copyTree(Paths.get(s"$sf/$t.parquet"), dir.resolve(s"$t.parquet"))
-    TableIO.registerAll(spark, dir.toString)
-    spark.conf.set("spark.graft.star.stampTtlMs", "300000") // long TTL: amortization arm
-    try {
-      assert(StarCache.tryEnsure(spark, dir.toString, "tpcds", TpcdsRealQueries.viewNames,
-        TpcdsRealQueries.viewSql))
-      val n0 = StarCache.stampListings.get()
-      for (_ <- 1 to 10)
-        assert(StarCache.tryEnsure(spark, dir.toString, "tpcds", TpcdsRealQueries.viewNames,
-          TpcdsRealQueries.viewSql))
-      assert(StarCache.stampListings.get() == n0,
-        "10 tryEnsure calls inside the TTL window re-listed the source dir")
-      // expiry arm: a short TTL + a data change must rotate within one expiry
-      spark.conf.set("spark.graft.star.stampTtlMs", "1")
-      val before = spark.table("item").count()
-      val partDir = dir.resolve("part.parquet")
-      val halved = TableIO.part(spark, dir.toString).where("p_partkey % 2 = 0")
-        .localCheckpoint()
-      deleteTree(partDir)
-      halved.write.parquet(partDir.toString)
-      Thread.sleep(5) // let the 1 ms TTL lapse
-      TableIO.registerAll(spark, dir.toString)
-      assert(StarCache.tryEnsure(spark, dir.toString, "tpcds", TpcdsRealQueries.viewNames,
-        TpcdsRealQueries.viewSql))
-      assert(spark.table("item").count() < before, "TTL expiry did not rotate the stamp")
-    } finally spark.conf.unset("spark.graft.star.stampTtlMs")
-    deleteTree(dir)
+    } finally deleteTree(dir)
   }
 
   test("the item-bucketed facts join exchange-free and sort-free on the item key") {
