@@ -68,52 +68,60 @@ object Clustering {
       .select(col("cid"), coalesce(col("ce_new"), col("ce")).as("ce"))
   }
 
+  /** Embeddings on the fixed-point lattice: (vec_id, qe = floor(x * 1000) per element). */
+  private def quantized(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id"),
+      transform(col("embedding"),
+        x => floor(x.cast("double") * 1000.0).cast("long")).as("qe"))
+
   /**
    * General entry: Lloyd's on any (vec_id: long, embedding: array<float|double>)
    * frame. Returns the final assignment frame (vec_id, qe, cid, dist) and leaves
    * summarization to the caller. Initial centroids are the k smallest vec_ids.
-   * For rounds >> 2, localCheckpoint `vectors` first to cap lineage.
+   *
+   * The quantized frame is cached for its 2·rounds + 1 consumers (each round's assign +
+   * update, plus the final assign; without it every one re-runs the scan + per-element
+   * quantize transform) and released by this call before it returns: the result is
+   * computed eagerly into a local checkpoint. That checkpoint belongs to the caller;
+   * its blocks go when the frame is dropped (ContextCleaner) or released explicitly.
    */
   def kmeansAssign(emb: DataFrame, k: Int, rounds: Int): DataFrame = {
-    // r14: cache the quantized frame — it feeds 2·rounds + 1 consumers (each round's
-    // assign + update, plus the final assign), and without materialization every one
-    // re-runs the scan + per-element quantize transform (guide §1.2). Same lifecycle
-    // policy as the dedup gram cache.
-    val vectors = emb.select(col("vec_id"),
-      transform(col("embedding"),
-        x => floor(x.cast("double") * 1000.0).cast("long")).as("qe"))
-      .cache()
-    // k smallest ids via TakeOrderedAndProject (no global window) + broadcast semi-join
-    val initIds = vectors.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
-    var centroids = vectors.join(broadcast(initIds), Seq("vec_id"))
-      .select(col("vec_id").as("cid"), col("qe").as("ce"))
-    for (_ <- 1 to rounds)
-      centroids = update(assign(vectors, centroids), centroids)
-    assign(vectors, centroids)
-      .join(centroids.select(col("cid"),
-        aggregate(col("ce"), lit(0L), (acc, x) => acc + x).as("centroid_sum")), Seq("cid"))
+    val vectors = quantized(emb).cache()
+    try {
+      // k smallest ids via TakeOrderedAndProject (no global window) + broadcast semi-join
+      val initIds = vectors.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
+      var centroids = vectors.join(broadcast(initIds), Seq("vec_id"))
+        .select(col("vec_id").as("cid"), col("qe").as("ce"))
+      for (_ <- 1 to rounds)
+        centroids = update(assign(vectors, centroids), centroids)
+      assign(vectors, centroids)
+        .join(centroids.select(col("cid"),
+          aggregate(col("ce"), lit(0L), (acc, x) => acc + x).as("centroid_sum")), Seq("cid"))
+        .localCheckpoint()
+    } finally vectors.unpersist()
   }
 
-  /** k-means(k=8, 2 Lloyd rounds) on fixed-point embeddings; final assignment stats. */
+  /** k-means(k=8, 2 Lloyd rounds) on fixed-point embeddings; final assignment stats.
+    * The k result rows are computed while the quantized frame is cached (5 consumers,
+    * see [[kmeansAssign]]) and returned as a local relation, so the cache is released
+    * before the call returns and the next call reads the table's current files. */
   def qKmeans(spark: SparkSession, dir: String): DataFrame = {
     val k = 8
     val rounds = 2
-    val vectors = TableIO.embeddings(spark, dir)
-      .select(col("vec_id"),
-        transform(col("embedding"),
-          x => floor(x.cast("double") * 1000.0).cast("long")).as("qe"))
-      .cache() // r14: 5 consumers of the scan+quantize — see kmeansAssign's note
-    var centroids = vectors.filter(col("vec_id") < k)
-      .select(col("vec_id").as("cid"), col("qe").as("ce"))
-    for (_ <- 1 to rounds)
-      centroids = update(assign(vectors, centroids), centroids)
-    val fin = assign(vectors, centroids)
-    fin.groupBy(col("cid"))
-      .agg(count(lit(1)).as("n"), sum(col("dist")).as("inertia"))
-      .join(centroids.select(col("cid"),
-        aggregate(col("ce"), lit(0L), (acc, x) => acc + x).as("centroid_sum")), Seq("cid"))
-      .select(col("cid"), col("n"), col("inertia"), col("centroid_sum"))
-      .orderBy(col("cid"))
+    val vectors = quantized(TableIO.embeddings(spark, dir)).cache()
+    try {
+      var centroids = vectors.filter(col("vec_id") < k)
+        .select(col("vec_id").as("cid"), col("qe").as("ce"))
+      for (_ <- 1 to rounds)
+        centroids = update(assign(vectors, centroids), centroids)
+      val stats = assign(vectors, centroids).groupBy(col("cid"))
+        .agg(count(lit(1)).as("n"), sum(col("dist")).as("inertia"))
+        .join(centroids.select(col("cid"),
+          aggregate(col("ce"), lit(0L), (acc, x) => acc + x).as("centroid_sum")), Seq("cid"))
+        .select(col("cid"), col("n"), col("inertia"), col("centroid_sum"))
+        .orderBy(col("cid"))
+      spark.createDataFrame(java.util.Arrays.asList(stats.collect(): _*), stats.schema)
+    } finally vectors.unpersist()
   }
 
   // The oracle replays the identical integer rounds as unrolled CTEs.

@@ -2,8 +2,10 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.operators.GraphOps
 import graft.pipeline.Dedup
 
 /**
@@ -17,11 +19,14 @@ import graft.pipeline.Dedup
  *    doc, persisted as parquet and appended per batch, never rewritten. The content lane
  *    exactly catches re-arrivals of docs too short to shingle (< 3 tokens), which have no
  *    bands; null text is treated as empty text in the lane.
- *  - Per batch, inside `foreachBatch`: signatures + bands for the incoming docs (map-only
- *    typed kernels, computed ONCE and shared with pair generation), one semi-join against
- *    the index drops cross-batch collisions, then an exact keep-min window plus the
- *    verified pair + connected-components pass dedups WITHIN the batch (same policy as
- *    the batch engine's `Dedup.dedupedCorpus`). Admitted docs' index rows append last.
+ *  - Per batch, inside `foreachBatch`: the batch is read once, and an exact keep-min
+ *    window on its content hash runs on that read (exact duplicates share bands and
+ *    hash, so they need neither). Gram sets and LSH bands (map-only typed kernels) are
+ *    computed for the survivors only. One semi-join against the index drops cross-batch
+ *    collisions, then the verified pair + connected-components pass dedups the rest
+ *    WITHIN the batch (same policy as the batch engine's `Dedup.dedupedCorpus`).
+ *    Admitted docs' index rows append last. Each of these frames is pinned once and
+ *    released before the pass returns; only the admitted frame stays, for the caller.
  *  - The cross-batch near-dup drop is CANDIDATE-level (band collision, not verified
  *    jaccard): verifying would require storing gram sets for every admitted doc. With 32
  *    bands of 4 rows, a band collision implies high estimated similarity (the s-curve at
@@ -36,16 +41,24 @@ import graft.pipeline.Dedup
 object CorpusStreaming {
 
   private val ContentLaneBand = -1
+  /** The band index (LSH bands plus the content lane) and the segment index each carry
+    * one fixed schema, so reading them starts no schema-inference job. */
+  private[graft] val BandIndexSchema = "doc_id BIGINT, band INT, bh BIGINT"
+  private[graft] val SegmentIndexSchema = "h BIGINT, batch_id BIGINT"
 
   private def fs(spark: SparkSession, dir: String) =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Index rows for a batch: LSH bands + the content-hash lane (works on any Hadoop FS). */
-  private def indexRows(batch: DataFrame, bands: DataFrame): DataFrame =
-    bands.unionByName(batch.select(
-      col("doc_id"),
-      lit(ContentLaneBand).as("band"),
-      xxhash64(coalesce(col("text"), lit(""))).as("bh")))
+  /** The index at `dir` read with its fixed `schema`; None before the first append. */
+  private[graft] def readIndex(spark: SparkSession, dir: String,
+      schema: String): Option[DataFrame] =
+    if (fs(spark, dir).exists(new Path(dir))) Some(spark.read.schema(schema).parquet(dir))
+    else None
+
+  /** Index rows for docs (carrying their content hash `__ch`) and their LSH bands. */
+  private def indexRows(docs: DataFrame, bands: DataFrame): DataFrame =
+    bands.unionByName(docs.select(
+      col("doc_id"), lit(ContentLaneBand).as("band"), col("__ch").as("bh")))
 
   /**
    * One gate pass; also usable standalone for incremental BATCH ingestion. Returns the
@@ -53,53 +66,56 @@ object CorpusStreaming {
    * runs on the admitted frame BETWEEN the decision and the index append — sinks MUST go
    * through it (not after the call): output-first ordering is what makes a retry
    * duplicate rows instead of losing them.
+   *
+   * The batch is read once. The exact keep-min window runs on that read, and its
+   * survivors are pinned (`localCheckpoint`) with their content hash; their gram sets,
+   * their index rows (LSH bands + content lane) and, against an existing index, the ids
+   * that collide with it are pinned next. The pair graph, the admitted frame and the
+   * index append read only those pinned frames. Every frame the call pins, the
+   * connected-components labels included, is released before it returns; the returned
+   * admitted frame is the one checkpoint left, and it belongs to the caller.
    */
   def admitBatch(batch: DataFrame, indexDir: String, threshold: Double = 0.8,
       updateIndex: Boolean = true, persist: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
-    val g = Dedup.gramHashSets(batch).cache()
-    val bands = Dedup.lshBands(Dedup.minhashSignatures(g)).cache()
-    val allRows = indexRows(batch, bands)
-    val existing: Option[DataFrame] =
-      if (fs(spark, indexDir).exists(new Path(indexDir))) Some(spark.read.parquet(indexDir))
-      else None
-    val collided = existing match {
-      case Some(idx) => allRows.join(idx, Seq("band", "bh"), "left_semi")
-        .select(col("doc_id")).distinct()
-      case None => spark.emptyDataFrame.withColumn("doc_id", lit(0L)).limit(0)
-    }
-    val fresh = batch.join(collided, Seq("doc_id"), "left_anti")
-    // within-batch, same policy as Dedup.dedupedCorpus: exact keep-min first (catches
-    // gram-less short/empty docs), then verified near-dup components keep-min
-    val exactKeep = fresh
-      .withColumn("ch", xxhash64(coalesce(col("text"), lit(""))))
-      .withColumn("keeper", min(col("doc_id")).over(
-        org.apache.spark.sql.expressions.Window.partitionBy(col("ch"))))
-      .filter(col("doc_id") === col("keeper"))
-      .drop("ch", "keeper")
-    val freshIds = exactKeep.select(col("doc_id"))
-    val gFresh = g.join(freshIds, Seq("doc_id"), "left_semi")
-    val bandsFresh = bands.join(freshIds, Seq("doc_id"), "left_semi")
-    val intraDrop = Dedup.connectedComponents(
-        Dedup.minhashPairsFrom(gFresh, bandsFresh, threshold).select(col("a_id"), col("b_id")))
-      .filter(col("doc_id") =!= col("component"))
-      .select(col("doc_id"))
-    // MATERIALIZE the decision before the index grows: the admitted plan reads the index
-    // lazily, so without pinning, a caller evaluating the returned frame AFTER the append
-    // would see the batch's own bands and drop every doc as a collision with itself.
-    val admitted = exactKeep.join(intraDrop, Seq("doc_id"), "left_anti").localCheckpoint()
-    persist(admitted)
-    if (updateIndex) appendIndex(batch, bands, admitted, indexDir)
-    g.unpersist()
-    bands.unpersist()
-    admitted
+    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def pin(df: DataFrame): DataFrame = { val p = df.localCheckpoint(); checkpoints += p; p }
+    try {
+      // within-batch, same policy as Dedup.dedupedCorpus: exact keep-min first (catches
+      // gram-less short/empty docs), then verified near-dup components keep-min. The
+      // window runs first, on the one read of the batch: an exact duplicate shares its
+      // keeper's bands and content hash, so it collides with the index exactly when its
+      // keeper does, and nothing else needs its grams.
+      val kept = pin(batch.withColumn("__ch", xxhash64(coalesce(col("text"), lit(""))))
+        .withColumn("keeper", min(col("doc_id")).over(Window.partitionBy(col("__ch"))))
+        .filter(col("doc_id") === col("keeper"))
+        .drop("keeper"))
+      val g = pin(Dedup.gramHashSets(kept))
+      val lanes = pin(indexRows(kept, Dedup.lshBands(Dedup.minhashSignatures(g))))
+      // cross-batch: the kept docs whose band or content hash is already in the index
+      val collided = readIndex(spark, indexDir, BandIndexSchema).map(idx =>
+        pin(lanes.join(idx, Seq("band", "bh"), "left_semi").select(col("doc_id"))))
+      def fresh(df: DataFrame) = collided.fold(df)(c => df.join(c, Seq("doc_id"), "left_anti"))
+      val labels = Dedup.connectedComponents(Dedup.minhashPairsFrom(
+          fresh(g), fresh(lanes.filter(col("band") =!= ContentLaneBand)), threshold)
+        .select(col("a_id"), col("b_id")))
+      checkpoints += labels // its final round's checkpoint
+      // MATERIALIZE the decision before the index grows and before the frames it reads
+      // are released. `collided` is pinned for the same reason: read lazily after the
+      // append, the index would hold the batch's own rows and drop every doc as a
+      // collision with itself.
+      val admitted = fresh(kept)
+        .join(labels.filter(col("doc_id") =!= col("component")).select(col("doc_id")),
+          Seq("doc_id"), "left_anti")
+        .drop("__ch")
+        .localCheckpoint()
+      persist(admitted)
+      if (updateIndex)
+        lanes.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
+          .write.mode("append").parquet(indexDir)
+      admitted
+    } finally checkpoints.foreach(GraphOps.releaseCheckpoint)
   }
-
-  private def appendIndex(batch: DataFrame, bands: DataFrame, admitted: DataFrame,
-      indexDir: String): Unit =
-    indexRows(batch, bands)
-      .join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .write.mode("append").parquet(indexDir)
 
   /**
    * Compact the append-only index: per-batch appends accumulate one small file per batch
@@ -111,23 +127,24 @@ object CorpusStreaming {
    * promotion is rename-based — NOT atomic with concurrent writers, so run it from the
    * maintenance path while the ingest query is stopped (the discipline any file-format
    * compaction without a table format requires). If a crash lands between the two
-   * renames, the index survives intact at `<indexDir>.old` — restore by renaming back.
+   * renames, the index survives intact at `<indexDir>.old` — restore by renaming back;
+   * with no index at `indexDir` the call does nothing, so a rerun never deletes it.
    */
-  def compactIndex(spark: SparkSession, indexDir: String, targetFiles: Int = 8): Unit = {
-    val hfs = fs(spark, indexDir)
-    val dir = new Path(indexDir)
-    val tmp = new Path(indexDir + ".compact")
-    val bak = new Path(indexDir + ".old")
-    if (hfs.exists(tmp)) hfs.delete(tmp, true)
-    if (hfs.exists(bak)) hfs.delete(bak, true)
-    spark.read.parquet(indexDir)
-      .repartition(targetFiles, col("band"))
-      .sortWithinPartitions(col("band"), col("bh"))
-      .write.mode("overwrite").parquet(tmp.toString)
-    require(hfs.rename(dir, bak), s"could not move $indexDir aside")
-    require(hfs.rename(tmp, dir), s"could not promote $tmp; index preserved at $bak")
-    hfs.delete(bak, true)
-  }
+  def compactIndex(spark: SparkSession, indexDir: String, targetFiles: Int = 8): Unit =
+    readIndex(spark, indexDir, BandIndexSchema).foreach { idx =>
+      val hfs = fs(spark, indexDir)
+      val dir = new Path(indexDir)
+      val tmp = new Path(indexDir + ".compact")
+      val bak = new Path(indexDir + ".old")
+      if (hfs.exists(tmp)) hfs.delete(tmp, true)
+      if (hfs.exists(bak)) hfs.delete(bak, true)
+      idx.repartition(targetFiles, col("band"))
+        .sortWithinPartitions(col("band"), col("bh"))
+        .write.mode("overwrite").parquet(tmp.toString)
+      require(hfs.rename(dir, bak), s"could not move $indexDir aside")
+      require(hfs.rename(tmp, dir), s"could not promote $tmp; index preserved at $bak")
+      hfs.delete(bak, true)
+    }
 
   /** Wire the gate onto a stream: admitted rows land in `outDir` BEFORE the band index
     * grows in `indexDir` (retries duplicate output, never lose it), one gate pass per
@@ -170,12 +187,12 @@ object CorpusStreaming {
       persist: DataFrame => Unit = _ => ()): DataFrame = {
     val spark = batch.sparkSession
     val segs = Dedup.segmentedDocs(batch, k).withColumn("h", xxhash64(col("seg")))
-    val fresh = (
-      if (fs(spark, indexDir).exists(new Path(indexDir))) {
-        val idx0 = spark.read.parquet(indexDir)
+    val fresh = (readIndex(spark, indexDir, SegmentIndexSchema) match {
+      case Some(idx0) =>
         val idx = if (batchId >= 0) idx0.filter(col("batch_id") =!= batchId) else idx0
         segs.join(idx.select(col("h")), Seq("h"), "left_anti")
-      } else segs).cache()
+      case None => segs
+    }).cache()
     val out = Dedup.reassembleSegments(batch, fresh, k).localCheckpoint()
     persist(out)
     if (updateIndex)

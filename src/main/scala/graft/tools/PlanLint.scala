@@ -41,7 +41,6 @@ object PlanLint {
     "dedup_embedding_exact", // the O(n²) oracle twin (crossJoin + filter lowers to BNLJ)
     "ann_quantized", "ann_rrf", // bounded query-set frames re-ranked per corpus row
     "dedup_semantic_fixed", // broadcast fixed-centroid frame
-    "q_kmeans", // k centroids re-broadcast per iteration (k fixed by the algorithm)
     "text_nb_lang", // class-cardinality totals frame (|languages| rows)
     // distributedCumSum's carry frame: a triangular non-equi self-join over the
     // one-row-PER-PARTITION totals (<= numRanges = 32 rows) — bounded by the

@@ -2,7 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.CorpusStreaming
@@ -85,6 +89,101 @@ class CorpusStreamingSpec extends AnyFunSuite {
     val admitted = CorpusStreaming.admitBatch(b2, indexDir)
       .select("doc_id").collect().map(_.getLong(0)).toSet
     assert(admitted == Set(4L), s"got $admitted")
+  }
+
+  test("one batch mixing every gate path admits exactly the novel docs and indexes them") {
+    import spark.implicits._
+    val indexDir = Files.createTempDirectory("graft_ingest_m").toString + "/index"
+    val b1 = Seq[(Long, String)](
+      (1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+      (2L, "hello world")).toDF("doc_id", "text")
+    assert(CorpusStreaming.admitBatch(b1, indexDir).count() == 2)
+    def indexRows(): Set[(Long, Int, Long)] = spark.read.parquet(indexDir)
+      .select("doc_id", "band", "bh").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+    val before = indexRows()
+    // a near-dup chain: J(15,16) = J(16,17) = 0.87 but J(15,17) = 0.75, so only
+    // connected components puts 17 with 15
+    val chainA = "river stone maple cedar harbor lantern meadow copper willow falcon " +
+      "granite orchard thistle beacon canyon ember glacier hollow juniper kestrel " +
+      "lagoon marble nettle opal prairie quarry rowan saffron"
+    val b2 = Seq[(Long, String)](
+      (11L, "alpha beta gamma delta epsilon zeta eta theta iota lambda"), // bands hit doc 1
+      (12L, "hello world"), // content lane hits doc 2
+      (13L, "one two three four five six seven eight nine ten"),
+      (14L, "one two three four five six seven eight nine ten"), // exact dup of 13
+      (15L, s"$chainA tundra umber"),
+      (16L, s"$chainA violet walnut"),
+      (17L, s"xenon yarrow ${chainA.split(" ").drop(2).mkString(" ")} violet walnut"),
+      (18L, null), // null text: content lane of the empty string
+      (19L, "hi there"), // short: no bands, content lane only
+      (20L, "fresh words entirely unlike anything admitted before today"))
+      .toDF("doc_id", "text")
+    val admitted = CorpusStreaming.admitBatch(b2, indexDir)
+      .select("doc_id").collect().map(_.getLong(0)).toSet
+    assert(admitted == Set(13L, 15L, 18L, 19L, 20L), s"got $admitted")
+
+    val grown = indexRows() -- before
+    assert(indexRows().size == before.size + grown.size, "the index only grows")
+    val contentHash = b2.select(col("doc_id"), xxhash64(coalesce(col("text"), lit(""))))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val shingled = Set(13L, 15L, 20L) // >= 3 tokens: 32 LSH bands each
+    assert(grown.size == 32 * shingled.size + admitted.size, s"grew by ${grown.size} rows")
+    grown.groupBy(_._1).foreach { case (id, rows) =>
+      assert(admitted(id), s"index rows for non-admitted doc $id")
+      assert(rows.filter(_._2 == -1).map(_._3) == Set(contentHash(id)), s"content lane of $id")
+      val bands = rows.map(_._2) - -1
+      assert(bands == (if (shingled(id)) (0 until 32).toSet else Set.empty[Int]), s"bands of $id")
+    }
+    assert(grown.map(_._1) == admitted)
+  }
+
+  test("admitBatch leaves only its admitted frame persisted") {
+    import spark.implicits._
+    val indexDir = Files.createTempDirectory("graft_ingest_l").toString + "/index"
+    def checkpointIds(df: DataFrame): Set[Int] =
+      df.queryExecution.logical.collect { case r: LogicalRDD => r.rdd.id }.toSet
+    val chain = "river stone maple cedar harbor lantern meadow copper willow falcon " +
+      "granite orchard thistle beacon canyon ember glacier hollow juniper kestrel " +
+      "lagoon marble nettle opal prairie quarry rowan saffron"
+    val batches = Seq(
+      Seq((1L, s"$chain tundra umber"), (2L, s"$chain violet walnut"), // verified pair
+        (3L, "one two three four five six seven eight nine ten")) -> Set(1L, 3L),
+      Seq((4L, "one two three four five six seven eight nine ten"), // content lane hit
+        (5L, "fresh words entirely unlike anything admitted before today"),
+        (6L, "hi there")) -> Set(5L, 6L))
+    // the first batch runs with no index, the second against the first one's
+    for (((rows, expected), i) <- batches.zipWithIndex) {
+      var admitted: DataFrame = null
+      val left = SparkTestBase.persistedLeftBy {
+        admitted = CorpusStreaming.admitBatch(rows.toDF("doc_id", "text"), indexDir)
+      }
+      assert(left.toSet == checkpointIds(admitted), s"batch $i left ${left.toSet}")
+      val ids = admitted.select("doc_id").collect().map(_.getLong(0)).toSet
+      assert(ids == expected, s"batch $i admitted $ids")
+    }
+  }
+
+  test("reading the band and segment indexes starts no job") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft_ingest_j").toString
+    val docs = Seq((1L, "alpha beta gamma delta epsilon zeta eta theta iota kappa"))
+      .toDF("doc_id", "text")
+    CorpusStreaming.admitBatch(docs, s"$dir/bands").count()
+    CorpusStreaming.admitSegmentsBatch(docs, s"$dir/segs", k = 2).count()
+    val sc = spark.sparkContext
+    for ((index, schema) <- Seq("bands" -> CorpusStreaming.BandIndexSchema,
+        "segs" -> CorpusStreaming.SegmentIndexSchema)) {
+      val path = s"$dir/$index"
+      var read: Option[DataFrame] = None
+      assert(JobCounter.count(sc) { read = CorpusStreaming.readIndex(spark, path, schema) } == 0)
+      // inferring the schema instead, as a bare read does, is one job
+      var inferred: DataFrame = null
+      assert(JobCounter.count(sc) { inferred = spark.read.parquet(path) } == 1)
+      assert(read.get.schema.map(_.name) == inferred.schema.map(_.name))
+      assert(read.get.collect().toSet == inferred.collect().toSet, index)
+    }
+    assert(CorpusStreaming.readIndex(spark, s"$dir/none", CorpusStreaming.BandIndexSchema).isEmpty)
   }
 
   test("segment gate dedups across batches, within batches, and over a live stream") {

@@ -59,6 +59,65 @@ class SpatialMlSpec extends AnyFunSuite {
     assert(out.map(_.toSeq).toSeq == again.map(_.toSeq).toSeq) // bit-stable rerun
   }
 
+  /** Lloyd's k-means the way q_kmeans defines it, in plain Scala: quantize to
+    * floor(x * 1000), centroids start at vec_id < k, nearest centroid by (dist, cid),
+    * integer-mean update (empty clusters keep their center). Rows are (cid, n,
+    * inertia, centroid_sum) by cid. */
+  private def kmeansReference(emb: Seq[(Long, Seq[Float])], k: Int,
+      rounds: Int): Seq[(Long, Long, Long, Long)] = {
+    val vecs = emb.map { case (id, e) => id -> e.map(x => math.floor(x.toDouble * 1000.0).toLong) }
+    def dist(a: Seq[Long], b: Seq[Long]) = a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+    def assign(cents: Seq[(Long, Seq[Long])]) = vecs.map { case (id, q) =>
+      val (d, cid) = cents.map { case (c, ce) => (dist(q, ce), c) }.min
+      (id, q, cid, d)
+    }
+    var cents = vecs.filter(_._1 < k).sortBy(_._1)
+    for (_ <- 1 to rounds) {
+      val a = assign(cents)
+      cents = cents.map { case (cid, ce) =>
+        val mine = a.filter(_._3 == cid).map(_._2)
+        if (mine.isEmpty) cid -> ce
+        else cid -> ce.indices.map(p => math.floor(mine.map(_(p)).sum.toDouble / mine.size).toLong)
+      }
+    }
+    assign(cents).groupBy(_._3).toSeq.map { case (cid, g) =>
+      (cid, g.size.toLong, g.map(_._4).sum, cents.find(_._1 == cid).get._2.sum)
+    }.sortBy(_._1)
+  }
+
+  private def kmeansRows(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+
+  private def embeddingRows(dir: String): Seq[(Long, Seq[Float])] =
+    graft.sources.TableIO.embeddings(spark, dir).select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
+
+  test("q_kmeans leaves nothing cached and equals a plain-Scala Lloyd's reference") {
+    spark.catalog.clearCache()
+    var out: Seq[(Long, Long, Long, Long)] = Nil
+    val left = SparkTestBase.persistedLeftBy { out = kmeansRows(Clustering.qKmeans(spark, sf)) }
+    assert(left.isEmpty, s"persisted RDDs left: $left")
+    assert(spark.sharedState.cacheManager.isEmpty, "the quantized frame stayed cached")
+    assert(out == kmeansReference(embeddingRows(sf), 8, 2))
+  }
+
+  test("q_kmeans after an external rewrite of embeddings.parquet reads the new rows") {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft_kmeans").toString
+    val all = graft.sources.TableIO.embeddings(spark, sf)
+    all.write.parquet(s"$dir/embeddings.parquet")
+    val first = kmeansRows(Clustering.qKmeans(spark, dir))
+    // another writer replaces the table's files: half the vectors, same path
+    all.filter(col("vec_id") < all.count() / 2).write.parquet(s"$dir/stage")
+    val table = Paths.get(s"$dir/embeddings.parquet")
+    Files.walk(table).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    Files.move(Paths.get(s"$dir/stage"), table)
+    val second = kmeansRows(Clustering.qKmeans(spark, dir))
+    val expected = kmeansReference(embeddingRows(dir), 8, 2)
+    assert(expected.map(_._2).sum * 2 <= first.map(_._2).sum)
+    assert(second == expected, s"stale: $second")
+  }
+
   test("sq_dist_long equals a plain-Scala squared distance, null on length mismatch") {
     import spark.implicits._
     import org.apache.spark.sql.graft.VectorExpressions.sqDistLong
