@@ -25,20 +25,19 @@ import org.apache.spark.sql.SparkSession
  * `n_single_exec`) so the suite finishes inside the driver's timeout.
  */
 object Bench {
-  /** Execute the FULL plan. `count()` would let Catalyst prune every final projection
-    * (pure-projection queries would time nothing); the noop sink runs each operator and
-    * expression end-to-end and discards rows executor-side — no driver collect. */
-  private def exec(df: org.apache.spark.sql.DataFrame): Unit =
-    df.write.format("noop").mode("overwrite").save()
-
-  /** Per-query isolation: `catalog.clearCache` drops DataFrame-level caches, but the
-    * iterative operators (pageRank/bfs/labelPropagation/sssp/triangles) pin RDD-level
-    * `localCheckpoint` blocks the catalog does not know about. Left in place they
+  /** Build `df` and execute its FULL plan; returns the seconds both took. `count()`
+    * would let Catalyst prune every final projection (pure-projection queries would time
+    * nothing); the noop sink runs each operator and expression end-to-end and discards
+    * rows executor-side — no driver collect. Then, untimed, free the pins the frame still
+    * reads (`Pins.release`; every operator frees the rest itself): pins left in place
     * accumulate across the suite and degrade later queries' block-manager behavior
-    * (q_pagerank measured 13.8 s in-suite vs 3.0 s isolated before this was dropped). */
-  private def clearAllPersisted(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+    * (q_pagerank measured 13.8 s in-suite vs 3.0 s isolated when they did), so a leak
+    * shows up in the sweep instead of being wiped. */
+  private def exec(df: => org.apache.spark.sql.DataFrame): Double = {
+    val t0 = System.nanoTime()
+    val frame = df
+    try { frame.write.format("noop").mode("overwrite").save(); (System.nanoTime() - t0) / 1e9 }
+    finally Pins.release(frame)
   }
 
   /** Queries that get a per-name entry in the emitted JSON (the rest aggregate into
@@ -162,20 +161,13 @@ object Bench {
       val singleExec = elapsedSec > budgetSec
       if (singleExec) nSingleExec += 1
       val t = try {
-        if (!singleExec) {
-          exec(fn(spark, sfDir)) // untimed warm-up: plan + codegen compile
-          // Clear cached intermediates so (a) the timed run honestly pays for materializing
-          // its own cached frames (dedup/minhash pipelines cache the gram frame by design)
-          // and (b) queries are isolated — in round 2 the suite's caches were never dropped,
-          // and accumulated cached relations evicted each other: the driver measured
-          // dedup_ngram_jaccard at 23 s under that pressure vs 6 s in isolation.
-          clearAllPersisted(spark)
-        }
-        val t0 = System.nanoTime()
+        // The warm-up's pins are freed, so the timed run pays for materializing its own
+        // cached frames (the gram frame of the dedup pipelines): in round 2 the suite's
+        // caches were never dropped, and accumulated cached relations evicted each other
+        // (dedup_ngram_jaccard measured 23 s under that pressure vs 6 s in isolation).
+        if (!singleExec) exec(fn(spark, sfDir)) // untimed warm-up: plan + codegen compile
         exec(fn(spark, sfDir)) // timed execution (steady-state unless past budget)
-        (System.nanoTime() - t0) / 1e9
       } catch { case _: Throwable => -1.0 }
-      finally clearAllPersisted(spark)
       acc(name) = t
       if (qIdx % 25 == 0) { System.out.println(partialLine()); System.out.flush() }
     }

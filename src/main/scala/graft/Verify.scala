@@ -17,18 +17,14 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSet)
     def keep(name: String): Boolean = only.forall(_.exists(name.contains))
     SparkEntry.queries.filter { case (n, _) => keep(n) }.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      // Each operator frees the pins its result does not read; the frame's own are
+      // freed once it is written, so pins do not accumulate across the suite (as Bench).
+      try {
+        val frame = fn(spark, sfDir)
+        try frame.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        finally Pins.release(frame)
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // Drop cached intermediates between queries — accumulated caches from 120 queries
-      // otherwise thrash the block manager (round-2 lesson, same fix as Bench). RDD-level
-      // localCheckpoint blocks from the iterative graph operators are invisible to the
-      // catalog and must be dropped explicitly.
-      finally {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

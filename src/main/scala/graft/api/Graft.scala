@@ -3,6 +3,7 @@ package graft.api
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
+import graft.Pins
 import graft.operators.{AsOfJoin, RangeJoin, SkewJoin}
 import graft.pipeline.{Dedup, FeatureStats, Linkage, Profiling, Sampling, Similarity, TextAnalysis, TextRetrieval}
 
@@ -17,6 +18,11 @@ import graft.pipeline.{Dedup, FeatureStats, Linkage, Profiling, Sampling, Simila
  * Expected schemas: text ops take (doc_id: Long, text: String, ...); vector ops take
  * (vec_id: Long, embedding: Array[Float]) with queries as (query_id, embedding). Extra
  * columns pass through where the op returns rows of the input.
+ *
+ * Pins: an operator frees every checkpoint and cache its result does not read. A
+ * returned frame that still reads one (the cached gram frame of [[ngramJaccardPairs]],
+ * the last checkpoint of an iterative operator) belongs to the caller: run it, then
+ * free it with `graft.Pins.release(frame)`.
  */
 object Graft {
 
@@ -39,19 +45,18 @@ object Graft {
 
   /** Exact n-gram-Jaccard pairs via bounded candidate generation (equals exhaustive).
     * The gram frame is cached (MEMORY_AND_DISK, LRU-evicted under pressure) because it
-    * feeds both candidate generation and intersection counting; a long-running service
-    * should materialize the result and unpersist via spark.catalog.clearCache() between
-    * requests — the returned lazy frame cannot safely unpersist its own input. */
+    * feeds both candidate generation and intersection counting; the returned frame
+    * reads it, so free it with `Pins.release` once the frame has run. */
   def ngramJaccardPairs(docs: DataFrame, threshold: Double = 0.5): DataFrame =
-    Dedup.ngramJaccardPairs(Dedup.gramHashSets(docsFrame(docs)).cache(), threshold)
+    Dedup.ngramJaccardPairs(Pins.cache(Dedup.gramHashSets(docsFrame(docs))), threshold)
 
   /** SimHash pairs within a hamming radius (64-bit signatures, pigeonhole-banded). */
   def simhashPairs(docs: DataFrame, maxHamming: Int = 7): DataFrame =
     Dedup.simhashPairs(docsFrame(docs), maxHamming)
 
   /** Cluster id per document appearing in a near-dup pair (connected components). */
-  def nearDupClusters(docs: DataFrame, threshold: Double = 0.8): DataFrame =
-    Dedup.connectedComponents(nearDupPairs(docs, threshold).select(col("a_id"), col("b_id")))
+  def nearDupClusters(docs: DataFrame, threshold: Double = 0.8): DataFrame = Pins.scoped(
+    Dedup.connectedComponents(nearDupPairs(docs, threshold).select(col("a_id"), col("b_id"))))
 
   /** The deduplicated corpus: exact dups keep min doc_id, near-dup clusters keep one
     * representative. Returns the KEPT input rows with all their columns. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.sources.TableIO
 
 /**
@@ -286,15 +287,15 @@ object AnalyticsOps {
    * window, so the segmentation runs at any customer cardinality.
    */
   def qRfm(spark: SparkSession, dir: String): DataFrame = {
-    // localCheckpoint: the customer aggregate feeds the count action plus three rank
-    // passes (each of which also samples for its range partitioner) — materialize it
-    // once and truncate lineage so the orders scan+groupBy runs exactly once
-    val base = TableIO.orders(spark, dir)
+    // checkpoint: the customer aggregate feeds the count action plus three rank passes
+    // (each of which also samples for its range partitioner) — materialize it once and
+    // truncate lineage so the orders scan+groupBy runs exactly once. The result reads
+    // it, so it is the caller's to `Pins.release`.
+    val base = Pins.checkpoint(TableIO.orders(spark, dir)
       .groupBy(col("o_custkey"))
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("freq"),
-        sum(col("o_totalprice").cast("decimal(18,2)")).as("monetary"))
-      .localCheckpoint()
+        sum(col("o_totalprice").cast("decimal(18,2)")).as("monetary")))
     val n = base.count()
     val r = scoreTile(base, Seq(col("last_order"), col("o_custkey")), 5, n, "r_score")
     val f = scoreTile(r, Seq(col("freq"), col("o_custkey")), 5, n, "f_score")
@@ -337,14 +338,14 @@ object AnalyticsOps {
    * The distinct (okey, item) basket frame feeds FOUR consumers — both self-join
    * sides, the item support count, and the basket total — and without materialization
    * each one re-runs the lineitem scan + the m-row distinct exchange (ReuseExchange
-   * only dedups the two identically-keyed join sides). localCheckpoint materializes it
-   * once; eager like qRfm's base (r14, adopted in bench_dedup_r14.json).
+   * only dedups the two identically-keyed join sides). A checkpoint materializes it
+   * once; eager like qRfm's base (r14, adopted in bench_dedup_r14.json), and like it
+   * the caller's to `Pins.release`.
    */
   def qBasketLift(spark: SparkSession, dir: String, k: Int = 20,
       minSupport: Long = 3): DataFrame = {
-    val items = TableIO.lineitem(spark, dir)
-      .select(col("l_orderkey").as("okey"), col("l_partkey").as("item")).distinct()
-      .localCheckpoint()
+    val items = Pins.checkpoint(TableIO.lineitem(spark, dir)
+      .select(col("l_orderkey").as("okey"), col("l_partkey").as("item")).distinct())
     val supp = items.groupBy(col("item")).agg(count(lit(1)).as("c"))
     val nBaskets = items.select(col("okey")).distinct().agg(count(lit(1)).as("n"))
     val pairs = items.as("a")

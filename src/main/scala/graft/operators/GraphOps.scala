@@ -1,18 +1,25 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.sources.TableIO
 
 /**
  * Iterative graph analytics beyond connected components: fixed-iteration PageRank —
  * the GraphX/Pregel capability class expressed as pure DataFrame iteration, the same
  * large-scale shape as Dedup.connectedComponents: edges pre-partitioned + cached on the
- * join key, ONE shuffle per iteration (the contribution groupBy), localCheckpoint each
- * round so the logical plan and Catalyst re-analysis cost stay O(1) in iterations, and
- * the driver loops over ITERATIONS, never rows.
+ * join key, ONE shuffle per iteration (the contribution groupBy), checkpoint each round
+ * so the logical plan and Catalyst re-analysis cost stay O(1) in iterations, and the
+ * driver loops over ITERATIONS, never rows.
+ *
+ * Pins: an operator here frees every pin its result does not read ([[graft.Pins]]). A
+ * superseded round's checkpoint is released once its successor is materialized; the
+ * cached adjacency and the rest go when the operator's `Pins.scoped` block returns. A
+ * result that still reads a pin (the last round's checkpoint, triangleCount's edge and
+ * adjacency checkpoints) belongs to the caller, who frees it with `Pins.release` once
+ * the frame has run.
  *
  * PageRank is run to a FIXED iteration count (not convergence) so the result is exactly
  * replayable: the DuckDB oracle unrolls the same three power-iteration steps as chained
@@ -62,38 +69,34 @@ object GraphOps {
    * so the cluster-scale path keeps the r12 push iteration unchanged.
    */
   private[graft] def pageRankImpl(edges: DataFrame, iterations: Int, damping: Double,
-      pull: Boolean): DataFrame = {
+      pull: Boolean): DataFrame = Pins.scoped {
     import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
-    val adj = edges.select(col("src"), col("dst"))
+    val adj = Pins.cache(edges.select(col("src"), col("dst"))
       .groupBy(col("src")).agg(sort_array(collect_set(col("dst"))).as("ds"))
-      .select(col("src"), packSortedVarint(col("ds")).as("nbrs"), size(col("ds")).as("deg"))
-      .cache()
+      .select(col("src"), packSortedVarint(col("ds")).as("nbrs"), size(col("ds")).as("deg")))
     // one row per vertex (symmetric edges: every node has out-degree >= 1)
     val n = adj.count()
     val smallRanks = n <= 2000000L
     if (pull && smallRanks) {
-      var ranks = adj
+      var ranks = Pins.checkpoint(adj
         .select(col("src").as("id"), lit(1.0 / n).as("pr"),
-          (lit(1.0 / n) / col("deg")).as("c"))
-        .localCheckpoint()
+          (lit(1.0 / n) / col("deg")).as("c")))
       var it = 0
       while (it < iterations) {
         val contribSide = broadcast(ranks.select(col("id").as("nbr"), col("c")))
-        val next = adj
+        val next = Pins.checkpoint(adj
           .select(col("src"), col("deg"), explode(unpackSortedVarint(col("nbrs"))).as("nbr"))
           .join(contribSide, Seq("nbr"))
           .groupBy(col("src"), col("deg"))
           .agg((lit((1.0 - damping) / n) + lit(damping) * sum(col("c"))).as("pr"))
-          .select(col("src").as("id"), col("pr"), (col("pr") / col("deg")).as("c"))
-          .localCheckpoint()
-        releaseCheckpoint(ranks)
+          .select(col("src").as("id"), col("pr"), (col("pr") / col("deg")).as("c")))
+        Pins.release(ranks)
         ranks = next
         it += 1
       }
-      adj.unpersist()
       ranks.select(col("id"), col("pr"))
     } else {
-      var ranks = adj.select(col("src").as("id"), lit(1.0 / n).as("pr")).localCheckpoint()
+      var ranks = Pins.checkpoint(adj.select(col("src").as("id"), lit(1.0 / n).as("pr")))
       var it = 0
       while (it < iterations) {
         val rankSide = ranks.withColumnRenamed("id", "src")
@@ -101,14 +104,12 @@ object GraphOps {
           .join(if (smallRanks) broadcast(rankSide) else rankSide, Seq("src"))
           .select(explode(unpackSortedVarint(col("nbrs"))).as("id"),
             (col("pr") / col("deg")).as("c"))
-        val next = contribs.groupBy(col("id"))
-          .agg((lit((1.0 - damping) / n) + lit(damping) * sum(col("c"))).as("pr"))
-          .localCheckpoint()
-        releaseCheckpoint(ranks)
+        val next = Pins.checkpoint(contribs.groupBy(col("id"))
+          .agg((lit((1.0 - damping) / n) + lit(damping) * sum(col("c"))).as("pr")))
+        Pins.release(ranks)
         ranks = next
         it += 1
       }
-      adj.unpersist()
       ranks
     }
   }
@@ -182,7 +183,7 @@ object GraphOps {
    * Multi-source BFS: minimum hop distance from any seed, bounded at `maxHops`.
    * Same iterative discipline as pageRank/connectedComponents: edges cached and
    * pre-partitioned on the join key, per round ONE join + distinct + anti-join (all
-   * shuffles on the node id), localCheckpoint keeps the plan O(1) in rounds, the driver
+   * shuffles on the node id), a checkpoint keeps the plan O(1) in rounds, the driver
    * loops over ROUNDS (with an early exit when the frontier drains), never rows.
    * The frontier-based formulation ships only NEWLY reached nodes each round — at
    * 100 TB the per-round work decays with the frontier instead of rescanning the
@@ -190,7 +191,7 @@ object GraphOps {
    *
    * `edges`: directed (src, dst), multi-edges fine; `seeds`: (id). Returns (id, hop).
    */
-  def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = {
+  def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = Pins.scoped {
     import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
     // r12: packed adjacency (the pageRank treatment) — one cached row per vertex,
     // multi-edges collapsed by the set build, neighbor ids re-materializing only
@@ -199,37 +200,31 @@ object GraphOps {
     // 2-hop frontier grows to nearly the whole vertex set, so broadcasting it lost
     // (bench_frontier_gate_r13.json); pulling onto the adjacency's partitioning lost
     // too (bench_graph_pull_r14.json) and would only be sound on symmetric input.
-    val adj = edges.select(col("src"), col("dst"))
+    val adj = Pins.cache(edges.select(col("src"), col("dst"))
       .groupBy(col("src"))
-      .agg(packSortedVarint(sort_array(collect_set(col("dst")))).as("nbrs"))
-      .cache()
-    var visited = seeds.select(col("id")).distinct()
-      .select(col("id"), lit(0).as("hop")).localCheckpoint()
+      .agg(packSortedVarint(sort_array(collect_set(col("dst")))).as("nbrs")))
+    var visited = Pins.checkpoint(seeds.select(col("id")).distinct()
+      .select(col("id"), lit(0).as("hop")))
     var frontier = visited.select(col("id"))
-    // the checkpoint `frontier` reads after round 1, released once the round that
-    // reads it has materialized its successor
-    var held: Option[DataFrame] = None
     var h = 1
     var drained = false
     while (h <= maxHops && !drained) {
-      val next = frontier.withColumnRenamed("id", "src")
+      val next = Pins.checkpoint(frontier.withColumnRenamed("id", "src")
         .join(adj, Seq("src"))
         .select(explode(unpackSortedVarint(col("nbrs"))).as("id")).distinct()
         .join(visited, Seq("id"), "left_anti")
-        .select(col("id"), lit(h).as("hop")).localCheckpoint()
-      held.foreach(releaseCheckpoint)
-      held = Some(next)
+        .select(col("id"), lit(h).as("hop")))
       drained = next.isEmpty
       if (!drained) {
-        val grown = visited.unionByName(next).localCheckpoint()
-        releaseCheckpoint(visited)
+        val grown = Pins.checkpoint(visited.unionByName(next))
+        // both superseded checkpoints (one frame in round 1) are read by nothing left
+        Pins.release(frontier)
+        Pins.release(visited)
         visited = grown
         frontier = next.select(col("id"))
       }
       h += 1
     }
-    held.foreach(releaseCheckpoint)
-    adj.unpersist()
     visited
   }
 
@@ -238,14 +233,14 @@ object GraphOps {
    * bounded at 2 hops. Pure integer arithmetic — the DuckDB oracle unrolls the two
    * frontier steps as CTEs and must hash-match exactly.
    *
-   * One localCheckpoint of the edge list feeds both the seeds action and the adjacency
+   * One checkpoint of the edge list feeds both the seeds action and the adjacency
    * build, which otherwise each re-run the co-purchase lineage (adopted in
    * bench_graph_prologue_r13.json). No repartition here: bfs's adjacency groupBy(src)
    * is the only m-row aggregate downstream and its collect_set partial-aggregates
    * map-side — a pre-shuffle by src would trade that combine away for nothing.
    */
-  def qBfs(spark: SparkSession, dir: String): DataFrame = {
-    val edges = coPurchaseEdges(spark, dir).localCheckpoint()
+  def qBfs(spark: SparkSession, dir: String): DataFrame = Pins.scoped {
+    val edges = Pins.checkpoint(coPurchaseEdges(spark, dir))
     val seeds = edges.select(col("src").as("id"))
       .filter(col("id") % 97 === 0).distinct()
     bfs(edges, seeds, maxHops = 2)
@@ -327,15 +322,14 @@ object GraphOps {
     // localCheckpoint: the oriented edge list feeds THREE consumers (the edge stream and
     // both adjacency joins) — without materialization Spark re-derives the whole
     // scan+groupBy+distinct lineage once per consumer (measured 3x the work at sf0.1).
-    val oriented = und
+    val oriented = Pins.checkpoint(und
       .join(deg.select(col("id").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), Seq("v"))
       .select(when(uFirst, col("u")).otherwise(col("v")).as("a"),
         when(uFirst, col("v")).otherwise(col("u")).as("b"))
       // explicit partition count: an un-numbered repartition is itself
       // AQE-coalescible, which would undo the spread (see Scaladoc)
-      .repartition(edges.sparkSession.sparkContext.defaultParallelism * 2, col("a"), col("b"))
-      .localCheckpoint()
+      .repartition(edges.sparkSession.sparkContext.defaultParallelism * 2, col("a"), col("b")))
     // Scale-adaptive broadcast off the ALREADY-MATERIALIZED edge count (free on the
     // checkpointed RDD): the packed adjacency frame holds exactly m delta-varints
     // (≤3 B each for ids under 2^21) plus one key row per vertex, so m ≤ 32M bounds the
@@ -352,7 +346,7 @@ object GraphOps {
     // edge set (two broadcast builds on the small path; twice the heaviest aggregation
     // on the billion-edge partitioned path). The packed frame is m varints + n keys —
     // the cheapest plan node in the job to persist.
-    val adj = adj0.localCheckpoint()
+    val adj = Pins.checkpoint(adj0)
     val adjSide = if (smallAdj) broadcast(adj) else adj
     // An edge whose head has no out-neighbors closes no triangle — the inner join
     // dropping it is correct, not a loss.
@@ -416,7 +410,7 @@ object GraphOps {
    * rides a `max(struct(cnt, -label))` so no per-node sort or window appears. Past
    * the 2M gate: one vote-count shuffle + one argmax shuffle per round (the r12 push
    * form). Same iterative discipline as pageRank: edges cached + pre-partitioned on
-   * the join key, localCheckpoint per round, driver loops over ROUNDS never rows.
+   * the join key, checkpoint per round, driver loops over ROUNDS never rows.
    *
    * `edges` must be symmetric (src, dst); multi-edges are deduplicated. Returns
    * (id, label) after `rounds` rounds.
@@ -441,25 +435,24 @@ object GraphOps {
    * unchanged. Pull was adopted in bench_graph_pull_r14.json.
    */
   private[graft] def labelPropagationImpl(edges: DataFrame, rounds: Int,
-      pull: Boolean): DataFrame = {
+      pull: Boolean): DataFrame = Pins.scoped {
     import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
     // r12: packed adjacency (the pageRank treatment) — the set build's one shuffle
     // now emits ONE row per vertex with the neighbor set in delta-varint binary
     // (~1.5 B/neighbor) instead of re-exploding to m cached rows; ids re-materialize
     // only inside the per-round map-side explode. The votes shuffle (push form)
     // carries combiner-reduced (dst, label, cnt) rows either way.
-    val adj = edges.select(col("src"), col("dst"))
+    val adj = Pins.cache(edges.select(col("src"), col("dst"))
       .groupBy(col("src"))
-      .agg(packSortedVarint(sort_array(collect_set(col("dst")))).as("nbrs"))
-      .cache()
+      .agg(packSortedVarint(sort_array(collect_set(col("dst")))).as("nbrs")))
     // Same scale-adaptive broadcast as pageRank: one row per vertex, count populates
     // the cache — broadcast the label frame per round when small, shuffle past it.
     val smallLabels = adj.count() <= 2000000L
-    var labels = adj.select(col("src").as("id"))
-      .select(col("id"), col("id").as("label")).localCheckpoint()
+    var labels = Pins.checkpoint(adj.select(col("src").as("id"))
+      .select(col("id"), col("id").as("label")))
     var r = 0
     while (r < rounds) {
-      val next = if (pull && smallLabels) {
+      val next = Pins.checkpoint(if (pull && smallLabels) {
         val labelSide = broadcast(labels.select(col("id").as("nbr"), col("label")))
         val votes = adj
           .select(col("src"), explode(unpackSortedVarint(col("nbrs"))).as("nbr"))
@@ -469,7 +462,6 @@ object GraphOps {
           .groupBy(col("src"))
           .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
           .select(col("src").as("id"), (-col("m.nl")).as("label"))
-          .localCheckpoint()
       } else {
         val labelSide = labels.withColumnRenamed("id", "src")
         val votes = adj.join(if (smallLabels) broadcast(labelSide) else labelSide, Seq("src"))
@@ -479,13 +471,11 @@ object GraphOps {
           .groupBy(col("dst"))
           .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
           .select(col("dst").as("id"), (-col("m.nl")).as("label"))
-          .localCheckpoint()
-      }
-      releaseCheckpoint(labels)
+      })
+      Pins.release(labels)
       labels = next
       r += 1
     }
-    adj.unpersist()
     labels
   }
 
@@ -562,13 +552,13 @@ object GraphOps {
    * path on small inputs.
    */
   private[graft] def ssspImpl(
-      edges: DataFrame, sources: DataFrame, rounds: Int, gateFrontier: Boolean): DataFrame = {
-    val adj = edges.select(col("src"), struct(col("dst"), col("w")).as("e"))
-      .groupBy(col("src")).agg(collect_list(col("e")).as("nbrs"))
-      .cache()
+      edges: DataFrame, sources: DataFrame, rounds: Int, gateFrontier: Boolean): DataFrame =
+      Pins.scoped {
+    val adj = Pins.cache(edges.select(col("src"), struct(col("dst"), col("w")).as("e"))
+      .groupBy(col("src")).agg(collect_list(col("e")).as("nbrs")))
     val smallFrontier = gateFrontier && adj.count() <= 2000000L
-    var dist = sources.select(col("id")).distinct()
-      .select(col("id"), lit(0L).as("dist")).localCheckpoint()
+    var dist = Pins.checkpoint(sources.select(col("id")).distinct()
+      .select(col("id"), lit(0L).as("dist")))
     var frontier = dist
     var r = 0
     var drained = false
@@ -578,24 +568,22 @@ object GraphOps {
         .join(adj, Seq("src"))
         .select(explode(col("nbrs")).as("e"), col("dist"))
         .select(col("e.dst").as("id"), (col("dist") + col("e.w")).as("dist"))
-      val next = dist.unionByName(relax)
-        .groupBy(col("id")).agg(min(col("dist")).as("dist"))
-        .localCheckpoint()
+      val next = Pins.checkpoint(dist.unionByName(relax)
+        .groupBy(col("id")).agg(min(col("dist")).as("dist")))
       // delta iteration: only nodes whose distance IMPROVED this round can improve a
       // neighbor next round
-      val improved = next.join(dist.withColumnRenamed("dist", "old"), Seq("id"), "left")
-        .filter(col("old").isNull || col("dist") < col("old"))
-        .select(col("id"), col("dist")).localCheckpoint()
+      val improved = Pins.checkpoint(
+        next.join(dist.withColumnRenamed("dist", "old"), Seq("id"), "left")
+          .filter(col("old").isNull || col("dist") < col("old"))
+          .select(col("id"), col("dist")))
       drained = improved.isEmpty
       // both superseded checkpoints (one frame in round 1) are read by nothing left
-      releaseCheckpoint(frontier)
-      releaseCheckpoint(dist)
+      Pins.release(frontier)
+      Pins.release(dist)
       dist = next
       frontier = improved
       r += 1
     }
-    if (frontier ne dist) releaseCheckpoint(frontier)
-    adj.unpersist()
     dist
   }
 
@@ -611,18 +599,17 @@ object GraphOps {
    * scan → groupBy(l_orderkey) → explode → groupBy(src,dst) per consumer. An explicit
    * `repartition(src)` sits BEFORE the (src,dst) count so HashPartitioning(src)
    * satisfies the aggregate's ClusteredDistribution (src is a prefix of the keys). The
-   * frame is materialized with cache() rather than localCheckpoint(): the cached plan
+   * frame is materialized with a cache rather than a checkpoint: the cached plan
    * keeps that HashPartitioning(src), so sssp's adjacency groupBy(src) needs no
    * exchange of its own either, while a checkpoint surfaces as a LogicalRDD with
    * UnknownPartitioning (plans/r13/q_sssp_prologue_after.txt). Per-m-row exchange
    * passes: okey and repartition(src), nothing else.
    */
-  def qSssp(spark: SparkSession, dir: String): DataFrame = {
-    val weighted = coPurchaseEdges(spark, dir)
+  def qSssp(spark: SparkSession, dir: String): DataFrame = Pins.scoped {
+    val weighted = Pins.cache(coPurchaseEdges(spark, dir)
       .repartition(col("src"))
       .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("cnt"))
-      .select(col("src"), col("dst"), greatest(lit(1L), lit(6L) - col("cnt")).as("w"))
-      .cache()
+      .select(col("src"), col("dst"), greatest(lit(1L), lit(6L) - col("cnt")).as("w")))
     val seeds = weighted.select(col("src").as("id"))
       .filter(col("id") % 101 === 0).distinct()
     sssp(weighted, seeds, rounds = 3)
@@ -673,7 +660,7 @@ object GraphOps {
    * rounds). Edges are deduplicated on entry (simple-graph degree semantics), assumed
    * symmetric, so per-src out-degree IS the undirected degree.
    *
-   * localCheckpoint keeps the plan O(1) in rounds. Returns each surviving vertex with
+   * A checkpoint keeps the plan O(1) in rounds. Returns each surviving vertex with
    * its degree in the R-times-peeled graph.
    *
    * Packed incremental-decrement peel (r14; adopted over the r12b-r13 edge-rewrite
@@ -703,13 +690,12 @@ object GraphOps {
    * the next round's filter, and the final `deg > 0` filter drops vertices with no
    * surviving edge, which have no degree in the peeled graph.
    */
-  def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+  def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = Pins.scoped {
     import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
-    val adj = edges.select(col("src"), col("dst"))
+    val adj = Pins.cache(edges.select(col("src"), col("dst"))
       .groupBy(col("src")).agg(sort_array(collect_set(col("dst"))).as("ds"))
       .select(col("src"), packSortedVarint(col("ds")).as("nbrs"),
-        size(col("ds")).cast("long").as("deg"))
-      .cache()
+        size(col("ds")).cast("long").as("deg")))
     val small = adj.count() <= 2000000L
     def gate(df: DataFrame): DataFrame = if (small) broadcast(df) else df
     // (src, deg): deg = degree in the graph induced on the current survivor set.
@@ -718,9 +704,6 @@ object GraphOps {
     // the res materialization below): at rehearsal scale the peel is fixed-cost-bound,
     // and each eager vertex-sized checkpoint is a full driver-synced job.
     var cur = adj.select(col("src"), col("deg"))
-    // the checkpoint `cur` currently reads, released once its successor has
-    // materialized (its blocks cannot be recomputed after release)
-    var held: Option[DataFrame] = None
     var r = 0
     while (r < rounds) {
       val dropped = cur.filter(col("deg") < k).select(col("src"))
@@ -731,26 +714,14 @@ object GraphOps {
       val next = cur.filter(col("deg") >= k)
         .join(gate(dec), Seq("src"), "left")
         .select(col("src"), (col("deg") - coalesce(col("dcnt"), lit(0L))).as("deg"))
-      if (r < rounds - 1) {
-        cur = next.localCheckpoint()
-        held.foreach(releaseCheckpoint)
-        held = Some(cur)
-      } else cur = next
+      val prev = cur
+      cur = if (r < rounds - 1) Pins.checkpoint(next) else next
+      // superseded once its successor is checkpointed; round 1 read the cached adjacency
+      if (r > 0 && r < rounds - 1) Pins.release(prev)
       r += 1
     }
-    val res = cur.filter(col("deg") > 0).localCheckpoint()
-    held.foreach(releaseCheckpoint)
-    adj.unpersist()
-    res
+    Pins.checkpoint(cur.filter(col("deg") > 0))
   }
-
-  /** Drop a localCheckpoint'd frame's blocks. `Dataset.unpersist` only reaches the
-    * CacheManager, and a checkpointed frame is a LogicalRDD that never entered it. */
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   /**
    * `q_kcore`: two peeling rounds at k=100 over the co-purchase graph (median degree

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.sources.TableIO
 
 /**
@@ -81,47 +82,42 @@ object Clustering {
    *
    * The quantized frame is cached for its 2·rounds + 1 consumers (each round's assign +
    * update, plus the final assign; without it every one re-runs the scan + per-element
-   * quantize transform) and released by this call before it returns: the result is
-   * computed eagerly into a local checkpoint. That checkpoint belongs to the caller;
-   * its blocks go when the frame is dropped (ContextCleaner) or released explicitly.
+   * quantize transform) and freed by this call before it returns: the result is
+   * computed eagerly into a checkpoint. That checkpoint belongs to the caller, who
+   * frees it with `Pins.release`.
    */
-  def kmeansAssign(emb: DataFrame, k: Int, rounds: Int): DataFrame = {
-    val vectors = quantized(emb).cache()
-    try {
-      // k smallest ids via TakeOrderedAndProject (no global window) + broadcast semi-join
-      val initIds = vectors.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
-      var centroids = vectors.join(broadcast(initIds), Seq("vec_id"))
-        .select(col("vec_id").as("cid"), col("qe").as("ce"))
-      for (_ <- 1 to rounds)
-        centroids = update(assign(vectors, centroids), centroids)
-      assign(vectors, centroids)
-        .join(centroids.select(col("cid"),
-          aggregate(col("ce"), lit(0L), (acc, x) => acc + x).as("centroid_sum")), Seq("cid"))
-        .localCheckpoint()
-    } finally vectors.unpersist()
+  def kmeansAssign(emb: DataFrame, k: Int, rounds: Int): DataFrame = Pins.scoped {
+    val vectors = Pins.cache(quantized(emb))
+    // k smallest ids via TakeOrderedAndProject (no global window) + broadcast semi-join
+    val initIds = vectors.select(col("vec_id")).orderBy(col("vec_id")).limit(k)
+    var centroids = vectors.join(broadcast(initIds), Seq("vec_id"))
+      .select(col("vec_id").as("cid"), col("qe").as("ce"))
+    for (_ <- 1 to rounds)
+      centroids = update(assign(vectors, centroids), centroids)
+    Pins.checkpoint(assign(vectors, centroids)
+      .join(centroids.select(col("cid"),
+        aggregate(col("ce"), lit(0L), (acc, x) => acc + x).as("centroid_sum")), Seq("cid")))
   }
 
   /** k-means(k=8, 2 Lloyd rounds) on fixed-point embeddings; final assignment stats.
     * The k result rows are computed while the quantized frame is cached (5 consumers,
     * see [[kmeansAssign]]) and returned as a local relation, so the cache is released
     * before the call returns and the next call reads the table's current files. */
-  def qKmeans(spark: SparkSession, dir: String): DataFrame = {
+  def qKmeans(spark: SparkSession, dir: String): DataFrame = Pins.scoped {
     val k = 8
     val rounds = 2
-    val vectors = quantized(TableIO.embeddings(spark, dir)).cache()
-    try {
-      var centroids = vectors.filter(col("vec_id") < k)
-        .select(col("vec_id").as("cid"), col("qe").as("ce"))
-      for (_ <- 1 to rounds)
-        centroids = update(assign(vectors, centroids), centroids)
-      val stats = assign(vectors, centroids).groupBy(col("cid"))
-        .agg(count(lit(1)).as("n"), sum(col("dist")).as("inertia"))
-        .join(centroids.select(col("cid"),
-          aggregate(col("ce"), lit(0L), (acc, x) => acc + x).as("centroid_sum")), Seq("cid"))
-        .select(col("cid"), col("n"), col("inertia"), col("centroid_sum"))
-        .orderBy(col("cid"))
-      spark.createDataFrame(java.util.Arrays.asList(stats.collect(): _*), stats.schema)
-    } finally vectors.unpersist()
+    val vectors = Pins.cache(quantized(TableIO.embeddings(spark, dir)))
+    var centroids = vectors.filter(col("vec_id") < k)
+      .select(col("vec_id").as("cid"), col("qe").as("ce"))
+    for (_ <- 1 to rounds)
+      centroids = update(assign(vectors, centroids), centroids)
+    val stats = assign(vectors, centroids).groupBy(col("cid"))
+      .agg(count(lit(1)).as("n"), sum(col("dist")).as("inertia"))
+      .join(centroids.select(col("cid"),
+        aggregate(col("ce"), lit(0L), (acc, x) => acc + x).as("centroid_sum")), Seq("cid"))
+      .select(col("cid"), col("n"), col("inertia"), col("centroid_sum"))
+      .orderBy(col("cid"))
+    spark.createDataFrame(java.util.Arrays.asList(stats.collect(): _*), stats.schema)
   }
 
   // The oracle replays the identical integer rounds as unrolled CTEs.

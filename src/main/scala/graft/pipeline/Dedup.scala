@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.FastHash
-import graft.operators.GraphOps
+import graft.Pins
 import graft.sources.TableIO
 
 /**
@@ -184,11 +184,10 @@ object Dedup {
    * oracle on any realistic data.
    */
   def minhashPairs(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
-    // cache() (MEMORY_AND_DISK) because the gram frame feeds both signature generation
-    // and exact verification; blocks are LRU-evicted under memory pressure, and a
-    // long-running service would unpersist after materializing the result — a returned
-    // lazy DataFrame cannot safely unpersist its own inputs here.
-    val g = gramHashSets(docs).cache()
+    // cached (MEMORY_AND_DISK) because the gram frame feeds both signature generation
+    // and exact verification; the returned frame reads it, so it is the caller's to
+    // free with Pins.release once the frame has run
+    val g = Pins.cache(gramHashSets(docs))
     // r14 measured-and-REJECTED: caching the band frame (it feeds both sides of the
     // candidate self-join) was a warm-pair wash at both scales — ReuseExchange already
     // canonicalizes the two renamed projections to ONE exchange, so the minhash kernel
@@ -316,9 +315,11 @@ object Dedup {
       .filter(col("jacc") >= threshold)
 
   /** N-gram Jaccard near-dup over the documents table (see [[ngramJaccardPairs]]) —
-    * equals the exhaustive-jaccard oracle, with bounded candidate generation. */
+    * equals the exhaustive-jaccard oracle, with bounded candidate generation. The
+    * cached gram frame feeds candidates and verification; the returned frame reads
+    * it, so the caller frees it with `Pins.release`. */
   def dedupNgramJaccard(spark: SparkSession, dir: String, threshold: Double = 0.5): DataFrame = {
-    val g = gramHashSets(TableIO.documents(spark, dir)).cache()
+    val g = Pins.cache(gramHashSets(TableIO.documents(spark, dir)))
     ngramJaccardPairs(g, threshold).orderBy(col("a_id"), col("b_id"))
   }
 
@@ -534,18 +535,19 @@ object Dedup {
    * on the edge key; labels are checkpointed and the previous round released — the
    * standard large-scale CC shape (what GraphX/GraphFrames do internally).
    *
-   * Returns (doc_id, component) for every node that appears in a pair.
+   * Returns (doc_id, component) for every node that appears in a pair. The cached edge
+   * list and every superseded checkpoint are freed before it returns; the result reads
+   * the last round's checkpoint, which is the caller's to `Pins.release`.
    */
-  def connectedComponents(pairs: DataFrame): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = Pins.scoped {
     // symmetric edge list, pre-partitioned on the probe key and cached: the per-round
     // join then reuses ONE materialized partitioning instead of re-shuffling the (larger)
     // edge set every iteration. No distinct: min-label propagation is insensitive to edge
     // multiplicity, so deduplicating here would buy nothing for a full extra shuffle+agg.
-    val edges = pairs.select(col("a_id").as("u"), col("b_id").as("v"))
+    val edges = Pins.cache(pairs.select(col("a_id").as("u"), col("b_id").as("v"))
       .unionByName(pairs.select(col("b_id").as("u"), col("a_id").as("v")))
-      .repartition(col("u"))
-      .cache()
-    // localCheckpoint truncates the logical plan to the materialized RDD each round —
+      .repartition(col("u")))
+    // A checkpoint truncates the logical plan to the materialized RDD each round —
     // without it the plan (and Catalyst re-analysis cost) grows with every iteration,
     // the classic iterative-algorithm trap on Spark. Previous rounds' checkpoints are
     // released once the next one is materialized so storage stays O(1) in iterations.
@@ -557,9 +559,8 @@ object Dedup {
     // fused into the init aggregate (shuffle-free: edges are already partitioned on u).
     // A star-shaped cluster whose center is the minimum id — the typical near-dup shape —
     // is already converged here, so the loop body runs exactly once to verify.
-    var checkpointed = edges.groupBy(col("u").as("doc_id"))
-      .agg(least(col("u"), min(col("v"))).as("component")).localCheckpoint()
-    var labels = checkpointed
+    var labels = Pins.checkpoint(edges.groupBy(col("u").as("doc_id"))
+      .agg(least(col("u"), min(col("v"))).as("component")))
     var changed = 1L
     while (changed > 0) {
       // one-hop min-label propagation as union + min-aggregate; the groupBy is the only
@@ -571,15 +572,12 @@ object Dedup {
         .groupBy(col("doc_id"))
         .agg(min(col("component")).as("component"))
       // carry the previous label so the convergence check is one cheap action
-      val next = stepped
-        .join(labels.withColumnRenamed("component", "old"), Seq("doc_id"))
-        .localCheckpoint()
+      val next = Pins.checkpoint(stepped
+        .join(labels.withColumnRenamed("component", "old"), Seq("doc_id")))
       changed = next.filter(col("component") =!= col("old")).count()
-      GraphOps.releaseCheckpoint(checkpointed) // its successor is materialized
-      checkpointed = next
+      Pins.release(labels) // its successor is materialized
       labels = next.select(col("doc_id"), col("component"))
     }
-    edges.unpersist()
     labels
   }
 
@@ -588,9 +586,9 @@ object Dedup {
    * threshold), vs a DuckDB recursive-CTE transitive-closure oracle.
    */
   def dedupComponents(spark: SparkSession, dir: String, threshold: Double = 0.8): DataFrame =
-    connectedComponents(
+    Pins.scoped(connectedComponents(
       dedupMinhash(spark, dir, threshold).select(col("a_id"), col("b_id")))
-      .orderBy(col("doc_id"))
+      .orderBy(col("doc_id")))
 
   /**
    * `dedup_cluster_stats`: the duplication-structure diagnostic read before choosing a
@@ -599,14 +597,14 @@ object Dedup {
    * `dedup_components`; the histogram is two aggregations over the COMPONENT frame
    * (already ≤ one row per clustered doc, never the corpus).
    */
-  def dedupClusterStats(spark: SparkSession, dir: String): DataFrame =
+  def dedupClusterStats(spark: SparkSession, dir: String): DataFrame = Pins.scoped(
     connectedComponents(
       dedupMinhash(spark, dir, 0.8).select(col("a_id"), col("b_id")))
       .groupBy(col("component")).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
       .select(col("cluster_size"), col("n_clusters"),
         (col("cluster_size") * col("n_clusters")).as("n_docs"))
-      .orderBy(col("cluster_size"))
+      .orderBy(col("cluster_size")))
 
   def dedupClusterStatsSql(threshold: Double): String = {
     val base = dedupComponentsSql(threshold)
@@ -652,7 +650,7 @@ object Dedup {
     * Null text carries NO content signal, so null-text rows pass through UNTOUCHED
     * (md5(null) is null, and a naive partition-by-hash would silently collapse every
     * null-text row into one "exact-duplicate" group). */
-  def dedupedCorpus(docs: DataFrame, threshold: Double = 0.8): DataFrame = {
+  def dedupedCorpus(docs: DataFrame, threshold: Double = 0.8): DataFrame = Pins.scoped {
     val exactKeep = docs
       .withColumn("h", when(col("text").isNull,
         concat(lit("null:"), col("doc_id").cast("string"))).otherwise(md5(col("text"))))
@@ -680,7 +678,7 @@ object Dedup {
    * own cluster (left join + coalesce, no fan-out).
    */
   def dedupedCorpusBy(docs: DataFrame, priorityCol: String,
-      threshold: Double = 0.8): DataFrame = {
+      threshold: Double = 0.8): DataFrame = Pins.scoped {
     import org.apache.spark.sql.graft.TopKPerKey
     val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
     val exactPairs = docs
@@ -889,10 +887,10 @@ object Dedup {
    * ~99% of the non-matching gram volume.
    */
   def contaminationBloom(candidates: DataFrame, benchmark: DataFrame,
-      fpp: Double = 0.01): DataFrame = {
+      fpp: Double = 0.01): DataFrame = Pins.scoped {
     val spark = candidates.sparkSession
-    val bg = gramHashSets(benchmark).select(explode(col("gh")).as("h")).distinct()
-      .cache() // reused: sizing count, bloom build, verification join
+    // reused: sizing count, bloom build, verification join (the result reads it)
+    val bg = Pins.cache(gramHashSets(benchmark).select(explode(col("gh")).as("h")).distinct())
     val nb = bg.count()
     val bloom = bg.stat.bloomFilter("h", math.max(nb, 64L), fpp)
     val bcBloom = spark.sparkContext.broadcast(bloom)
@@ -993,6 +991,12 @@ object Dedup {
    * streaming gate (CorpusStreaming.admitSegmentsBatch, xxhash64 against its index).
    * Every `docs` row stays visible (n_segs from its text; fully-dropped docs report
    * n_kept 0 / null text).
+   *
+   * `n_segs` and `n_kept` are ints by bound, not by accident: they count ONE document's
+   * segments. Its text plus the row's other fields must fit one UnsafeRow, whose size
+   * is an int, so the text is under 2^31 - 1 bytes and splits into at most one token
+   * more than its byte count: no document reaches 2^31 tokens, hence segments, whatever
+   * the corpus size.
    */
   private[graft] def reassembleSegments(docs: DataFrame, segs: DataFrame, k: Int): DataFrame = {
     val winners = segs.groupBy(col("h"))
@@ -1080,7 +1084,10 @@ object Dedup {
   }
 
   /** Maximal duplicated spans per doc: (doc_id, span_start, span_end, n_grams) with
-    * 1-based inclusive token bounds. See [[duplicateSpanGrams]] for the hit definition. */
+    * 1-based inclusive token bounds. See [[duplicateSpanGrams]] for the hit definition.
+    * The three are ints by bound: they are token positions and gram counts within ONE
+    * document, which has fewer than 2^31 tokens whatever the corpus size (see
+    * [[reassembleSegments]]). */
   def duplicateSpans(docs: DataFrame, spanLen: Int = 15): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val grams = duplicateSpanGrams(docs, spanLen)

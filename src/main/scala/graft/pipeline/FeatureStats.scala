@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.sources.TableIO
 
 /**
@@ -41,11 +42,11 @@ object FeatureStats {
     * materialize. One scan per call now.
     *
     * EAGER-MATERIALIZATION CONTRACT (since r13): constructing this frame runs a Spark
-    * job immediately (the localCheckpoint above), and the checkpointed contingency
-    * blocks live in executor-local (non-fault-tolerant) storage until consumed — an
-    * intentional trade for the 4x scan cut. Callers composing plans fully lazily, or
-    * needing the intermediate to survive executor loss, should build the contingency
-    * table themselves.
+    * job immediately (the checkpoint above), and the checkpointed contingency blocks
+    * live in executor-local (non-fault-tolerant) storage until the caller frees them
+    * with `Pins.release` — an intentional trade for the 4x scan cut. Callers composing
+    * plans fully lazily, or needing the intermediate to survive executor loss, should
+    * build the contingency table themselves.
     *
     * r14 (ADVICE r13): the MI log ratio and the chi² n²/e term cast to double BEFORE
     * multiplying — n_x·n_y and n_xy² as long·long silently wrap past ~3e9-row cells
@@ -53,9 +54,8 @@ object FeatureStats {
     * oracle SQL casts first. Below 2^53 the double products are exact, so results at
     * every rehearsal scale are bit-identical to the long form. */
   def dependence(df: DataFrame, feature: Column, label: Column): DataFrame = {
-    val cont = df.select(feature.as("x"), label.as("y"))
-      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nxy"))
-      .localCheckpoint()
+    val cont = Pins.checkpoint(df.select(feature.as("x"), label.as("y"))
+      .groupBy(col("x"), col("y")).agg(count(lit(1)).as("nxy")))
     val nx = cont.groupBy(col("x")).agg(sum(col("nxy")).as("nx"))
     val ny = cont.groupBy(col("y")).agg(sum(col("nxy")).as("ny"))
     val n = cont.agg(sum(col("nxy")).as("n"))
@@ -98,8 +98,8 @@ object FeatureStats {
     // localCheckpoint for the same reason as [[dependence]]: four consumers, pruning
     // defeats ReuseExchange — without it even the fused form re-scanned lineitem 4x
     // (one per marginal). |Σ|X|| x |Y| rows; one scan total with it.
-    val cont = src.groupBy(col("feature"), col("x"), col("y")).agg(count(lit(1)).as("nxy"))
-      .localCheckpoint()
+    val cont = Pins.checkpoint(
+      src.groupBy(col("feature"), col("x"), col("y")).agg(count(lit(1)).as("nxy")))
     val nx = cont.groupBy(col("feature"), col("x")).agg(sum(col("nxy")).as("nx"))
     val ny = cont.groupBy(col("feature"), col("y")).agg(sum(col("nxy")).as("ny"))
     val n = cont.groupBy(col("feature")).agg(sum(col("nxy")).as("n"))

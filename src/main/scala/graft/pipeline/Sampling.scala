@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Pins
 import graft.sources.TableIO
 
 /**
@@ -223,6 +224,11 @@ object Sampling {
    * by shard) — never a global sort. Writing `numShards` files via
    * `repartition(col("shard")).sortWithinPartitions(col("skey"))` streams each shard
    * through one task; pos is only needed when readers want explicit offsets.
+   *
+   * `pos` is a LONG running row count over the shard's order, equal to `row_number()`.
+   * Spark's `row_number()` is an INT, so a shard past 2^31 - 1 docs (past ~17 billion
+   * docs at the default 8 shards) would overflow inside it, which ANSI mode turns into
+   * an error; the running count never holds an int.
    */
   def shuffleAssigned(docs: DataFrame, numShards: Int = 8, seed: String = "graft"): DataFrame = {
     require(numShards >= 1, s"numShards must be >= 1, got $numShards")
@@ -230,9 +236,9 @@ object Sampling {
     docs.select(col("doc_id"), skey.as("skey"))
       .withColumn("shard",
         (conv(substring(col("skey"), 1, 8), 16, 10).cast("long") % numShards).cast("int"))
-      .withColumn("pos", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("shard")).orderBy(col("skey"), col("doc_id"))).cast("int"))
+      .withColumn("pos", count(lit(1)).over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("shard")).orderBy(col("skey"), col("doc_id"))
+        .rowsBetween(Long.MinValue, 0L))) // unbounded preceding to the current row
       .select(col("doc_id"), col("shard"), col("pos"))
   }
 
@@ -247,7 +253,7 @@ object Sampling {
       |        CAST(CAST('0x' || substr(skey, 1, 8) AS BIGINT) % 8 AS INT) AS shard
       |      FROM a)
       |SELECT doc_id, shard,
-      |  CAST(row_number() OVER (PARTITION BY shard ORDER BY skey, doc_id) AS INT) AS pos
+      |  CAST(row_number() OVER (PARTITION BY shard ORDER BY skey, doc_id) AS BIGINT) AS pos
       |FROM b ORDER BY shard, pos""".stripMargin
 
   /**
@@ -288,10 +294,11 @@ object Sampling {
    */
   def globalRowIds(df: DataFrame, orderCol: String, numParts: Int = 32): DataFrame = {
     val spark = df.sparkSession
-    // localCheckpoint pins one materialized partition layout so the count pass and the
-    // id pass cannot diverge (and the range shuffle runs once, not twice)
-    val parted = df.repartitionByRange(numParts, col(orderCol))
-      .sortWithinPartitions(orderCol).localCheckpoint()
+    // a checkpoint pins one materialized partition layout so the count pass and the id
+    // pass cannot diverge (and the range shuffle runs once, not twice); the result reads
+    // it, so it is the caller's to `Pins.release`
+    val parted = Pins.checkpoint(df.repartitionByRange(numParts, col(orderCol))
+      .sortWithinPartitions(orderCol))
     val counts = parted.groupBy(spark_partition_id().as("pid")).count()
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     val offsets: Map[Int, Long] = {

@@ -3,6 +3,8 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, col}
 
+import graft.Pins
+
 /**
  * Data-layout management: cluster a table on its dominant filter/join columns before
  * writing, so parquet row-group min/max statistics become selective.
@@ -58,7 +60,7 @@ object LayoutWriter {
    * those formats execute underneath.
    */
   def upsertPartitioned(spark: SparkSession, path: String, updates: DataFrame,
-                        key: String, partitionCol: String): Unit = {
+                        key: String, partitionCol: String): Unit = Pins.scoped {
     import org.apache.spark.sql.functions.{count, first, lit}
     val existing = spark.read.parquet(path)
 
@@ -94,16 +96,16 @@ object LayoutWriter {
     // survivors: rows of touched partitions whose key is NOT replaced by an update. The
     // touched set is inlined as a literal IN list (partition VALUES — small by
     // construction), so it prunes directories at plan time instead of needing a runtime
-    // semi join. localCheckpoint materializes survivors BEFORE the overwrite — the write
-    // would otherwise read from the very files it is replacing.
+    // semi join. A checkpoint materializes survivors BEFORE the overwrite — the write
+    // would otherwise read from the very files it is replacing. The scope frees it once
+    // the overwrite is done.
     val touchedNonNull = touchedRaw.filter(_ != null)
     val touchedPred =
       if (touchedRaw.contains(null))
         col(partitionCol).isNull || col(partitionCol).isInCollection(touchedNonNull)
       else col(partitionCol).isInCollection(touchedNonNull)
-    val survivors = existing.filter(touchedPred)
-      .join(broadcast(updatedKeys), Seq(key), "left_anti")
-      .localCheckpoint(true)
+    val survivors = Pins.checkpoint(existing.filter(touchedPred)
+      .join(broadcast(updatedKeys), Seq(key), "left_anti"))
     val out = survivors.unionByName(aligned)
 
     // dynamic overwrite only replaces partitions PRESENT in the written data — a touched
@@ -299,27 +301,29 @@ object LayoutWriter {
       if (touchedRaw.contains(null))
         col(partitionCol).isNull || col(partitionCol).isInCollection(touchedNonNull)
       else col(partitionCol).isInCollection(touchedNonNull)
-    // materialize survivors BEFORE the overwrite reads from the files it replaces
-    val survivors = existing.filter(touchedPred)
-      .join(broadcast(doomed), Seq(key), "left_anti")
-      .localCheckpoint(true)
+    Pins.scoped {
+      // materialize survivors BEFORE the overwrite reads from the files it replaces; the
+      // scope frees them once the overwrite is done
+      val survivors = Pins.checkpoint(existing.filter(touchedPred)
+        .join(broadcast(doomed), Seq(key), "left_anti"))
 
-    val survivorRaw = survivors.select(partitionCol).distinct().collect().map(_.get(0))
-    val emptied = touchedRaw.toSet -- survivorRaw
+      val survivorRaw = survivors.select(partitionCol).distinct().collect().map(_.get(0))
+      val emptied = touchedRaw.toSet -- survivorRaw
 
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
-    try {
-      if (survivorRaw.nonEmpty)
-        survivors.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
-    } finally prev.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
-      spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+      val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
+      spark.conf.set("spark.sql.sources.partitionOverwriteMode", "DYNAMIC")
+      try {
+        if (survivorRaw.nonEmpty)
+          survivors.write.mode("overwrite").partitionBy(partitionCol).parquet(path)
+      } finally prev.fold(spark.conf.unset("spark.sql.sources.partitionOverwriteMode"))(
+        spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
 
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    emptied.foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(path, hiveDirName(partitionCol, v)), true)
+      val fs = new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      emptied.foreach { v =>
+        fs.delete(new org.apache.hadoop.fs.Path(path, hiveDirName(partitionCol, v)), true)
+      }
+      deadCount
     }
-    deadCount
   }
 }

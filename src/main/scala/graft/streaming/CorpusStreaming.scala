@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.GraphOps
+import graft.Pins
 import graft.pipeline.Dedup
 
 /**
@@ -68,53 +68,49 @@ object CorpusStreaming {
    * duplicate rows instead of losing them.
    *
    * The batch is read once. The exact keep-min window runs on that read, and its
-   * survivors are pinned (`localCheckpoint`) with their content hash; their gram sets,
-   * their index rows (LSH bands + content lane) and, against an existing index, the ids
-   * that collide with it are pinned next. The pair graph, the admitted frame and the
-   * index append read only those pinned frames. Every frame the call pins, the
-   * connected-components labels included, is released before it returns; the returned
-   * admitted frame is the one checkpoint left, and it belongs to the caller.
+   * survivors are pinned (checkpointed) with their content hash; their gram sets, their
+   * index rows (LSH bands + content lane) and, against an existing index, the ids that
+   * collide with it are pinned next. The pair graph, the admitted frame and the index
+   * append read only those pinned frames. Every frame the call pins, the
+   * connected-components labels included, is freed before it returns (`Pins.scoped`);
+   * the returned admitted frame is the one checkpoint left, and it belongs to the
+   * caller.
    */
   def admitBatch(batch: DataFrame, indexDir: String, threshold: Double = 0.8,
-      updateIndex: Boolean = true, persist: DataFrame => Unit = _ => ()): DataFrame = {
+      updateIndex: Boolean = true, persist: DataFrame => Unit = _ => ()): DataFrame =
+      Pins.scoped {
     val spark = batch.sparkSession
-    val checkpoints = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = { val p = df.localCheckpoint(); checkpoints += p; p }
-    try {
-      // within-batch, same policy as Dedup.dedupedCorpus: exact keep-min first (catches
-      // gram-less short/empty docs), then verified near-dup components keep-min. The
-      // window runs first, on the one read of the batch: an exact duplicate shares its
-      // keeper's bands and content hash, so it collides with the index exactly when its
-      // keeper does, and nothing else needs its grams.
-      val kept = pin(batch.withColumn("__ch", xxhash64(coalesce(col("text"), lit(""))))
-        .withColumn("keeper", min(col("doc_id")).over(Window.partitionBy(col("__ch"))))
-        .filter(col("doc_id") === col("keeper"))
-        .drop("keeper"))
-      val g = pin(Dedup.gramHashSets(kept))
-      val lanes = pin(indexRows(kept, Dedup.lshBands(Dedup.minhashSignatures(g))))
-      // cross-batch: the kept docs whose band or content hash is already in the index
-      val collided = readIndex(spark, indexDir, BandIndexSchema).map(idx =>
-        pin(lanes.join(idx, Seq("band", "bh"), "left_semi").select(col("doc_id"))))
-      def fresh(df: DataFrame) = collided.fold(df)(c => df.join(c, Seq("doc_id"), "left_anti"))
-      val labels = Dedup.connectedComponents(Dedup.minhashPairsFrom(
-          fresh(g), fresh(lanes.filter(col("band") =!= ContentLaneBand)), threshold)
-        .select(col("a_id"), col("b_id")))
-      checkpoints += labels // its final round's checkpoint
-      // MATERIALIZE the decision before the index grows and before the frames it reads
-      // are released. `collided` is pinned for the same reason: read lazily after the
-      // append, the index would hold the batch's own rows and drop every doc as a
-      // collision with itself.
-      val admitted = fresh(kept)
-        .join(labels.filter(col("doc_id") =!= col("component")).select(col("doc_id")),
-          Seq("doc_id"), "left_anti")
-        .drop("__ch")
-        .localCheckpoint()
-      persist(admitted)
-      if (updateIndex)
-        lanes.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
-          .write.mode("append").parquet(indexDir)
-      admitted
-    } finally checkpoints.foreach(GraphOps.releaseCheckpoint)
+    // within-batch, same policy as Dedup.dedupedCorpus: exact keep-min first (catches
+    // gram-less short/empty docs), then verified near-dup components keep-min. The
+    // window runs first, on the one read of the batch: an exact duplicate shares its
+    // keeper's bands and content hash, so it collides with the index exactly when its
+    // keeper does, and nothing else needs its grams.
+    val kept = Pins.checkpoint(batch.withColumn("__ch", xxhash64(coalesce(col("text"), lit(""))))
+      .withColumn("keeper", min(col("doc_id")).over(Window.partitionBy(col("__ch"))))
+      .filter(col("doc_id") === col("keeper"))
+      .drop("keeper"))
+    val g = Pins.checkpoint(Dedup.gramHashSets(kept))
+    val lanes = Pins.checkpoint(indexRows(kept, Dedup.lshBands(Dedup.minhashSignatures(g))))
+    // cross-batch: the kept docs whose band or content hash is already in the index
+    val collided = readIndex(spark, indexDir, BandIndexSchema).map(idx =>
+      Pins.checkpoint(lanes.join(idx, Seq("band", "bh"), "left_semi").select(col("doc_id"))))
+    def fresh(df: DataFrame) = collided.fold(df)(c => df.join(c, Seq("doc_id"), "left_anti"))
+    val labels = Dedup.connectedComponents(Dedup.minhashPairsFrom(
+        fresh(g), fresh(lanes.filter(col("band") =!= ContentLaneBand)), threshold)
+      .select(col("a_id"), col("b_id")))
+    // MATERIALIZE the decision before the index grows and before the frames it reads
+    // are freed. `collided` is pinned for the same reason: read lazily after the
+    // append, the index would hold the batch's own rows and drop every doc as a
+    // collision with itself.
+    val admitted = Pins.checkpoint(fresh(kept)
+      .join(labels.filter(col("doc_id") =!= col("component")).select(col("doc_id")),
+        Seq("doc_id"), "left_anti")
+      .drop("__ch"))
+    persist(admitted)
+    if (updateIndex)
+      lanes.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
+        .write.mode("append").parquet(indexDir)
+    admitted
   }
 
   /**
@@ -175,7 +171,7 @@ object CorpusStreaming {
    * crash between the index append and the checkpoint commit re-derives the IDENTICAL
    * decision and re-emits the same output rows — at-least-once duplicates, never the
    * contradictory all-dropped rows an untagged index would produce. The decision frame
-   * is still pinned (localCheckpoint) before the append so the returned plan cannot
+   * is still pinned (checkpointed) before the append so the returned plan cannot
    * lazily re-read the index it just grew, and output persists before the index grows.
    *
    * Returns (doc_id, n_segs, n_kept, dedup_text) for every batch doc — fully-duplicate
@@ -184,22 +180,21 @@ object CorpusStreaming {
    */
   def admitSegmentsBatch(batch: DataFrame, indexDir: String, k: Int = 8,
       batchId: Long = -1L, updateIndex: Boolean = true,
-      persist: DataFrame => Unit = _ => ()): DataFrame = {
+      persist: DataFrame => Unit = _ => ()): DataFrame = Pins.scoped {
     val spark = batch.sparkSession
     val segs = Dedup.segmentedDocs(batch, k).withColumn("h", xxhash64(col("seg")))
-    val fresh = (readIndex(spark, indexDir, SegmentIndexSchema) match {
+    val fresh = Pins.cache(readIndex(spark, indexDir, SegmentIndexSchema) match {
       case Some(idx0) =>
         val idx = if (batchId >= 0) idx0.filter(col("batch_id") =!= batchId) else idx0
         segs.join(idx.select(col("h")), Seq("h"), "left_anti")
       case None => segs
-    }).cache()
-    val out = Dedup.reassembleSegments(batch, fresh, k).localCheckpoint()
+    })
+    val out = Pins.checkpoint(Dedup.reassembleSegments(batch, fresh, k))
     persist(out)
     if (updateIndex)
       fresh.select(col("h")).distinct()
         .withColumn("batch_id", lit(batchId))
         .write.mode("append").parquet(indexDir)
-    fresh.unpersist()
     out
   }
 

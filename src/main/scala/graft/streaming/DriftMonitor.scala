@@ -1,8 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 
+import graft.Pins
 import graft.pipeline.FeatureStats
 
 /**
@@ -24,13 +25,14 @@ object DriftMonitor {
   /**
    * Attach a KS drift monitor to a streaming single-column value frame. `onResult` is
    * called once per non-empty micro-batch with (batchId, nRef, nBatch, ks, alarm).
-   * Returns the started query.
+   * Returns the started query. The cached reference belongs to the stream: it is freed
+   * when the query terminates, so call this outside any `Pins.scoped` block.
    */
   def monitor(values: DataFrame, reference: DataFrame, threshold: Double)(
       onResult: (Long, Long, Long, Double, Boolean) => Unit): StreamingQuery = {
-    val ref = reference.toDF("v").cache()
+    val ref = Pins.cache(reference.toDF("v"))
     ref.count() // pin the frozen reference once
-    values.toDF("v").writeStream
+    val query = values.toDF("v").writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], batchId: Long) =>
         if (!batch.isEmpty) {
           val r = FeatureStats.twoSampleKs(ref, batch.toDF()).collect()(0)
@@ -39,5 +41,13 @@ object DriftMonitor {
         }
       }
       .start()
+    values.sparkSession.streams.addListener(new StreamingQueryListener {
+      def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == query.id) { Pins.release(ref); query.sparkSession.streams.removeListener(this) }
+    })
+    if (!query.isActive) Pins.release(ref) // it ended before the listener was added
+    query
   }
 }

@@ -155,10 +155,10 @@ class CorpusStreamingSpec extends AnyFunSuite {
     // the first batch runs with no index, the second against the first one's
     for (((rows, expected), i) <- batches.zipWithIndex) {
       var admitted: DataFrame = null
-      val left = SparkTestBase.persistedLeftBy {
+      val left = SparkTestBase.pinsLeftBy {
         admitted = CorpusStreaming.admitBatch(rows.toDF("doc_id", "text"), indexDir)
       }
-      assert(left.toSet == checkpointIds(admitted), s"batch $i left ${left.toSet}")
+      assert(left.rdds == checkpointIds(admitted) && left.cached.isEmpty, s"batch $i left $left")
       val ids = admitted.select("doc_id").collect().map(_.getLong(0)).toSet
       assert(ids == expected, s"batch $i admitted $ids")
     }

@@ -43,12 +43,37 @@ class DedupSpec extends AnyFunSuite {
     // the loop runs several rounds and supersedes several checkpoints
     val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("a_id", "b_id")
     var comp = Map.empty[Long, Long]
-    val left = SparkTestBase.persistedLeftBy {
-      comp = Dedup.connectedComponents(pairs).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val left = SparkTestBase.pinsLeftBy {
+      val labels = Dedup.connectedComponents(pairs)
+      comp = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Pins.release(labels)
     }
     assert(comp == (1L to 8L).map(_ -> 1L).toMap)
-    assert(left.size <= 1, s"connectedComponents left ${left.size} persisted RDDs: $left")
+    assert(left.isEmpty, s"connectedComponents left $left")
+  }
+
+  test("dedup_ngram_jaccard after an external rewrite of documents.parquet reads the new rows") {
+    import java.nio.file.{Files, Paths}
+    import org.apache.spark.sql.functions.col
+    val dir = Files.createTempDirectory("graft_ngram").toString
+    val all = graft.sources.TableIO.documents(spark, sf)
+    all.write.parquet(s"$dir/documents.parquet")
+    val first = Dedup.dedupNgramJaccard(spark, dir)
+    val firstPairs = first.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    Pins.release(first) // the returned frame reads the cached gram frame: the caller's
+    // another writer replaces the table's files: the even doc ids only, same path
+    all.filter(col("doc_id") % 2 === 0).write.parquet(s"$dir/stage")
+    val table = Paths.get(s"$dir/documents.parquet")
+    Files.walk(table).sorted(java.util.Comparator.reverseOrder()).forEach(p => Files.delete(p))
+    Files.move(Paths.get(s"$dir/stage"), table)
+    val second = Dedup.dedupNgramJaccard(spark, dir)
+    val secondPairs = second.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    Pins.release(second)
+    // a pair's jaccard depends on its two docs only: the new answer is the old one
+    // restricted to pairs of even ids
+    val expected = firstPairs.filter { case (a, b) => a % 2 == 0 && b % 2 == 0 }
+    assert(expected.size < firstPairs.size, "the rewrite must drop some pair")
+    assert(secondPairs == expected, s"stale: ${secondPairs -- expected} not in the new rows")
   }
 
   test("simhash recall on strong near-duplicates (jaccard >= 0.9)") {

@@ -2,7 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Driver-contract smoke: entry() yields rows; every query key has a runnable plan. */
+/** Driver-contract smoke: entry() yields rows; every query key has a runnable plan, and
+  * once its frame has run and been freed with `Pins.release`, no query leaves a pin. */
 class EntrySpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
   private val sf = SparkTestBase.sf
@@ -17,10 +18,18 @@ class EntrySpec extends AnyFunSuite {
   }
 
   test("every query at sf0.001 executes") {
-    val failures = SparkEntry.queries.flatMap { case (name, fn) =>
-      try { fn(spark, sf).count(); None }
-      catch { case e: Throwable => Some(s"$name: ${e.getMessage.take(120)}") }
+    val failures = scala.collection.mutable.ArrayBuffer.empty[String]
+    val leaks = scala.collection.mutable.ArrayBuffer.empty[String]
+    for ((name, fn) <- SparkEntry.queries) {
+      try {
+        val left = SparkTestBase.pinsLeftBy {
+          val frame = fn(spark, sf)
+          try frame.count() finally Pins.release(frame)
+        }
+        if (!left.isEmpty) leaks += s"$name: $left"
+      } catch { case e: Throwable => failures += s"$name: ${e.getMessage.take(120)}" }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
+    assert(leaks.isEmpty, s"${leaks.size} queries left pins:\n${leaks.mkString("\n")}")
   }
 }

@@ -2,7 +2,7 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase.persistedLeftBy
+import graft.SparkTestBase.pinsLeftByRun
 import graft.operators.GraphOps
 
 class GraphOpsSpec extends AnyFunSuite {
@@ -222,40 +222,39 @@ class GraphOpsSpec extends AnyFunSuite {
   test("kcorePeel leaves only its result persisted: superseded checkpoints released") {
     import spark.implicits._
     val sym = symmetric(randomPairs(61L, n = 90, m = 900)).toDF("src", "dst")
-    val left = persistedLeftBy(GraphOps.kcorePeel(sym, k = 8, rounds = 4).collect())
-    assert(left.size <= 1, s"kcorePeel left ${left.size} persisted RDDs: $left")
+    val left = pinsLeftByRun(GraphOps.kcorePeel(sym, k = 8, rounds = 4))
+    assert(left.isEmpty, s"kcorePeel left $left")
   }
 
   test("pageRank, pull and push, leaves only its result persisted") {
     import spark.implicits._
     val sym = symmetric(randomPairs(71L, n = 90, m = 900)).toDF("src", "dst")
     val left = Seq(true, false).map { pull =>
-      pull -> persistedLeftBy(GraphOps.pageRankImpl(sym, 3, 0.85, pull).collect()).size
+      pull -> pinsLeftByRun(GraphOps.pageRankImpl(sym, 3, 0.85, pull))
     }.toMap
-    assert(left.values.forall(_ <= 1), s"persisted RDDs left, by pull: $left")
+    assert(left.values.forall(_.isEmpty), s"pins left, by pull: $left")
   }
 
   test("labelPropagation leaves only its result persisted") {
     import spark.implicits._
     val sym = symmetric(randomPairs(73L, n = 90, m = 900)).toDF("src", "dst")
-    val left = persistedLeftBy(GraphOps.labelPropagation(sym, rounds = 3).collect())
-    assert(left.size <= 1, s"labelPropagation left ${left.size} persisted RDDs: $left")
+    val left = pinsLeftByRun(GraphOps.labelPropagation(sym, rounds = 3))
+    assert(left.isEmpty, s"labelPropagation left $left")
   }
 
   test("sssp leaves only its result persisted: superseded distances and frontiers released") {
     import spark.implicits._
     val edges = randomPairs(79L, n = 90, m = 400).zipWithIndex
       .map { case ((a, b), i) => (a, b, 1L + i % 5) }.toDF("src", "dst", "w")
-    val left = persistedLeftBy(
-      GraphOps.sssp(edges, Seq(0L, 1L).toDF("id"), rounds = 3).collect())
-    assert(left.size <= 1, s"sssp left ${left.size} persisted RDDs: $left")
+    val left = pinsLeftByRun(GraphOps.sssp(edges, Seq(0L, 1L).toDF("id"), rounds = 3))
+    assert(left.isEmpty, s"sssp left $left")
   }
 
   test("bfs leaves only its result persisted: superseded visited sets and frontiers released") {
     import spark.implicits._
     val edges = randomPairs(83L, n = 90, m = 200).toDF("src", "dst")
-    val left = persistedLeftBy(GraphOps.bfs(edges, Seq(0L).toDF("id"), maxHops = 3).collect())
-    assert(left.size <= 1, s"bfs left ${left.size} persisted RDDs: $left")
+    val left = pinsLeftByRun(GraphOps.bfs(edges, Seq(0L).toDF("id"), maxHops = 3))
+    assert(left.isEmpty, s"bfs left $left")
   }
 
   test("push forms of pageRank and labelPropagation equal plain-Scala references") {

@@ -113,6 +113,12 @@ class SamplingSpec extends AnyFunSuite {
     assert(shardLines(dir) == shardLines(dir2))
   }
 
+  test("shuffle positions are long: no shard size overflows an int") {
+    import org.apache.spark.sql.types.LongType
+    val pos = Sampling.shuffleAssigned(TableIO.documents(spark, sf)).schema("pos")
+    assert(pos.dataType == LongType, s"pos is ${pos.dataType}")
+  }
+
   test("grouped split is group-atomic: every source maps to exactly one fold") {
     val docs = TableIO.documents(spark, sf)
     val assigned = Sampling.splitAssignedGrouped(docs, "source")
@@ -128,24 +134,24 @@ class SamplingSpec extends AnyFunSuite {
     val docs = TableIO.documents(spark, sf)
     val n = docs.count()
     val a = Sampling.shuffleAssigned(docs).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
 
     // a permutation: every doc exactly once, shards in range
     assert(a.length == n && a.map(_._1).distinct.length == n)
     assert(a.forall { case (_, s, _) => s >= 0 && s < 8 })
     // positions are dense 1..|shard| within each shard (readers can seek by offset)
     a.groupBy(_._2).foreach { case (s, rows) =>
-      assert(rows.map(_._3).sorted.toSeq == (1 to rows.length), s"shard $s positions not dense")
+      assert(rows.map(_._3).sorted.toSeq == (1L to rows.length), s"shard $s positions not dense")
     }
     // no shard starves (md5 spreads uniformly; 500 docs over 8 shards)
     assert(a.groupBy(_._2).size == 8, "all 8 shards populated")
 
     // retry-reproducible; a different seed yields a different order
     val b = Sampling.shuffleAssigned(docs).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(a.sortBy(_._1).toSeq == b.sortBy(_._1).toSeq, "same seed must reproduce")
     val c = Sampling.shuffleAssigned(docs, seed = "other").collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getInt(2)))
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
     assert(a.sortBy(_._1).toSeq != c.sortBy(_._1).toSeq, "seed must change the permutation")
   }
 

@@ -93,11 +93,9 @@ class SpatialMlSpec extends AnyFunSuite {
       .map(r => r.getLong(0) -> r.getSeq[Float](1)).toSeq
 
   test("q_kmeans leaves nothing cached and equals a plain-Scala Lloyd's reference") {
-    spark.catalog.clearCache()
     var out: Seq[(Long, Long, Long, Long)] = Nil
-    val left = SparkTestBase.persistedLeftBy { out = kmeansRows(Clustering.qKmeans(spark, sf)) }
-    assert(left.isEmpty, s"persisted RDDs left: $left")
-    assert(spark.sharedState.cacheManager.isEmpty, "the quantized frame stayed cached")
+    val left = SparkTestBase.pinsLeftBy { out = kmeansRows(Clustering.qKmeans(spark, sf)) }
+    assert(left.isEmpty, s"the quantized frame stayed pinned: $left")
     assert(out == kmeansReference(embeddingRows(sf), 8, 2))
   }
 

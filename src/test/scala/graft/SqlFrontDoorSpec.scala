@@ -262,7 +262,7 @@ class SqlFrontDoorSpec extends AnyFunSuite {
         |        CAST(CAST(conv(substring(skey, 1, 8), 16, 10) AS BIGINT) % 8 AS INT) AS shard
         |      FROM a)
         |SELECT doc_id, shard,
-        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY skey, doc_id) AS INT) AS pos
+        |  CAST(row_number() OVER (PARTITION BY shard ORDER BY skey, doc_id) AS BIGINT) AS pos
         |FROM b ORDER BY shard, pos""".stripMargin)
     sameResult(shuffleSql, pipeline.Sampling.sampleShuffle(spark, sf))
 
