@@ -1,7 +1,8 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 
 import graft.functions.FastHash
 import graft.Pins
@@ -526,20 +527,116 @@ object Dedup {
 
   // ---- connected components over near-dup pairs -----------------------------------------
 
+  /** Pair count at or under which [[connectedComponents]] labels on the driver: 16 MB of
+    * collected ids (the whole driver bound is in its doc). */
+  private val DriverGateEdges = 1000000L
+
+  private val IdTypes = Set[DataType](ByteType, ShortType, IntegerType, LongType)
+
   /**
-   * Connected components of an undirected (a_id, b_id) pair graph via iterative min-label
-   * propagation: every node starts labeled with itself; each round, a node adopts the
-   * minimum label among itself and its neighbors; stop when no label changes. Rounds =
-   * O(graph diameter) — near-dup clusters are shallow (dupes of dupes of one origin), so
-   * this converges in a handful of rounds even at corpus scale. Each round is one shuffle
-   * on the edge key; labels are checkpointed and the previous round released — the
-   * standard large-scale CC shape (what GraphX/GraphFrames do internally).
+   * Connected components of an undirected (a_id, b_id) pair graph. Returns (doc_id,
+   * component) for every node that appears in a pair, each component labelled with its
+   * minimum id, in the pairs' own integral id type (the wider of the two). Ids must be
+   * integral: any other type is rejected. A pair with a null id relates no two documents
+   * and is dropped before either form runs, so a node paired only with nulls is absent.
    *
-   * Returns (doc_id, component) for every node that appears in a pair. The cached edge
-   * list and every superseded checkpoint are freed before it returns; the result reads
-   * the last round's checkpoint, which is the caller's to `Pins.release`.
+   * The pairs are pinned once (one checkpoint, one job) and counted while the pin
+   * computes them; the count picks the form:
+   *  - At or under 1M edges: the edges are collected once as primitive longs and
+   *    [[unionFindComponents]] labels them on the driver. The driver holds 32 B per edge
+   *    (the collected ends and a sorted copy) and ~150 B per node while the result is
+   *    built, 84 B per node of it kept in the result frame. A pair graph has at most two
+   *    nodes per edge, so at the gate that is ≤ ~330 MB in the worst case (every pair
+   *    disjoint), beside the graph operators' 2M-vertex broadcast gates. Two jobs (pin,
+   *    collect) whatever the graph's diameter. The result is a local frame that pins
+   *    nothing, so the pair checkpoint is freed before the call returns; `Pins.release`
+   *    on it is harmless.
+   *  - Past the gate: iterative min-label propagation over the pinned pairs. Every node
+   *    starts labeled with itself; each round, a node adopts the minimum label among
+   *    itself and its neighbors; stop when no label changes. Rounds = O(graph
+   *    diameter), each one shuffle on the edge key; labels are checkpointed and the
+   *    previous round released — the standard large-scale CC shape (what
+   *    GraphX/GraphFrames do internally). The pin adds one job and one stored copy of
+   *    the pairs ahead of the loop, and that copy stays, beside the cached symmetric edge
+   *    list the loop builds from it, through every round. The pinned pairs, the edge list
+   *    and every superseded checkpoint are freed before it returns; the result reads the
+   *    last round's checkpoint, which is the caller's to `Pins.release`.
+   *
+   * The gate rests on bench_cc_gate.json. `gate_sizing`: on local[4] over random graphs
+   * the driver form labelled 1M edges in 0.9–1.0 s, the min-label loop 100k edges in
+   * 6–11 s. `past_gate`: at 100k edges the pin cost one more job (220 against 219) and
+   * 8.4 MB more storage (19.1 against 10.7 MB), with no time difference beyond the
+   * runs' spread. An ingest micro-batch's pair graph is a few dozen edges, so it takes
+   * the driver form, where the min-label loop would run ~10 jobs of 32- and 64-task
+   * stages over it (the corpus_pipeline A/B is in the same file).
    */
   def connectedComponents(pairs: DataFrame): DataFrame = Pins.scoped {
+    val (edges, n) = pinEdges(pairs)
+    val labels = if (n > DriverGateEdges) minLabelComponents(edges) else {
+      val ends = edges.queryExecution.toRdd.mapPartitions { it =>
+        val b = Array.newBuilder[Long]
+        it.foreach { r => b += r.getLong(0); b += r.getLong(1) }
+        Iterator.single(b.result())
+      }.collect().flatten
+      val (ids, comps) = unionFindComponents(ends)
+      val spark = pairs.sparkSession
+      import spark.implicits._
+      ids.zip(comps).toSeq.toDF("doc_id", "component")
+    }
+    val idType = Seq("a_id", "b_id").map(pairs.schema(_).dataType).maxBy(_.defaultSize)
+    if (idType == LongType) labels
+    else labels.select(col("doc_id").cast(idType).as("doc_id"),
+      col("component").cast(idType).as("component"))
+  }
+
+  /** The (a_id, b_id) pairs pinned as longs, a pair with a null id dropped, and their
+    * count, observed while the pin computes them (no job of its own). */
+  private[graft] def pinEdges(pairs: DataFrame): (DataFrame, Long) = {
+    val types = Seq("a_id", "b_id").map(c => pairs.schema.find(_.name == c).map(_.dataType))
+    require(types.forall(_.exists(IdTypes)),
+      s"pair frame needs integral columns (a_id, b_id); schema ${pairs.schema.simpleString}")
+    val rows = new Observation()
+    val edges = Pins.checkpoint(pairs
+      .select(col("a_id").cast("long").as("a_id"), col("b_id").cast("long").as("b_id"))
+      .filter(col("a_id").isNotNull && col("b_id").isNotNull)
+      .observe(rows, count(lit(1)).as("n")))
+    (edges, rows.get("n").asInstanceOf[Long])
+  }
+
+  /**
+   * Union-find over `ends`, edges stored as consecutive (a, b) ids. Ids are remapped to
+   * their rank among the sorted distinct ids, so the parent links are one int array and
+   * union by minimum root labels each component with its minimum id. Path compression
+   * keeps every find near-constant. Returns the sorted distinct ids and each one's
+   * component label.
+   */
+  private def unionFindComponents(ends: Array[Long]): (Array[Long], Array[Long]) = {
+    val sorted = ends.clone()
+    java.util.Arrays.sort(sorted)
+    var n = 0
+    for (i <- sorted.indices if n == 0 || sorted(i) != sorted(n - 1)) {
+      sorted(n) = sorted(i)
+      n += 1
+    }
+    val ids = java.util.Arrays.copyOf(sorted, n)
+    val parent = Array.tabulate(n)(identity)
+    def find(x: Int): Int = {
+      var root = x
+      while (parent(root) != root) root = parent(root)
+      var y = x
+      while (parent(y) != root) { val next = parent(y); parent(y) = root; y = next }
+      root
+    }
+    for (e <- 0 until ends.length by 2) {
+      val ra = find(java.util.Arrays.binarySearch(ids, ends(e)))
+      val rb = find(java.util.Arrays.binarySearch(ids, ends(e + 1)))
+      if (ra < rb) parent(rb) = ra else parent(ra) = rb
+    }
+    (ids, Array.tabulate(n)(i => ids(find(i))))
+  }
+
+  /** The distributed form of [[connectedComponents]], over its [[pinEdges]]. */
+  private[graft] def minLabelComponents(pairs: DataFrame): DataFrame = {
     // symmetric edge list, pre-partitioned on the probe key and cached: the per-round
     // join then reuses ONE materialized partitioning instead of re-shuffling the (larger)
     // edge set every iteration. No distinct: min-label propagation is insensitive to edge
@@ -641,7 +738,7 @@ object Dedup {
    * "keep" is `doc_id == component` with no extra aggregation. This is the same policy
    * `dedup_components` exposes, applied end-to-end (round 1 used a greedy b-side drop
    * here, inconsistent with the component clustering one query earlier).
-   * The verified pair frame is built once and the CC loop runs on it directly; grams are
+   * The verified pair frame is built once and the CC runs on it directly; grams are
    * cached inside [[dedupMinhash]] so signature + verify share one computation.
    * Returns kept docs, summarized per source for a stable driver check.
    */

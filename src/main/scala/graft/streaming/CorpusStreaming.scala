@@ -23,8 +23,11 @@ import graft.pipeline.Dedup
  *    window on its content hash runs on that read (exact duplicates share bands and
  *    hash, so they need neither). Gram sets and LSH bands (map-only typed kernels) are
  *    computed for the survivors only. One semi-join against the index drops cross-batch
- *    collisions, then the verified pair + connected-components pass dedups the rest
- *    WITHIN the batch (same policy as the batch engine's `Dedup.dedupedCorpus`).
+ *    collisions, then the verified pairs among the rest are pinned once and clustered
+ *    WITHIN the batch (same policy as the batch engine's `Dedup.dedupedCorpus`): a
+ *    batch's pair graph sits far under `Dedup.connectedComponents`' driver gate, so it
+ *    is collected once and its components found by union-find on the driver, in two
+ *    jobs, where a distributed min-label loop would run several rounds.
  *    Admitted docs' index rows append last. Each of these frames is pinned once and
  *    released before the pass returns; only the admitted frame stays, for the caller.
  *  - The cross-batch near-dup drop is CANDIDATE-level (band collision, not verified
@@ -71,8 +74,8 @@ object CorpusStreaming {
    * survivors are pinned (checkpointed) with their content hash; their gram sets, their
    * index rows (LSH bands + content lane) and, against an existing index, the ids that
    * collide with it are pinned next. The pair graph, the admitted frame and the index
-   * append read only those pinned frames. Every frame the call pins, the
-   * connected-components labels included, is freed before it returns (`Pins.scoped`);
+   * append read only those pinned frames. Every frame the call pins, the pair graph
+   * the connected components read included, is freed before it returns (`Pins.scoped`);
    * the returned admitted frame is the one checkpoint left, and it belongs to the
    * caller.
    */

@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.IntegerType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.Dedup
@@ -50,6 +53,111 @@ class DedupSpec extends AnyFunSuite {
     }
     assert(comp == (1L to 8L).map(_ -> 1L).toMap)
     assert(left.isEmpty, s"connectedComponents left $left")
+  }
+
+  /** The min-label form as [[Dedup.connectedComponents]] runs it past its driver gate. */
+  private def minLabel(pairs: DataFrame): DataFrame =
+    Pins.scoped(Dedup.minLabelComponents(Dedup.pinEdges(pairs)._1))
+
+  test("the min-label form leaves only its result persisted") {
+    import spark.implicits._
+    val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    var comp = Map.empty[Long, Long]
+    val left = SparkTestBase.pinsLeftBy {
+      val labels = minLabel(pairs)
+      comp = labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Pins.release(labels)
+    }
+    assert(comp == (1L to 8L).map(_ -> 1L).toMap)
+    assert(left.isEmpty, s"the min-label form left $left")
+  }
+
+  test("connectedComponents under the driver gate returns a frame that pins nothing") {
+    import spark.implicits._
+    val pairs = (1L until 8L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    var comp = Map.empty[Long, Long]
+    val left = SparkTestBase.pinsLeftBy {
+      comp = Dedup.connectedComponents(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
+    assert(comp == (1L to 8L).map(_ -> 1L).toMap)
+    assert(left.isEmpty, s"the gated connectedComponents left $left before any release")
+  }
+
+  /** Plain union-find on a boxed map, union by minimum root: every node maps to the
+    * minimum id of its component. */
+  private def referenceComponents(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = { val p = parent.getOrElseUpdate(x, x); if (p == x) x else find(p) }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def components(labels: DataFrame): Map[Long, Long] =
+    try labels.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    finally Pins.release(labels)
+
+  test("both connected-components forms equal a plain union-find on seeded pair graphs") {
+    import spark.implicits._
+    for (seed <- Seq(7L, 8L, 9L)) {
+      val rnd = new scala.util.Random(seed)
+      // disjoint shapes in their own id ranges, each oriented at random
+      val chainMinFirst = (0 until 6).map(i => (100L + i, 101L + i))
+      val chainMinLast = (0 until 6).map(i => (300L - i, 299L - i))
+      val starMinCenter = (1 to 5).map(i => (400L, 400L + i))
+      val starMaxCenter = (1 to 5).map(i => (510L, 510L - i))
+      val multi = Seq((600L, 601L), (601L, 600L), (600L, 601L), (601L, 602L), (602L, 602L))
+      val extremes = Seq((-5L, -9L), (-9L, -1L), (Long.MaxValue, Long.MaxValue - 3),
+        (Long.MaxValue - 3, Long.MaxValue - 1), (Long.MinValue, Long.MinValue + 1))
+      // a random sparse graph on 40 shuffled ids: several components of mixed shape
+      val ids = rnd.shuffle((1000L until 1040L).toVector)
+      val random = Seq.fill(30)((ids(rnd.nextInt(40)), ids(rnd.nextInt(40))))
+      val graph = rnd.shuffle(
+        (chainMinFirst ++ chainMinLast ++ starMinCenter ++ starMaxCenter ++ multi ++
+          extremes ++ random).map { case (a, b) => if (rnd.nextBoolean()) (a, b) else (b, a) })
+      val expected = referenceComponents(graph)
+      val pairs = graph.toDF("a_id", "b_id")
+      assert(components(Dedup.connectedComponents(pairs)) == expected, s"driver form, seed $seed")
+      assert(components(minLabel(pairs)) == expected, s"min-label form, seed $seed")
+    }
+  }
+
+  test("both connected-components forms drop a pair with a null id") {
+    import spark.implicits._
+    val pairs = Seq((Some(1L), Some(2L)), (Some(2L), None), (None, Some(3L)), (None, None),
+      (Some(4L), Some(5L))).toDF("a_id", "b_id")
+    val expected = Map(1L -> 1L, 2L -> 1L, 4L -> 4L, 5L -> 4L)
+    assert(components(Dedup.connectedComponents(pairs)) == expected)
+    assert(components(minLabel(pairs)) == expected)
+    // nothing left once the nulls go, and an empty frame, label nothing
+    for (empty <- Seq(pairs.filter($"a_id".isNull), pairs.limit(0)))
+      assert(components(Dedup.connectedComponents(empty)).isEmpty)
+  }
+
+  test("connectedComponents rejects non-integral ids and keeps an integral id type") {
+    import spark.implicits._
+    for (pairs <- Seq(Seq(("1", "2")).toDF("a_id", "b_id"), Seq((1.0, 2.5)).toDF("a_id", "b_id"),
+        Seq((1L, 2L)).toDF("a_id", "c_id"))) {
+      val e = intercept[IllegalArgumentException](Dedup.connectedComponents(pairs))
+      assert(e.getMessage.contains("integral columns (a_id, b_id)"), e.getMessage)
+    }
+    val ints = Dedup.connectedComponents(Seq((3, 2), (2, 1), (7, 8)).toDF("a_id", "b_id"))
+    assert(ints.schema.map(_.dataType) == Seq(IntegerType, IntegerType))
+    assert(ints.collect().map(r => r.getInt(0) -> r.getInt(1)).toMap ==
+      Map(1 -> 1, 2 -> 1, 3 -> 1, 7 -> 7, 8 -> 7))
+  }
+
+  test("the gated connectedComponents starts a fixed number of jobs whatever the diameter") {
+    import spark.implicits._
+    def jobs(n: Long): Int = {
+      val chain = (1L until n).map(i => (i, i + 1)).toDF("a_id", "b_id")
+      JobCounter.count(spark.sparkContext)(Dedup.connectedComponents(chain))
+    }
+    val (short, long) = (jobs(8), jobs(64))
+    assert(long <= 2, s"a 64-node chain started $long jobs")
+    assert(short == long, s"8-node chain: $short jobs, 64-node chain: $long")
   }
 
   test("dedup_ngram_jaccard after an external rewrite of documents.parquet reads the new rows") {
