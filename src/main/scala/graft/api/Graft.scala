@@ -255,8 +255,9 @@ object Graft {
       discriminator: org.apache.spark.sql.Column, salts: Int = 16): DataFrame =
     SkewJoin.saltedInner(probe, build, key, discriminator, salts)
 
-  /** Fixed-iteration damped PageRank over a symmetric (src, dst) edge list; one
-    * shuffle per iteration, O(1) plan size in iterations. */
+  /** Fixed-iteration damped PageRank over a symmetric (src, dst) edge list; no
+    * exchange per iteration up to 2M vertices, one past that; O(1) plan size in
+    * iterations. */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85): DataFrame =
     graft.operators.GraphOps.pageRank(
       requireCols(edges, "edges", "src", "dst"), iterations, damping)

@@ -1,18 +1,29 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.VectorExpressions.{
+  packSortedVarint, packedIntersectSize, unpackSortedVarint}
 
 import graft.Pins
 import graft.sources.TableIO
 
 /**
- * Iterative graph analytics beyond connected components: fixed-iteration PageRank —
- * the GraphX/Pregel capability class expressed as pure DataFrame iteration, the same
- * large-scale shape as Dedup.connectedComponents: edges pre-partitioned + cached on the
- * join key, ONE shuffle per iteration (the contribution groupBy), checkpoint each round
- * so the logical plan and Catalyst re-analysis cost stay O(1) in iterations, and the
- * driver loops over ITERATIONS, never rows.
+ * Iterative graph analytics beyond connected components — the GraphX/Pregel capability
+ * class expressed as pure DataFrame iteration, the same large-scale shape as
+ * Dedup.connectedComponents: the adjacency is built and cached once per call
+ * ([[packedAdjacency]]; sssp keeps its weighted form), each round is checkpointed so
+ * the logical plan and Catalyst re-analysis cost stay O(1) in rounds, and the driver
+ * loops over ROUNDS, never rows.
+ *
+ * Gates: a vertex-sized frame (ranks, labels, a frontier, a peel set) broadcasts up to
+ * [[VertexGate]] vertices and triangleCount's packed adjacency up to [[EdgeGate]]
+ * oriented edges. Each operator decides its gate once, off the count it already runs
+ * on its cached or checkpointed input — checkpointed frames carry no size statistics,
+ * so Spark's auto-broadcast cannot decide it. Under the gate a pageRank iteration or a
+ * labelPropagation round runs with zero exchanges (the pull form); past it, the push
+ * form pays the contribution (vote) exchanges. The past-gate forms are `private[graft]`
+ * so specs run them on small graphs.
  *
  * Pins: an operator here frees every pin its result does not read ([[graft.Pins]]). A
  * superseded round's checkpoint is released once its successor is materialized; the
@@ -28,6 +39,42 @@ import graft.sources.TableIO
  */
 object GraphOps {
 
+  /** Vertex count up to which a vertex-sized frame broadcasts (see the object doc). */
+  private val VertexGate = 2000000L
+
+  /**
+   * Oriented-edge count up to which triangleCount broadcasts its packed adjacency: the
+   * frame holds m delta-varints (≤3 B each for ids under 2^21) plus one key row per
+   * vertex, so 32M edges bound the broadcast under ~100 MB of payload + O(n) key
+   * overhead — inside torrent-broadcast territory on a 1000-executor cluster, and an
+   * order of magnitude past the sf1 rehearsal graph.
+   */
+  private val EdgeGate = 32000000L
+
+  /**
+   * The adjacency pageRank, bfs, labelPropagation and kcorePeel read, cached: one row
+   * per source vertex, `(src, nbrs, deg)`, with its out-neighbour SET as sorted
+   * delta-varint binary (~1.5 B per neighbour, [[VarintCodec]]) and the set's size.
+   * The groupBy(src) is the only m-row exchange of the build; collect_set dedups
+   * multi-edges, and its partial aggregate combines map-side. Neighbour ids
+   * re-materialize only inside each round's map-side explode. Packed rows measured
+   * never-slower than one row per edge and ~6x smaller cached
+   * (bench_pagerank_packed_r12.json, bench_graphpack_packed_r12.json).
+   */
+  private[graft] def packedAdjacency(edges: DataFrame): DataFrame =
+    Pins.cache(edges.select(col("src"), col("dst"))
+      .groupBy(col("src")).agg(sort_array(collect_set(col("dst"))).as("ds"))
+      .select(col("src"), packSortedVarint(col("ds")).as("nbrs"),
+        size(col("ds")).cast("long").as("deg")))
+
+  /** `rounds` steps from `init`: each round checkpointed, the one it supersedes released. */
+  private def iterate(init: DataFrame, rounds: Int)(step: DataFrame => DataFrame): DataFrame =
+    (1 to rounds).foldLeft(Pins.checkpoint(init)) { (cur, _) =>
+      val next = Pins.checkpoint(step(cur))
+      Pins.release(cur)
+      next
+    }
+
   /**
    * Fixed-iteration damped PageRank over a symmetric (src, dst) edge list. Multi-edges
    * are deduplicated internally (the adjacency build is set-valued), so callers may pass
@@ -35,84 +82,52 @@ object GraphOps {
    * means every node has both in- and out-degree, so no dangling-mass redistribution
    * term is needed.
    *
-   * Since r12 the adjacency is varint-PACKED: one cached row per VERTEX carrying its
-   * out-neighbor list as delta-varint binary instead of one row per out-edge —
-   * measured never-slower and 5-25% faster at sf0.1/sf1 with an ~6x smaller cached
-   * footprint (bench_pagerank_packed_r12.json). Since r14 the broadcast-gated regime
-   * additionally PULLS contributions (see [[pageRankImpl]]): each iteration reads the
-   * cached adjacency, joins the broadcast rank frame map-side on the EXPLODED neighbor
-   * id, and the summing aggregate is keyed by the adjacency row's own vertex — which
-   * the cached frame is already hash-partitioned by — so a gated iteration runs with
-   * ZERO exchanges (guide §2.4; the r12 push form paid one m-row contribution exchange
-   * per iteration). The pull rule sums pr(u)/deg(u) over u ∈ N(v), equal to the push
-   * rule's in-contribution sum exactly because the documented input contract is a
-   * SYMMETRIC edge list. Pull was adopted over push in bench_graph_pull_r14.json
-   * (interleaved pairs at sf0.1 and sf1, equal results); the push form remains the
-   * live path past the 2M-vertex gate.
+   * Under the [[VertexGate]] each iteration PULLS (r14, adopted in
+   * bench_graph_pull_r14.json over interleaved pairs at sf0.1 and sf1): the rank frame,
+   * carrying c = pr/deg precomputed, broadcasts and joins map-side on the EXPLODED
+   * neighbour id, and the summing aggregate is keyed by (src, deg), a superset of the
+   * cached adjacency's HashPartitioning(src), so Catalyst inserts NO exchange — the
+   * whole iteration is one map-side span over the cached frame (guide §2.4). The pull
+   * rule sums pr(u)/deg(u) over u ∈ N(v), equal to the push rule's in-contribution sum
+   * exactly because the input contract is a SYMMETRIC edge list; double-summation order
+   * differs by ~1e-15, which the oracle's 6-decimal rounding absorbs. Past the gate the
+   * rank frame must not broadcast, and a pull join would shuffle m exploded rows, so
+   * [[pageRankPush]] runs instead.
    */
   def pageRank(edges: DataFrame, iterations: Int, damping: Double = 0.85): DataFrame =
-    pageRankImpl(edges, iterations, damping, pull = true)
-
-  /**
-   * Shared packed-adjacency PageRank body. `pull = true` (r14, broadcast-gated regime
-   * only) flips each iteration from push (explode contributions keyed by DESTINATION,
-   * pay one m-row exchange for the groupBy(dst) sum) to pull (each adjacency row
-   * SUMS ITS OWN incoming mass): the rank frame — carrying c = pr/deg precomputed —
-   * broadcasts and joins map-side on the exploded neighbor id, and the summing
-   * aggregate is keyed by (src, deg), a superset of the cached adjacency's
-   * HashPartitioning(src), so Catalyst inserts NO exchange — the whole iteration is
-   * one map-side whole-stage span over the cached frame (guide §2.4). Pull equals
-   * push exactly on the documented SYMMETRIC input contract (N_in(v) = N_out(v));
-   * double-summation grouping order differs, bounded by the same ~1e-15 the oracle's
-   * 6-decimal rounding already absorbs. Past the 2M-vertex gate the rank frame must
-   * not broadcast and a pull join would shuffle m exploded rows — strictly worse —
-   * so the cluster-scale path keeps the r12 push iteration unchanged.
-   */
-  private[graft] def pageRankImpl(edges: DataFrame, iterations: Int, damping: Double,
-      pull: Boolean): DataFrame = Pins.scoped {
-    import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
-    val adj = Pins.cache(edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(sort_array(collect_set(col("dst"))).as("ds"))
-      .select(col("src"), packSortedVarint(col("ds")).as("nbrs"), size(col("ds")).as("deg")))
+      Pins.scoped {
+    val adj = packedAdjacency(edges)
     // one row per vertex (symmetric edges: every node has out-degree >= 1)
     val n = adj.count()
-    val smallRanks = n <= 2000000L
-    if (pull && smallRanks) {
-      var ranks = Pins.checkpoint(adj
-        .select(col("src").as("id"), lit(1.0 / n).as("pr"),
-          (lit(1.0 / n) / col("deg")).as("c")))
-      var it = 0
-      while (it < iterations) {
-        val contribSide = broadcast(ranks.select(col("id").as("nbr"), col("c")))
-        val next = Pins.checkpoint(adj
-          .select(col("src"), col("deg"), explode(unpackSortedVarint(col("nbrs"))).as("nbr"))
-          .join(contribSide, Seq("nbr"))
-          .groupBy(col("src"), col("deg"))
-          .agg((lit((1.0 - damping) / n) + lit(damping) * sum(col("c"))).as("pr"))
-          .select(col("src").as("id"), col("pr"), (col("pr") / col("deg")).as("c")))
-        Pins.release(ranks)
-        ranks = next
-        it += 1
-      }
-      ranks.select(col("id"), col("pr"))
-    } else {
-      var ranks = Pins.checkpoint(adj.select(col("src").as("id"), lit(1.0 / n).as("pr")))
-      var it = 0
-      while (it < iterations) {
-        val rankSide = ranks.withColumnRenamed("id", "src")
-        val contribs = adj
-          .join(if (smallRanks) broadcast(rankSide) else rankSide, Seq("src"))
-          .select(explode(unpackSortedVarint(col("nbrs"))).as("id"),
-            (col("pr") / col("deg")).as("c"))
-        val next = Pins.checkpoint(contribs.groupBy(col("id"))
-          .agg((lit((1.0 - damping) / n) + lit(damping) * sum(col("c"))).as("pr")))
-        Pins.release(ranks)
-        ranks = next
-        it += 1
-      }
-      ranks
-    }
+    if (n > VertexGate) pageRankPush(adj, n, iterations, damping)
+    else iterate(adj.select(col("src").as("id"), lit(1.0 / n).as("pr"),
+        (lit(1.0 / n) / col("deg")).as("c")), iterations) { ranks =>
+      adj.select(col("src"), col("deg"), explode(unpackSortedVarint(col("nbrs"))).as("nbr"))
+        .join(broadcast(ranks.select(col("id").as("nbr"), col("c"))), Seq("nbr"))
+        .groupBy(col("src"), col("deg"))
+        .agg(dampedRank(n, damping).as("pr"))
+        .select(col("src").as("id"), col("pr"), (col("pr") / col("deg")).as("c"))
+    }.select(col("id"), col("pr"))
   }
+
+  /**
+   * PageRank past the [[VertexGate]], over a [[packedAdjacency]] of `n` vertices: each
+   * iteration joins the rank frame onto the adjacency by source (a shuffle join),
+   * explodes the contributions keyed by DESTINATION and pays one exchange for the
+   * groupBy(id) sum.
+   */
+  private[graft] def pageRankPush(adj: DataFrame, n: Long, iterations: Int,
+      damping: Double): DataFrame =
+    iterate(adj.select(col("src").as("id"), lit(1.0 / n).as("pr")), iterations) { ranks =>
+      adj.join(ranks.withColumnRenamed("id", "src"), Seq("src"))
+        .select(explode(unpackSortedVarint(col("nbrs"))).as("id"),
+          (col("pr") / col("deg")).as("c"))
+        .groupBy(col("id")).agg(dampedRank(n, damping).as("pr"))
+    }
+
+  /** One vertex's next rank from the sum of its contributions `c`. */
+  private def dampedRank(n: Long, damping: Double): Column =
+    lit((1.0 - damping) / n) + lit(damping) * sum(col("c"))
 
   /**
    * Co-purchase edge list (parts sharing an order, both directions) WITHOUT a fact-fact
@@ -192,17 +207,11 @@ object GraphOps {
    * `edges`: directed (src, dst), multi-edges fine; `seeds`: (id). Returns (id, hop).
    */
   def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = Pins.scoped {
-    import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
-    // r12: packed adjacency (the pageRank treatment) — one cached row per vertex,
-    // multi-edges collapsed by the set build, neighbor ids re-materializing only
-    // inside the per-round map-side explode (bench_graphpack_packed_r12.json). The
-    // frontier join stays an unhinted shuffle join: the packed row is thin, while a
-    // 2-hop frontier grows to nearly the whole vertex set, so broadcasting it lost
-    // (bench_frontier_gate_r13.json); pulling onto the adjacency's partitioning lost
-    // too (bench_graph_pull_r14.json) and would only be sound on symmetric input.
-    val adj = Pins.cache(edges.select(col("src"), col("dst"))
-      .groupBy(col("src"))
-      .agg(packSortedVarint(sort_array(collect_set(col("dst")))).as("nbrs")))
+    // The frontier join stays an unhinted shuffle join, with no gate: the packed row is
+    // thin, while a 2-hop frontier grows to nearly the whole vertex set, so broadcasting
+    // it lost (bench_frontier_gate_r13.json); pulling onto the adjacency's partitioning
+    // lost too (bench_graph_pull_r14.json) and would only be sound on symmetric input.
+    val adj = packedAdjacency(edges)
     var visited = Pins.checkpoint(seeds.select(col("id")).distinct()
       .select(col("id"), lit(0).as("hop")))
     var frontier = visited.select(col("id"))
@@ -308,8 +317,15 @@ object GraphOps {
    * (defaultParallelism, not a local constant); the partitioned SMJ path past the
    * broadcast gate gets its parallelism from the join exchange as before.
    */
-  def triangleCount(edges: DataFrame, broadcastGateEdges: Long = 32000000L): DataFrame = {
-    import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, packedIntersectSize}
+  def triangleCount(edges: DataFrame): DataFrame = {
+    val oriented = orientedEdges(edges)
+    // the count reads the checkpoint, not the lineage; past the gate the partitioned
+    // sort-merge path runs (billion-edge graphs), ~5x cheaper per shuffled byte than arrays
+    trianglesOver(oriented, broadcastAdjacency = oriented.count() <= EdgeGate)
+  }
+
+  /** triangleCount's deduplicated, degree-oriented (a, b) edge list, checkpointed. */
+  private[graft] def orientedEdges(edges: DataFrame): DataFrame = {
     val und = edges
       .select(least(col("src"), col("dst")).cast("long").as("u"),
         greatest(col("src"), col("dst")).cast("long").as("v"))
@@ -322,7 +338,7 @@ object GraphOps {
     // localCheckpoint: the oriented edge list feeds THREE consumers (the edge stream and
     // both adjacency joins) — without materialization Spark re-derives the whole
     // scan+groupBy+distinct lineage once per consumer (measured 3x the work at sf0.1).
-    val oriented = Pins.checkpoint(und
+    Pins.checkpoint(und
       .join(deg.select(col("id").as("u"), col("deg").as("du")), Seq("u"))
       .join(deg.select(col("id").as("v"), col("deg").as("dv")), Seq("v"))
       .select(when(uFirst, col("u")).otherwise(col("v")).as("a"),
@@ -330,24 +346,21 @@ object GraphOps {
       // explicit partition count: an un-numbered repartition is itself
       // AQE-coalescible, which would undo the spread (see Scaladoc)
       .repartition(edges.sparkSession.sparkContext.defaultParallelism * 2, col("a"), col("b")))
-    // Scale-adaptive broadcast off the ALREADY-MATERIALIZED edge count (free on the
-    // checkpointed RDD): the packed adjacency frame holds exactly m delta-varints
-    // (≤3 B each for ids under 2^21) plus one key row per vertex, so m ≤ 32M bounds the
-    // broadcast under ~100 MB of payload + O(n) key overhead — comfortably inside
-    // torrent-broadcast territory on a 1000-executor cluster, and an order of magnitude
-    // past the sf1 rehearsal graph. Past the gate the partitioned sort-merge path is
-    // unchanged (billion-edge graphs), just ~5x cheaper per shuffled byte than arrays.
-    // gate parameterized so specs can force the partitioned path on small graphs
-    val smallAdj = oriented.count() <= broadcastGateEdges
-    val adj0 = oriented.groupBy(col("a"))
-      .agg(packSortedVarint(sort_array(collect_set(col("b")))).as("nbrs"))
+  }
+
+  /**
+   * The triangle count over [[orientedEdges]]; `broadcastAdjacency` is triangleCount's
+   * [[EdgeGate]] outcome, and `false` is the partitioned path past it.
+   */
+  private[graft] def trianglesOver(oriented: DataFrame, broadcastAdjacency: Boolean): DataFrame = {
     // Materialize adjacency once on BOTH paths — it feeds two joins, and without a
     // checkpoint each consumer re-runs the groupBy + collect_set + pack over the full
     // edge set (two broadcast builds on the small path; twice the heaviest aggregation
     // on the billion-edge partitioned path). The packed frame is m varints + n keys —
     // the cheapest plan node in the job to persist.
-    val adj = Pins.checkpoint(adj0)
-    val adjSide = if (smallAdj) broadcast(adj) else adj
+    val adj = Pins.checkpoint(oriented.groupBy(col("a"))
+      .agg(packSortedVarint(sort_array(collect_set(col("b")))).as("nbrs")))
+    val adjSide = if (broadcastAdjacency) broadcast(adj) else adj
     // An edge whose head has no out-neighbors closes no triangle — the inner join
     // dropping it is correct, not a loss.
     //
@@ -356,13 +369,12 @@ object GraphOps {
     // materializes ONE broadcast relation shared by both joins — at the 32M-edge gate
     // that is one ~100 MB packed payload + HashedRelation overhead on the driver, not
     // two (the r11 form renamed columns below the second join, splitting the exchange).
-    val counted = oriented
+    oriented
       .join(adjSide, Seq("a"))
       .withColumnRenamed("nbrs", "na")
       .join(adjSide.as("adj2"), col("b") === col("adj2.a"))
       .select(packedIntersectSize(col("na"), col("adj2.nbrs")).as("t"))
       .agg(sum(col("t")).cast("long").as("triangles"))
-    counted
   }
 
   /**
@@ -405,79 +417,52 @@ object GraphOps {
    * better but are not replayable — fixed synchronous rounds are what an oracle can
    * check).
    *
-   * Per round (broadcast-gated regime, r14): ZERO shuffles — votes are PULLED onto
-   * the cached adjacency's own partitioning, see [[labelPropagationImpl]]; the argmax
-   * rides a `max(struct(cnt, -label))` so no per-node sort or window appears. Past
-   * the 2M gate: one vote-count shuffle + one argmax shuffle per round (the r12 push
-   * form). Same iterative discipline as pageRank: edges cached + pre-partitioned on
-   * the join key, checkpoint per round, driver loops over ROUNDS never rows.
+   * Per round under the [[VertexGate]] (r14, adopted in bench_graph_pull_r14.json):
+   * ZERO exchanges — each adjacency row counts ITS OWN neighbours' labels: the label
+   * frame broadcasts and joins map-side on the exploded neighbour id, and both the
+   * (src, label) vote count and the argmax over src are keyed by the adjacency row's own
+   * vertex, which the cached frame is already hash-partitioned by (guide §2.4). This
+   * pull rule equals push bit-for-bit on the SYMMETRIC input contract (the multiset of
+   * labels v collects from N_out(v) IS the multiset of votes v receives from N_in(v)).
+   * Past the gate [[labelPropagationPush]] runs. The argmax rides a
+   * `max(struct(cnt, -label))`, so no per-node sort or window appears.
    *
    * `edges` must be symmetric (src, dst); multi-edges are deduplicated. Returns
    * (id, label) after `rounds` rounds.
    */
-  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame =
-    labelPropagationImpl(edges, rounds, pull = true)
+  def labelPropagation(edges: DataFrame, rounds: Int): DataFrame = Pins.scoped {
+    val adj = packedAdjacency(edges)
+    if (adj.count() > VertexGate) labelPropagationPush(adj, rounds)
+    else iterate(ownLabels(adj), rounds) { labels =>
+      adj.select(col("src"), explode(unpackSortedVarint(col("nbrs"))).as("nbr"))
+        .join(broadcast(labels.select(col("id").as("nbr"), col("label"))), Seq("nbr"))
+        .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
+        .transform(mostVoted("src"))
+    }
+  }
 
   /**
-   * Shared packed-adjacency LPA body. `pull = true` (r14, broadcast-gated regime only)
-   * flips each round from push (explode votes keyed by the DESTINATION neighbor, pay
-   * one m-row exchange for groupBy(dst, label) and a second for the argmax
-   * groupBy(dst)) to pull (each adjacency row counts ITS OWN neighbors' labels): the
-   * label frame broadcasts and joins map-side on the exploded neighbor id, and BOTH
-   * aggregates — the (src, label) vote count and the argmax over src — are keyed by
-   * the adjacency row's own vertex, which the cached frame is already hash-partitioned
-   * by, so a gated round runs with ZERO exchanges (guide §2.4; the r12 push form paid
-   * two). Pull equals push bit-for-bit on the documented SYMMETRIC input contract
-   * (the multiset of labels v collects from N_out(v) IS the multiset of votes v
-   * receives from N_in(v)); integer counts, no float-order caveat. Past the 2M-vertex
-   * gate the label frame must not broadcast and a pull join would shuffle m exploded
-   * rows — strictly worse — so the cluster-scale path keeps the r12 push round
-   * unchanged. Pull was adopted in bench_graph_pull_r14.json.
+   * Label propagation past the [[VertexGate]], over a [[packedAdjacency]]: each round
+   * joins the label frame onto the adjacency by source (a shuffle join), explodes the
+   * votes keyed by the DESTINATION neighbour, and pays one exchange for the
+   * groupBy(dst, label) count and a second for the argmax.
    */
-  private[graft] def labelPropagationImpl(edges: DataFrame, rounds: Int,
-      pull: Boolean): DataFrame = Pins.scoped {
-    import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
-    // r12: packed adjacency (the pageRank treatment) — the set build's one shuffle
-    // now emits ONE row per vertex with the neighbor set in delta-varint binary
-    // (~1.5 B/neighbor) instead of re-exploding to m cached rows; ids re-materialize
-    // only inside the per-round map-side explode. The votes shuffle (push form)
-    // carries combiner-reduced (dst, label, cnt) rows either way.
-    val adj = Pins.cache(edges.select(col("src"), col("dst"))
-      .groupBy(col("src"))
-      .agg(packSortedVarint(sort_array(collect_set(col("dst")))).as("nbrs")))
-    // Same scale-adaptive broadcast as pageRank: one row per vertex, count populates
-    // the cache — broadcast the label frame per round when small, shuffle past it.
-    val smallLabels = adj.count() <= 2000000L
-    var labels = Pins.checkpoint(adj.select(col("src").as("id"))
-      .select(col("id"), col("id").as("label")))
-    var r = 0
-    while (r < rounds) {
-      val next = Pins.checkpoint(if (pull && smallLabels) {
-        val labelSide = broadcast(labels.select(col("id").as("nbr"), col("label")))
-        val votes = adj
-          .select(col("src"), explode(unpackSortedVarint(col("nbrs"))).as("nbr"))
-          .join(labelSide, Seq("nbr"))
-          .groupBy(col("src"), col("label")).agg(count(lit(1)).as("cnt"))
-        votes
-          .groupBy(col("src"))
-          .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-          .select(col("src").as("id"), (-col("m.nl")).as("label"))
-      } else {
-        val labelSide = labels.withColumnRenamed("id", "src")
-        val votes = adj.join(if (smallLabels) broadcast(labelSide) else labelSide, Seq("src"))
-          .select(explode(unpackSortedVarint(col("nbrs"))).as("dst"), col("label"))
-          .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
-        votes
-          .groupBy(col("dst"))
-          .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-          .select(col("dst").as("id"), (-col("m.nl")).as("label"))
-      })
-      Pins.release(labels)
-      labels = next
-      r += 1
+  private[graft] def labelPropagationPush(adj: DataFrame, rounds: Int): DataFrame =
+    iterate(ownLabels(adj), rounds) { labels =>
+      adj.join(labels.withColumnRenamed("id", "src"), Seq("src"))
+        .select(explode(unpackSortedVarint(col("nbrs"))).as("dst"), col("label"))
+        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
+        .transform(mostVoted("dst"))
     }
-    labels
-  }
+
+  /** Round 0 of label propagation: every vertex labelled with its own id. */
+  private def ownLabels(adj: DataFrame): DataFrame =
+    adj.select(col("src").as("id")).select(col("id"), col("id").as("label"))
+
+  /** Each vertex `v`'s most voted label from (v, label, cnt) rows, ties to the smallest. */
+  private def mostVoted(v: String)(votes: DataFrame): DataFrame =
+    votes.groupBy(col(v)).agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
+      .select(col(v).as("id"), (-col("m.nl")).as("label"))
 
   /**
    * `q_label_prop`: two synchronous LPA rounds over the co-purchase graph; output is
@@ -539,24 +524,28 @@ object GraphOps {
    * map-side after the join, so the min-groupBy exchange is unchanged — the win is
    * the probe-side row count, exactly the bfs result in
    * bench_graphpack_packed_r12.json.
+   *
+   * Under the [[VertexGate]] the per-round frontier broadcasts (adopted for sssp in
+   * bench_frontier_gate_r13.json: the fat array<struct<dst,w>> adjacency rows make the
+   * unbroadcast shuffle join the bill, and checkpointed frontiers carry no stats for
+   * auto-broadcast); past it the frontier join shuffles.
    */
-  def sssp(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame =
-    ssspImpl(edges, sources, rounds, gateFrontier = true)
+  def sssp(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame = Pins.scoped {
+    val adj = weightedAdjacency(edges)
+    ssspRounds(adj, sources, rounds, broadcastFrontier = adj.count() <= VertexGate)
+  }
+
+  /** sssp's cached adjacency: one `(src, nbrs: array<struct<dst, w>>)` row per vertex. */
+  private[graft] def weightedAdjacency(edges: DataFrame): DataFrame =
+    Pins.cache(edges.select(col("src"), struct(col("dst"), col("w")).as("e"))
+      .groupBy(col("src")).agg(collect_list(col("e")).as("nbrs")))
 
   /**
-   * `gateFrontier` broadcasts the per-round frontier while the vertex count is under
-   * the 2M gate (adopted for sssp in bench_frontier_gate_r13.json: the fat
-   * array<struct<dst,w>> adjacency rows make the ungated shuffle join the bill, and
-   * checkpointed frontiers carry no stats for auto-broadcast). `false` is the
-   * unbroadcast path every graph past the gate takes; specs pass it to reach that
-   * path on small inputs.
+   * sssp's rounds over a [[weightedAdjacency]]; `broadcastFrontier` is sssp's
+   * [[VertexGate]] outcome, and `false` is the path past it.
    */
-  private[graft] def ssspImpl(
-      edges: DataFrame, sources: DataFrame, rounds: Int, gateFrontier: Boolean): DataFrame =
-      Pins.scoped {
-    val adj = Pins.cache(edges.select(col("src"), struct(col("dst"), col("w")).as("e"))
-      .groupBy(col("src")).agg(collect_list(col("e")).as("nbrs")))
-    val smallFrontier = gateFrontier && adj.count() <= 2000000L
+  private[graft] def ssspRounds(adj: DataFrame, sources: DataFrame, rounds: Int,
+      broadcastFrontier: Boolean): DataFrame = {
     var dist = Pins.checkpoint(sources.select(col("id")).distinct()
       .select(col("id"), lit(0L).as("dist")))
     var frontier = dist
@@ -564,7 +553,7 @@ object GraphOps {
     var drained = false
     while (r < rounds && !drained) {
       val frontierSide = frontier.withColumnRenamed("id", "src")
-      val relax = (if (smallFrontier) broadcast(frontierSide) else frontierSide)
+      val relax = (if (broadcastFrontier) broadcast(frontierSide) else frontierSide)
         .join(adj, Seq("src"))
         .select(explode(col("nbrs")).as("e"), col("dist"))
         .select(col("e.dst").as("id"), (col("dist") + col("e.w")).as("dist"))
@@ -683,21 +672,24 @@ object GraphOps {
    *
    * Relies on the operator's documented SYMMETRIC edge contract (so out-neighbor
    * explosion of the dropped set decrements exactly the survivors' undirected
-   * degrees). Vertex-sized frames ride the standard 2M scale-adaptive broadcast gate;
-   * past it the same plan degrades to shuffle joins (checkpointed frames carry no
-   * stats, so the gate is decided off the materialized count, AQE-style).
+   * degrees). The vertex-sized frames (the dropped set, the decrements) broadcast under
+   * the [[VertexGate]]; past it the same plan runs shuffle joins.
    * A survivor can end a round with deg 0 (all its ≥k neighbors dropped); it peels in
    * the next round's filter, and the final `deg > 0` filter drops vertices with no
    * surviving edge, which have no degree in the peeled graph.
    */
   def kcorePeel(edges: DataFrame, k: Int, rounds: Int): DataFrame = Pins.scoped {
-    import org.apache.spark.sql.graft.VectorExpressions.{packSortedVarint, unpackSortedVarint}
-    val adj = Pins.cache(edges.select(col("src"), col("dst"))
-      .groupBy(col("src")).agg(sort_array(collect_set(col("dst"))).as("ds"))
-      .select(col("src"), packSortedVarint(col("ds")).as("nbrs"),
-        size(col("ds")).cast("long").as("deg")))
-    val small = adj.count() <= 2000000L
-    def gate(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val adj = packedAdjacency(edges)
+    kcoreRounds(adj, k, rounds, broadcastVertices = adj.count() <= VertexGate)
+  }
+
+  /**
+   * kcorePeel's rounds over a [[packedAdjacency]]; `broadcastVertices` is kcorePeel's
+   * [[VertexGate]] outcome, and `false` is the path past it.
+   */
+  private[graft] def kcoreRounds(adj: DataFrame, k: Int, rounds: Int,
+      broadcastVertices: Boolean): DataFrame = {
+    def gate(df: DataFrame): DataFrame = if (broadcastVertices) broadcast(df) else df
     // (src, deg): deg = degree in the graph induced on the current survivor set.
     // No initial checkpoint — round 1's two consumers are map-only filters over the
     // cache — and no checkpoint after the FINAL round either (its single consumer is

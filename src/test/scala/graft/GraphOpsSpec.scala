@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.graft.JobCounter
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase.pinsLeftByRun
@@ -95,6 +97,33 @@ class GraphOpsSpec extends AnyFunSuite {
   private def hopMap(df: org.apache.spark.sql.DataFrame): Map[Long, Int] =
     df.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
 
+  // ---- the forms past each broadcast gate, as the operators run them on a graph too big
+  // to broadcast: over the production adjacency build, reached through the
+  // private[graft] forms since the gates are constants
+
+  /** Runs `op` with Spark's auto-broadcast off, so no join of a small graph broadcasts. */
+  private def pastGate[T](op: => T): T = {
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try op finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+  }
+
+  private def pageRankPush(edges: DataFrame): DataFrame = Pins.scoped {
+    val adj = GraphOps.packedAdjacency(edges)
+    GraphOps.pageRankPush(adj, adj.count(), iterations = 3, damping = 0.85)
+  }
+
+  private def labelPropagationPush(edges: DataFrame): DataFrame =
+    Pins.scoped(GraphOps.labelPropagationPush(GraphOps.packedAdjacency(edges), rounds = 3))
+
+  private def ssspPastGate(edges: DataFrame, sources: DataFrame, rounds: Int): DataFrame =
+    Pins.scoped(GraphOps.ssspRounds(GraphOps.weightedAdjacency(edges), sources, rounds,
+      broadcastFrontier = false))
+
+  private def kcorePastGate(edges: DataFrame, k: Int, rounds: Int): DataFrame =
+    Pins.scoped(GraphOps.kcoreRounds(GraphOps.packedAdjacency(edges), k, rounds,
+      broadcastVertices = false))
+
   private def assertPrClose(got: Map[Long, Double], want: Map[Long, Double], ctx: String): Unit = {
     assert(got.keySet == want.keySet, ctx)
     got.foreach { case (id, pr) =>
@@ -144,19 +173,19 @@ class GraphOpsSpec extends AnyFunSuite {
   test("bfs and sssp (frontier gate on/off) equal plain-Scala references on digraphs") {
     import spark.implicits._
     for (seed <- Seq(53L, 153L, 253L)) {
-      // directed input: bfs's contract is directed, and sssp's gate seam (`false` is
-      // the unbroadcast path past the 2M gate) must not change a distance
+      // directed input: bfs's contract is directed, and sssp's vertex gate (`false` is
+      // the unbroadcast path past it) must not change a distance
       val raw = randomPairs(seed, n = 60, m = 500)
       val seeds = Seq(0L, 5L)
       assert(hopMap(GraphOps.bfs(raw.toDF("src", "dst"), seeds.toDF("id"), maxHops = 3)) ==
         referenceBfs(raw, seeds, 3), s"seed $seed: bfs")
       val weighted = raw.map { case (a, b) => (a, b, 1 + (a + b) % 7) }
       val want = referenceSssp(weighted, seeds, 3)
-      for (gate <- Seq(true, false)) {
-        val got = longMap(GraphOps.ssspImpl(weighted.toDF("src", "dst", "w"),
-          seeds.toDF("id"), rounds = 3, gateFrontier = gate))
-        assert(got == want, s"seed $seed gateFrontier=$gate: sssp")
-      }
+      val edges = weighted.toDF("src", "dst", "w")
+      assert(longMap(GraphOps.sssp(edges, seeds.toDF("id"), rounds = 3)) == want,
+        s"seed $seed under the gate: sssp")
+      assert(pastGate(longMap(ssspPastGate(edges, seeds.toDF("id"), rounds = 3))) == want,
+        s"seed $seed past the gate: sssp")
     }
   }
 
@@ -229,10 +258,9 @@ class GraphOpsSpec extends AnyFunSuite {
   test("pageRank, pull and push, leaves only its result persisted") {
     import spark.implicits._
     val sym = symmetric(randomPairs(71L, n = 90, m = 900)).toDF("src", "dst")
-    val left = Seq(true, false).map { pull =>
-      pull -> pinsLeftByRun(GraphOps.pageRankImpl(sym, 3, 0.85, pull))
-    }.toMap
-    assert(left.values.forall(_.isEmpty), s"pins left, by pull: $left")
+    val left = Map("pull" -> pinsLeftByRun(GraphOps.pageRank(sym, iterations = 3)),
+      "push" -> pastGate(pinsLeftByRun(pageRankPush(sym))))
+    assert(left.values.forall(_.isEmpty), s"pins left, by form: $left")
   }
 
   test("labelPropagation leaves only its result persisted") {
@@ -259,14 +287,33 @@ class GraphOpsSpec extends AnyFunSuite {
 
   test("push forms of pageRank and labelPropagation equal plain-Scala references") {
     import spark.implicits._
-    // pull = false is the path past the 2M-vertex gate; the defaults above run pull
+    // push is the form past the vertex gate; the public operators above run pull
     for (seed <- Seq(67L, 167L, 267L)) {
       val sym = symmetric(randomPairs(seed, n = 80, m = 700))
       val df = sym.toDF("src", "dst")
-      assertPrClose(prMap(GraphOps.pageRankImpl(df, 3, 0.85, pull = false)),
-        referencePr(sym, 3), s"seed $seed: pageRank push")
-      assert(longMap(GraphOps.labelPropagationImpl(df, 3, pull = false)) ==
-        referenceLpa(sym, 3), s"seed $seed: labelPropagation push")
+      assertPrClose(pastGate(prMap(pageRankPush(df))), referencePr(sym, 3),
+        s"seed $seed: pageRank push")
+      assert(pastGate(longMap(labelPropagationPush(df))) == referenceLpa(sym, 3),
+        s"seed $seed: labelPropagation push")
+    }
+  }
+
+  test("kcorePeel's peel past the vertex gate equals the plain-Scala peel, leaving no pins") {
+    import spark.implicits._
+    pastGate {
+      for (seed <- Seq(59L, 159L, 259L)) {
+        val sym = symmetric(randomPairs(seed, n = 90, m = 900))
+        val df = sym.toDF("src", "dst")
+        for (k <- Seq(2, 8, 15); rounds <- Seq(1, 3)) {
+          var got = Map.empty[Long, Long]
+          val left = SparkTestBase.pinsLeftBy {
+            val peeled = kcorePastGate(df, k, rounds)
+            try got = longMap(peeled) finally Pins.release(peeled)
+          }
+          assert(got == referenceKcore(sym, k, rounds), s"seed $seed k=$k rounds=$rounds diverged")
+          assert(left.isEmpty, s"seed $seed k=$k rounds=$rounds left $left")
+        }
+      }
     }
   }
 
@@ -377,24 +424,22 @@ class GraphOpsSpec extends AnyFunSuite {
 
   test("triangleCount partitioned path (gate=0) equals the broadcast path") {
     import spark.implicits._
-    // random-ish graph big enough to have nontrivial adjacency lists; gate=0 forces the
-    // beyond-broadcast sort-merge path (never reached by sf-scale gates otherwise)
+    // random-ish graph big enough to have nontrivial adjacency lists; the partitioned
+    // form is the beyond-broadcast sort-merge path (never reached by sf-scale gates)
     val rnd = new scala.util.Random(13)
     val edges = Seq.fill(600)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong)).toDF("src", "dst")
     val viaBroadcast = GraphOps.triangleCount(edges).head().getLong(0)
-    // gate=0 only withholds OUR broadcast() hint; Spark's auto-broadcast would still
-    // plan BHJ over the tiny adjacency frame. Disable it and assert the executed plan
-    // genuinely carries no broadcast, so the partitioned physical shape is exercised.
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val viaPartitioned = try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val df = GraphOps.triangleCount(edges, broadcastGateEdges = 0L)
+    // the partitioned form only withholds OUR broadcast() hint; Spark's auto-broadcast
+    // would still plan BHJ over the tiny adjacency frame, so pastGate disables it and
+    // the executed plan must carry no broadcast: the partitioned shape is exercised.
+    val viaPartitioned = pastGate {
+      val df = GraphOps.trianglesOver(GraphOps.orientedEdges(edges), broadcastAdjacency = false)
       val got = df.head().getLong(0)
       val plan = df.queryExecution.executedPlan.toString
       assert(!plan.contains("BroadcastExchange") && !plan.contains("BroadcastHashJoin"),
         s"partitioned path still broadcasts:\n$plan")
       got
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+    }
     assert(viaBroadcast == viaPartitioned && viaBroadcast > 0,
       s"broadcast=$viaBroadcast partitioned=$viaPartitioned")
   }
@@ -453,6 +498,26 @@ class GraphOpsSpec extends AnyFunSuite {
     val d = GraphOps.sssp(edges, seeds, rounds = 10)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(d === Map(1L -> 0L, 2L -> 1L))
+  }
+
+  test("each graph operator starts a fixed number of jobs on a fixed seeded graph") {
+    import spark.implicits._
+    val sym = symmetric(randomPairs(89L, n = 90, m = 900))
+    val df = sym.toDF("src", "dst")
+    val weighted = sym.map { case (a, b) => (a, b, 1 + (a + b) % 7) }.toDF("src", "dst", "w")
+    val seeds = Seq(0L, 5L).toDF("id")
+    def jobs(op: => DataFrame): Int =
+      JobCounter.count(spark.sparkContext) { val f = op; try f.collect() finally Pins.release(f) }
+    val got = Map(
+      "pageRank" -> jobs(GraphOps.pageRank(df, iterations = 3)),
+      "bfs" -> jobs(GraphOps.bfs(df, seeds, maxHops = 3)),
+      "triangleCount" -> jobs(GraphOps.triangleCount(df)),
+      "labelPropagation" -> jobs(GraphOps.labelPropagation(df, rounds = 3)),
+      "sssp" -> jobs(GraphOps.sssp(weighted, seeds, rounds = 3)),
+      "kcorePeel" -> jobs(GraphOps.kcorePeel(df, k = 8, rounds = 3)))
+    // the counts the operators started before their adjacency build and gates were shared
+    assert(got == Map("pageRank" -> 12, "bfs" -> 24, "triangleCount" -> 13,
+      "labelPropagation" -> 12, "sssp" -> 27, "kcorePeel" -> 11))
   }
 
   test("q_rolling_zscore statistics are strictly past-only (leakage-free)") {

@@ -17,13 +17,17 @@ bound in BENCHMARK.json. Nothing under perfbench/ is changed.
 
     python3 tools/ab_pairs.py --parent HEAD~1 --bench q_bfs,q_sssp --sf-dir DIR --pairs 10
 
-`--bench NAMES` runs `graft.Bench` instead, with SPARK_GRAFT_ONLY=NAMES and
-SPARK_GRAFT_SF_DIR=DIR, alternating sides the same way; each side is built by
-perfbench/run.py's build step and runs in its own JVM. It reports, for each named query,
-each side's median and quartiles of the timed seconds in the run's bench_full.json, the
-pairs the change won, and whether the change's median is above the parent's upper
-quartile ("slower than the parent's IQR"). Bench matches SPARK_GRAFT_ONLY by substring;
-only the named queries are reported.
+`--bench NAMES` runs `graft.Bench` instead, with SPARK_GRAFT_SF_DIR=DIR; each side is
+built by perfbench/run.py's build step. Each named query runs in a JVM of its own
+(SPARK_GRAFT_ONLY=NAME), once per side per pair, the two sides of a query back to back
+and alternating which runs first, so a query's time does not depend on which queries
+ran before it in a shared JVM. Bench
+matches SPARK_GRAFT_ONLY by substring, so a name that would select any query besides
+itself (tpch_q1 also selects tpch_q10 to tpch_q19) or none is refused before any run,
+against the change's query list. It reports, for each named query, each side's median
+and quartiles of the timed seconds in the run's bench_full.json, the pairs the change
+won, and whether the change's median is above the parent's upper quartile ("slower than
+the parent's IQR").
 """
 import argparse
 import json
@@ -90,11 +94,40 @@ def bench_classpath(checkout):
     return p.stdout.strip().splitlines()[-1]
 
 
-def bench_once(checkout, cp, names, sf_dir, cpus):
-    """Per-query seconds from one graft.Bench run's bench_full.json; None on failure."""
+LIST_QUERIES = """public class ListQueries {
+  public static void main(String[] args) {
+    scala.jdk.javaapi.CollectionConverters.asJava(graft.SparkEntry.queries().keySet())
+        .forEach(System.out::println);
+  }
+}
+"""
+
+
+def check_names(cp, names):
+    """Exit unless each name, as Bench's substring filter reads it, selects only itself."""
+    out = tempfile.mkdtemp(prefix="ab_names-")
+    try:
+        src = os.path.join(out, "ListQueries.java")
+        with open(src, "w") as f:
+            f.write(LIST_QUERIES)
+        p = subprocess.run(["java", "-cp", cp, src], capture_output=True, text=True)
+    finally:
+        shutil.rmtree(out, ignore_errors=True)
+    if p.returncode != 0:
+        sys.exit(f"ab_pairs: could not list SparkEntry queries:\n{p.stderr[-2000:]}")
+    queries = p.stdout.split()
+    for n in names:
+        selected = sorted(q for q in queries if n in q)
+        if selected != [n]:
+            sys.exit(f"ab_pairs: SPARK_GRAFT_ONLY={n} selects {selected or 'no query'}, "
+                     f"not {n} alone")
+
+
+def bench_once(checkout, cp, name, sf_dir, cpus):
+    """One query's timed seconds from a graft.Bench run of its own; None on failure."""
     out = tempfile.mkdtemp(prefix="ab_bench-")
     full = os.path.join(out, "bench_full.json")
-    env = dict(os.environ, SPARK_GRAFT_ONLY=",".join(names), SPARK_GRAFT_SF_DIR=sf_dir,
+    env = dict(os.environ, SPARK_GRAFT_ONLY=name, SPARK_GRAFT_SF_DIR=sf_dir,
                SPARK_GRAFT_CPUS=str(cpus), SPARK_GRAFT_BENCH_FULL=full)
     cmd = (["java", "-Xmx6g", "-XX:-UsePerfData", f"-Djava.io.tmpdir={out}",
             "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC"]
@@ -106,8 +139,7 @@ def bench_once(checkout, cp, names, sf_dir, cpus):
             sys.stderr.write(p.stdout[-2000:] + p.stderr[-2000:])
             return None
         with open(full) as f:
-            qs = json.load(f)["queries"]
-        return {n: qs.get(n, -1.0) for n in names}
+            return json.load(f)["queries"].get(name, -1.0)
     finally:
         shutil.rmtree(out, ignore_errors=True)
 
@@ -116,26 +148,26 @@ def bench_main(a, parent, sha):
     names = [n for n in a.bench.split(",") if n]
     cpus = len(os.sched_getaffinity(0))
     cps = {"parent": bench_classpath(parent), "change": bench_classpath(ROOT)}
+    check_names(cps["change"], names)
     print(f"graft.Bench on {', '.join(names)} at {a.sf_dir}, {a.pairs} pairs, "
-          f"local[{cpus}]", flush=True)
+          f"local[{cpus}], one JVM per query and side", flush=True)
     runs, failures = [], []
     for i in range(a.pairs):
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
-        got = {}
-        for side in order:
-            res = bench_once(parent if side == "parent" else ROOT, cps[side], names,
-                             a.sf_dir, cpus)
-            if res is None or any(v < 0 for v in res.values()):
-                failures.append({"pair": i, "side": side, "result": res})
-            got[side] = res
-            shown = "run failed" if res is None else " ".join(
-                f"{n} {v:.3f}" for n, v in res.items())
-            print(f"pair {i + 1} {side:6s} {shown}", flush=True)
+        got = {"parent": {}, "change": {}}
+        for n in names:
+            for side in order:
+                t = bench_once(parent if side == "parent" else ROOT, cps[side], n,
+                               a.sf_dir, cpus)
+                if t is None or t < 0:
+                    failures.append({"pair": i, "side": side, "query": n, "result": t})
+                got[side][n] = -1.0 if t is None else t
+                shown = "failed" if got[side][n] < 0 else f"{got[side][n]:.3f}"
+                print(f"pair {i + 1} {n} {side:6s} {shown}", flush=True)
         runs.append({"pair": i, "first": order[0], **got})
     rows = []
     for n in names:
-        ok = [r for r in runs if r["parent"] and r["change"]
-              and r["parent"][n] >= 0 and r["change"][n] >= 0]
+        ok = [r for r in runs if r["parent"][n] >= 0 and r["change"][n] >= 0]
         if not ok:
             rows.append({"query": n, "verdict": "no pair ran"})
             continue
