@@ -207,10 +207,14 @@ object GraphOps {
    * `edges`: directed (src, dst), multi-edges fine; `seeds`: (id). Returns (id, hop).
    */
   def bfs(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame = Pins.scoped {
-    // The frontier join stays an unhinted shuffle join, with no gate: the packed row is
-    // thin, while a 2-hop frontier grows to nearly the whole vertex set, so broadcasting
-    // it lost (bench_frontier_gate_r13.json); pulling onto the adjacency's partitioning
-    // lost too (bench_graph_pull_r14.json) and would only be sound on symmetric input.
+    // The frontier join carries no hint and no gate of its own: broadcasting the frontier
+    // lost, since a 2-hop frontier grows to nearly the whole vertex set
+    // (bench_frontier_gate_r13.json), and pulling onto the adjacency's partitioning lost
+    // too (bench_graph_pull_r14.json) and would only be sound on symmetric input. So
+    // Spark's auto-broadcast picks the join by the cached adjacency's size: up to
+    // spark.sql.autoBroadcastJoinThreshold (10 MB by default, which sf0.1's graph fits)
+    // it is a BroadcastHashJoin that broadcasts the whole adjacency again every round;
+    // past it, a shuffle join on src.
     val adj = packedAdjacency(edges)
     var visited = Pins.checkpoint(seeds.select(col("id")).distinct()
       .select(col("id"), lit(0).as("hop")))

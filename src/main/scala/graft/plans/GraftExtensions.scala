@@ -17,9 +17,15 @@ import org.apache.spark.sql.graft.{CmsEstimate, CmsMergeAgg, CmsSketchAgg, Cosin
  * for a native one).
  *
  * graft deliberately injects much less: stock Catalyst/Tungsten already provides the
- * vectorized/codegen execution layer Gazelle was re-implementing, so the only extensions are
- * the genuinely missing pieces — native expressions for vector math, registered here so both
- * the DataFrame API (graft.functions.VectorFunctions) and SQL text can use them.
+ * vectorized/codegen execution layer Gazelle was re-implementing, so the extensions are only
+ * the genuinely missing pieces:
+ *  - one planner strategy, for the bounded-heap top-k-per-key operator;
+ *  - two optimizer rules: the rank-filter pre-limit and the materialized-view rewrite;
+ *  - one AQE runtime-optimizer rule, [[SmallSortRule]], which runs a global sort over a
+ *    measured input that fits one partition in one task, without a range exchange;
+ *  - native expressions (vector math, string similarity, packed sets, sketches), registered
+ *    here so both the DataFrame API (graft.functions.VectorFunctions) and SQL text can use
+ *    them.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -30,6 +36,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // materialized-view route: derivable aggregates over registered bases are rewritten
     // onto their (freshness-checked) pre-aggregated views
     ext.injectOptimizerRule(_ => MaterializedViews.MvRewriteRule)
+    // runtime route: a global sort over a measured, one-partition-sized input drops its
+    // range exchange and runs in one task
+    ext.injectRuntimeOptimizerRule(_ => SmallSortRule)
     ext.injectFunction((
       FunctionIdentifier("cosine_similarity"),
       FunctionRegistryBase.expressionInfo[CosineSimilarity]("cosine_similarity", None),
