@@ -80,7 +80,7 @@ object CorpusStreaming {
    * caller.
    */
   def admitBatch(batch: DataFrame, indexDir: String, threshold: Double = 0.8,
-      updateIndex: Boolean = true, persist: DataFrame => Unit = _ => ()): DataFrame =
+      persist: DataFrame => Unit = _ => ()): DataFrame =
       Pins.scoped {
     val spark = batch.sparkSession
     // within-batch, same policy as Dedup.dedupedCorpus: exact keep-min first (catches
@@ -110,9 +110,8 @@ object CorpusStreaming {
         Seq("doc_id"), "left_anti")
       .drop("__ch"))
     persist(admitted)
-    if (updateIndex)
-      lanes.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
-        .write.mode("append").parquet(indexDir)
+    lanes.join(admitted.select(col("doc_id")), Seq("doc_id"), "left_semi")
+      .write.mode("append").parquet(indexDir)
     admitted
   }
 
@@ -182,8 +181,7 @@ object CorpusStreaming {
    * self-exclusion: sequential batch callers have no replay to guard against.
    */
   def admitSegmentsBatch(batch: DataFrame, indexDir: String, k: Int = 8,
-      batchId: Long = -1L, updateIndex: Boolean = true,
-      persist: DataFrame => Unit = _ => ()): DataFrame = Pins.scoped {
+      batchId: Long = -1L, persist: DataFrame => Unit = _ => ()): DataFrame = Pins.scoped {
     val spark = batch.sparkSession
     val segs = Dedup.segmentedDocs(batch, k).withColumn("h", xxhash64(col("seg")))
     val fresh = Pins.cache(readIndex(spark, indexDir, SegmentIndexSchema) match {
@@ -194,10 +192,9 @@ object CorpusStreaming {
     })
     val out = Pins.checkpoint(Dedup.reassembleSegments(batch, fresh, k))
     persist(out)
-    if (updateIndex)
-      fresh.select(col("h")).distinct()
-        .withColumn("batch_id", lit(batchId))
-        .write.mode("append").parquet(indexDir)
+    fresh.select(col("h")).distinct()
+      .withColumn("batch_id", lit(batchId))
+      .write.mode("append").parquet(indexDir)
     out
   }
 

@@ -16,27 +16,15 @@ import org.apache.spark.sql.types.{AbstractDataType, ArrayType, BinaryType, Data
   FloatType, IntegerType, LongType}
 
 /**
- * Native Catalyst expression: cosine similarity between two `array<float>` columns.
- *
- * graft's analog of the reference's custom-kernel path (gazelle_plugin:
- * native-sql-engine/core/src/main/scala/com/intel/oap/expression/ColumnarUDF.scala:1 routes
- * functions to hand-written Gandiva/C++ kernels). Here the kernel is generated Java that
- * participates in whole-stage codegen — one tight loop over two float arrays, no boxing, no
- * UDF serialization; the JVM JIT auto-vectorizes it, which is the Spark-native way to get
- * the reference's "SIMD inner loop" effect. At 100 TB the expression pipelines inside the
- * scan/project stage, fully distributed.
+ * The vector and sorted-set kernels, each written once: interpreted eval (`nullSafeEval`,
+ * and so constant folding) and generated code both call the same static method, as
+ * [[VarintCodec]] and [[HilbertCurve]] do, so the two paths cannot drift apart. A null
+ * array element reads as 0 in every kernel but [[sqDistLong]], which returns null.
  */
-case class CosineSimilarity(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
+object VectorKernels {
 
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "cosine_similarity"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  /** Cosine similarity over the common prefix; 0.0 when either norm is 0. */
+  def cosine(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
     while (i < n) {
@@ -47,122 +35,25 @@ case class CosineSimilarity(left: Expression, right: Expression)
     if (denom == 0.0) 0.0 else dot / denom
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      val denom = ctx.freshName("denom")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0; double $na = 0.0; double $nb = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  float $x = $a.getFloat($i); float $y = $b.getFloat($i);
-         |  $dot += $x * $y; $na += $x * $x; $nb += $y * $y;
-         |}
-         |double $denom = java.lang.Math.sqrt($na) * java.lang.Math.sqrt($nb);
-         |${ev.value} = ($denom == 0.0) ? 0.0 : $dot / $denom;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Dot product of two `array<float>` columns; same codegen approach as [[CosineSimilarity]]. */
-case class DotProduct(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "dot_product"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  /** Dot product over the common prefix. */
+  def dot(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var dot = 0.0; var i = 0
     while (i < n) { dot += a.getFloat(i) * b.getFloat(i); i += 1 }
     dot
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i"); val dot = ctx.freshName("dot")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $dot = 0.0;
-         |for (int $i = 0; $i < $n; $i++) { $dot += $a.getFloat($i) * $b.getFloat($i); }
-         |${ev.value} = $dot;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Euclidean (L2) distance of two `array<float>` columns; same codegen approach. */
-case class L2Distance(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "l2_distance"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  /** Euclidean distance over the common prefix; each difference is taken in double. */
+  def l2(a: ArrayData, b: ArrayData): Double = {
     val n = math.min(a.numElements(), b.numElements())
     var s = 0.0; var i = 0
-    // subtract in double so interpreted and codegen paths are bit-identical
     while (i < n) { val d = a.getFloat(i).toDouble - b.getFloat(i); s += d * d; i += 1 }
     math.sqrt(s)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val s = ctx.freshName("s"); val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $s = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = $a.getFloat($i) - $b.getFloat($i);
-         |  $s += $d * $d;
-         |}
-         |${ev.value} = java.lang.Math.sqrt($s);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/**
- * Exact squared L2 distance of two equal-length `array<long>` columns — the k-means
- * assignment kernel (r14, guide §4): the previous `aggregate(zip_with(a, b,
- * (x,y) => (x-y)*(x-y)), 0L, _+_)` form evaluates TWO HigherOrderFunction lambdas
- * interpreted per (vector, centroid) pair — n·k·dim interpreted steps per Lloyd round.
- * This is the same long arithmetic ((x-y)² summed in a long accumulator, exact and
- * order-independent — what makes the fixed-point k-means oracle-able) as one codegen'd
- * loop. A length mismatch (zip_with pads with null) or a null element yields a null
- * distance, as the HOF form did — so the result is nullable even when both inputs are
- * not.
- */
-case class SqDistLong(left: Expression, right: Expression)
-    extends BinaryExpression with ExpectsInputTypes {
-
-  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType), ArrayType(LongType))
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "sq_dist_long"
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
+  /** Exact squared distance of two long arrays in a long accumulator; null when the
+    * lengths differ or either side holds a null element. */
+  def sqDistLong(a: ArrayData, b: ArrayData): java.lang.Long = {
     val n = a.numElements()
     if (n != b.numElements()) return null
     var s = 0L; var i = 0
@@ -175,23 +66,137 @@ case class SqDistLong(left: Expression, right: Expression)
     s
   }
 
+  /** Intersection size of two sorted-ascending long arrays by a two-pointer merge. */
+  def sortedIntersectSize(a: ArrayData, b: ArrayData): Int = {
+    val na = a.numElements(); val nb = b.numElements()
+    var i = 0; var j = 0; var n = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i); val y = b.getLong(j)
+      if (x == y) { n += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    n
+  }
+
+  /** [[sortedIntersectSize]], or -1 as soon as the best reachable Jaccard falls below
+    * `minJacc` (see [[SortedIntersectSizeGated]]). */
+  def sortedIntersectSizeGated(a: ArrayData, b: ArrayData, minJacc: Double): Int = {
+    val na = a.numElements(); val nb = b.numElements()
+    val tot = na.toLong + nb
+    var i = 0; var j = 0; var n = 0
+    while (i < na && j < nb) {
+      val x = a.getLong(i); val y = b.getLong(j)
+      if (x == y) { n += 1; i += 1; j += 1 }
+      else {
+        if (x < y) i += 1 else j += 1
+        val best = n + math.min(na - i, nb - j)
+        if (best * 1.0 / (tot - best) < minJacc) return -1
+      }
+    }
+    n
+  }
+}
+
+/**
+ * Native Catalyst expression: cosine similarity between two `array<float>` columns.
+ *
+ * graft's analog of the reference's custom-kernel path (gazelle_plugin:
+ * native-sql-engine/core/src/main/scala/com/intel/oap/expression/ColumnarUDF.scala:1 routes
+ * functions to hand-written Gandiva/C++ kernels). Here the kernel is one static JVM method
+ * ([[VectorKernels.cosine]]) that generated code calls inside whole-stage codegen — one
+ * tight loop over two float arrays, no boxing, no UDF serialization; the JVM JIT compiles
+ * it, which is the Spark-native way to get the reference's "SIMD inner loop" effect. At
+ * 100 TB the expression pipelines inside the scan/project stage, fully distributed.
+ */
+case class CosineSimilarity(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "cosine_similarity"
+
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.cosine(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val n = ctx.freshName("n"); val i = ctx.freshName("i")
-      val s = ctx.freshName("s"); val d = ctx.freshName("d")
-      s"""
-         |int $n = $a.numElements();
-         |if ($n != $b.numElements()) { ${ev.isNull} = true; } else {
-         |  long $s = 0L;
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
-         |    long $d = $a.getLong($i) - $b.getLong($i);
-         |    $s += $d * $d;
-         |  }
-         |  if (!${ev.isNull}) { ${ev.value} = $s; }
-         |}
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = org.apache.spark.sql.graft.VectorKernels.cosine($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Dot product of two `array<float>` columns; same kernel approach as [[CosineSimilarity]]. */
+case class DotProduct(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "dot_product"
+
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.dot(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = org.apache.spark.sql.graft.VectorKernels.dot($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Euclidean (L2) distance of two `array<float>` columns; same kernel approach. */
+case class L2Distance(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(FloatType), ArrayType(FloatType))
+  override def dataType: DataType = DoubleType
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "l2_distance"
+
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.l2(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = org.apache.spark.sql.graft.VectorKernels.l2($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+/**
+ * Exact squared L2 distance of two equal-length `array<long>` columns — the k-means
+ * assignment kernel (r14, guide §4): the previous `aggregate(zip_with(a, b,
+ * (x,y) => (x-y)*(x-y)), 0L, _+_)` form evaluates TWO HigherOrderFunction lambdas
+ * interpreted per (vector, centroid) pair — n·k·dim interpreted steps per Lloyd round.
+ * This is the same long arithmetic ((x-y)² summed in a long accumulator, exact and
+ * order-independent — what makes the fixed-point k-means oracle-able) as one kernel call
+ * ([[VectorKernels.sqDistLong]]). A length mismatch (zip_with pads with null) or a null
+ * element yields a null distance, as the HOF form did — so the result is nullable even
+ * when both inputs are not, and generated code unboxes the kernel's result in a block of
+ * its own.
+ */
+case class SqDistLong(left: Expression, right: Expression)
+    extends BinaryExpression with ExpectsInputTypes {
+
+  override def inputTypes: Seq[AbstractDataType] = Seq(ArrayType(LongType), ArrayType(LongType))
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = true
+  override def nullIntolerant: Boolean = true
+  override def prettyName: String = "sq_dist_long"
+
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.sqDistLong(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""{ java.lang.Long graftSqDist = org.apache.spark.sql.graft.VectorKernels.sqDistLong($a, $b);
+         |  ${ev.isNull} = graftSqDist == null; if (graftSqDist != null) ${ev.value} = graftSqDist; }
+         |""".stripMargin)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -213,36 +218,12 @@ case class SortedIntersectSize(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "sorted_intersect_size"
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val (na, nb) = (a.numElements(), b.numElements())
-    var i = 0; var j = 0; var n = 0
-    while (i < na && j < nb) {
-      val x = a.getLong(i); val y = b.getLong(j)
-      if (x == y) { n += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    n
-  }
+  override def nullSafeEval(l: Any, r: Any): Any =
+    VectorKernels.sortedIntersectSize(l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j"); val n = ctx.freshName("n")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y")
-      s"""
-         |int $na = $a.numElements(); int $nb = $b.numElements();
-         |int $i = 0; int $j = 0; int $n = 0;
-         |while ($i < $na && $j < $nb) {
-         |  long $x = $a.getLong($i); long $y = $b.getLong($j);
-         |  if ($x == $y) { $n++; $i++; $j++; }
-         |  else if ($x < $y) { $i++; } else { $j++; }
-         |}
-         |${ev.value} = $n;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = org.apache.spark.sql.graft.VectorKernels.sortedIntersectSize($a, $b);")
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
@@ -275,46 +256,12 @@ case class SortedIntersectSizeGated(left: Expression, right: Expression, gate: E
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "sorted_intersect_size_gated"
 
-  override def nullSafeEval(l: Any, r: Any, g: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val t = g.asInstanceOf[Double]
-    val na = a.numElements(); val nb = b.numElements()
-    val tot = na.toLong + nb
-    var i = 0; var j = 0; var n = 0
-    while (i < na && j < nb) {
-      val x = a.getLong(i); val y = b.getLong(j)
-      if (x == y) { n += 1; i += 1; j += 1 }
-      else {
-        if (x < y) i += 1 else j += 1
-        val best = n + math.min(na - i, nb - j)
-        if (best * 1.0 / (tot - best) < t) return -1
-      }
-    }
-    n
-  }
+  override def nullSafeEval(l: Any, r: Any, g: Any): Any = VectorKernels.sortedIntersectSizeGated(
+    l.asInstanceOf[ArrayData], r.asInstanceOf[ArrayData], g.asInstanceOf[Double])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, g) => {
-      val na = ctx.freshName("na"); val nb = ctx.freshName("nb"); val tot = ctx.freshName("tot")
-      val i = ctx.freshName("i"); val j = ctx.freshName("j"); val n = ctx.freshName("n")
-      val x = ctx.freshName("x"); val y = ctx.freshName("y"); val best = ctx.freshName("best")
-      s"""
-         |int $na = $a.numElements(); int $nb = $b.numElements();
-         |long $tot = (long) $na + $nb;
-         |int $i = 0; int $j = 0; int $n = 0;
-         |while ($i < $na && $j < $nb) {
-         |  long $x = $a.getLong($i); long $y = $b.getLong($j);
-         |  if ($x == $y) { $n++; $i++; $j++; }
-         |  else {
-         |    if ($x < $y) { $i++; } else { $j++; }
-         |    int $best = $n + java.lang.Math.min($na - $i, $nb - $j);
-         |    if ($best * 1.0 / ($tot - $best) < $g) { $n = -1; break; }
-         |  }
-         |}
-         |${ev.value} = $n;
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (a, b, g) =>
+      s"${ev.value} = org.apache.spark.sql.graft.VectorKernels.sortedIntersectSizeGated($a, $b, $g);")
 
   override protected def withNewChildrenInternal(
       newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
@@ -545,8 +492,4 @@ object VectorExpressions {
 
   def unpackSortedVarint(a: Column): Column =
     ExpressionUtils.column(UnpackSortedVarint(ExpressionUtils.expression(a)))
-
-  /** Generic bridge for other graft modules that need Expression -> Column. */
-  def toColumn(e: Expression): Column = ExpressionUtils.column(e)
-  def toExpression(c: Column): Expression = ExpressionUtils.expression(c)
 }

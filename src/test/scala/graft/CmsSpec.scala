@@ -52,6 +52,18 @@ class CmsSpec extends AnyFunSuite {
     spark.catalog.dropTempView("cms_bad")
   }
 
+  test("SQL front door: a bad cms_sketch call names the function and the argument") {
+    Seq("a").toDF("tok").createOrReplaceTempView("cms_args")
+    for ((call, msg) <- Seq(
+        "cms_sketch(tok, 5)" -> "cms_sketch takes 1 or 3 argument(s), got 2",
+        "cms_sketch(tok, NULL, 64)" -> "cms_sketch: depth must be a literal integer",
+        "cms_sketch(tok, 5, 1.5)" -> "cms_sketch: width must be a literal integer")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $call FROM cms_args").collect())
+      assert(e.getMessage.contains(msg), s"$call: ${e.getMessage}")
+    }
+    spark.catalog.dropTempView("cms_args")
+  }
+
   test("an uncollided sketch is exact; an absent item reads 0 on it") {
     val df = Seq("a", "a", "a", "b").toDF("tok")
     val sk = df.agg(cmsSketch(col("tok")).as("sk")) // default 5x2048: no collisions here

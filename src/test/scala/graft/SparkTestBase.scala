@@ -8,6 +8,21 @@ object SparkTestBase {
   lazy val spark: SparkSession = GraftSession.get("local[4]", 4)
   val sf: String = "/root/testdata/sf0.001"
 
+  /** Runs `body` with Spark's codegen forced on (`CODEGEN_ONLY`, whole-stage on) or off
+    * (`NO_CODEGEN`, whole-stage off), and restores the session's settings after. */
+  def withCodegen[T](on: Boolean)(body: => T): T = {
+    val modes = Seq("spark.sql.codegen.factoryMode" -> (if (on) "CODEGEN_ONLY" else "NO_CODEGEN"),
+      "spark.sql.codegen.wholeStage" -> on.toString)
+    val prev = modes.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      modes.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   /** What a call left pinned: the ids of the RDDs it persisted and left persisted, and
     * the CacheManager entries it added and left, each named by its plan's root node and
     * output columns. */

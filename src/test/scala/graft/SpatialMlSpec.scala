@@ -149,25 +149,17 @@ class SpatialMlSpec extends AnyFunSuite {
     import org.apache.spark.sql.graft.VectorExpressions.sqDistLong
     // array(...) over the non-nullable range id: neither input is nullable and nothing
     // folds at plan time, so the expression's own nullability decides the output
-    val modes = Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false")
-    for ((mode, wholeStage) <- modes) {
-      val prev = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.wholeStage")
-        .map(k => k -> spark.conf.getOption(k))
-      try {
-        spark.conf.set("spark.sql.codegen.factoryMode", mode)
-        spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
-        val rows = spark.range(4).select(col("id"),
+    for (on <- Seq(true, false)) {
+      val rows = SparkTestBase.withCodegen(on) {
+        spark.range(4).select(col("id"),
             sqDistLong(array(col("id"), lit(2L)), array(lit(1L))).as("mism"),
             sqDistLong(array(col("id")), array(lit(1L))).as("same"))
           .collect()
-        rows.foreach { r =>
-          val id = r.getLong(0)
-          assert(r.isNullAt(1), s"$mode id $id: length mismatch must be null")
-          assert(r.getLong(2) == (id - 1) * (id - 1), s"$mode id $id")
-        }
-      } finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None) => spark.conf.unset(k)
+      }
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        assert(r.isNullAt(1), s"codegen=$on id $id: length mismatch must be null")
+        assert(r.getLong(2) == (id - 1) * (id - 1), s"codegen=$on id $id")
       }
     }
   }

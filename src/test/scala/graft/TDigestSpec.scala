@@ -63,6 +63,22 @@ class TDigestSpec extends AnyFunSuite {
     assert(!merged.isNaN)
   }
 
+  test("tdigest_sketch refuses a column or a NULL compression, naming the argument") {
+    Seq((1.0, 100.0), (2.0, 50.0)).toDF("v", "c").createOrReplaceTempView("td_args")
+    for (compression <- Seq("c", "NULL", "CAST(NULL AS DOUBLE)")) {
+      val e = intercept[Exception](
+        spark.sql(s"SELECT tdigest_sketch(v, $compression) FROM td_args").collect())
+      assert(e.getMessage.contains("tdigest_sketch: compression must be a literal number"),
+        s"$compression: ${e.getMessage}")
+    }
+    val e = intercept[Exception](spark.sql("SELECT tdigest_sketch(v, 100, 1) FROM td_args").collect())
+    assert(e.getMessage.contains("tdigest_sketch takes 1 or 2 argument(s), got 3"), e.getMessage)
+    // a decimal literal is a number too
+    assert(spark.sql("SELECT tdigest_quantile(tdigest_sketch(v, 200.0), 0.5d) FROM td_args")
+      .head().getDouble(0) == 1.5)
+    spark.catalog.dropTempView("td_args")
+  }
+
   test("degenerate inputs: single value, constant column, empty input") {
     val one = Seq(42.0).toDF("v").agg(tdigestQuantile(tdigestSketch(col("v")), lit(0.9)))
       .head().getDouble(0)

@@ -46,16 +46,22 @@ class VectorFunctionsSpec extends AnyFunSuite {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val data = Seq.fill(50)((Seq.fill(16)(rnd.nextFloat()), Seq.fill(16)(rnd.nextFloat())))
-    val df = data.toDF("a", "b")
-    val viaExpr = df.select(VectorFunctions.cosineSimilarity(col("a"), col("b"))).collect().map(_.getDouble(0))
+    // an RDD-backed frame: a local relation would be evaluated interpreted at plan time
+    val df = spark.sparkContext.parallelize(data, 2).toDF("a", "b")
+    def run(): Seq[Double] =
+      df.select(VectorFunctions.cosineSimilarity(col("a"), col("b"))).collect().map(_.getDouble(0))
+    val codegen = SparkTestBase.withCodegen(on = true)(run())
+    val interpreted = SparkTestBase.withCodegen(on = false)(run())
+    assert(codegen.map(java.lang.Double.doubleToLongBits) ==
+      interpreted.map(java.lang.Double.doubleToLongBits))
     val manual = data.map { case (a, b) =>
       val dot = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
       val na = math.sqrt(a.map(x => x.toDouble * x).sum)
       val nb = math.sqrt(b.map(x => x.toDouble * x).sum)
       dot / (na * nb)
     }
-    // manual Seq.sum associates differently than the generated loop; allow float-level slack
-    viaExpr.zip(manual).foreach { case (g, m) => assert(math.abs(g - m) < 1e-6) }
+    // manual Seq.sum associates differently than the kernel's loop; allow float-level slack
+    codegen.zip(manual).foreach { case (g, m) => assert(math.abs(g - m) < 1e-6) }
   }
 
   test("SQL registration through GraftExtensions") {
@@ -66,6 +72,16 @@ class VectorFunctionsSpec extends AnyFunSuite {
     val d = spark.sql(
       "SELECT dot_product(array(CAST(2.0 AS FLOAT)), array(CAST(3.0 AS FLOAT))) AS d").collect()
     assert(d.head.getDouble(0) == 6.0)
+  }
+
+  test("a SQL call with the wrong argument count names the function") {
+    val a = "array(CAST(1.0 AS FLOAT))"
+    for ((call, fn) <- Seq(s"cosine_similarity($a)" -> "cosine_similarity",
+        s"cosine_similarity($a, $a, $a)" -> "cosine_similarity",
+        "jaro_winkler('a')" -> "jaro_winkler")) {
+      val e = intercept[Exception](spark.sql(s"SELECT $call AS r").collect())
+      assert(e.getMessage.contains(s"$fn takes 2 argument(s), got "), s"$call: ${e.getMessage}")
+    }
   }
 
   test("packed intersect equals array intersect on random sorted sets") {
