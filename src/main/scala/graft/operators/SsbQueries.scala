@@ -273,7 +273,7 @@ select d_year, s_city, p_brand1, sum(lo_revenue-lo_supplycost) as profit1
     bodies.map { case (name, body) =>
       name -> { (s: SparkSession, dir: String) =>
         TableIO.registerAll(s, dir)
-        srcTables.foreach(t => s.table(t).createOrReplaceTempView(s"tpch_$t"))
+        srcTables.foreach(t => TableIO.bindView(s, s"tpch_$t", s.table(t)))
         // Fact-as-data-at-rest: lineorder (the one per-query shuffle) materializes once
         // via StarCache; the dim CTEs stay inline because their names shadow base tables.
         val haveLineorder = graft.sources.StarCache.tryEnsure(s, dir, "ssb",

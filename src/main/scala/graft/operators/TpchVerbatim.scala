@@ -162,7 +162,7 @@ limit 100"""
 
   private def run(spark: SparkSession, dir: String, body: String): DataFrame = {
     TableIO.registerAll(spark, dir)
-    TableIO.lineitem(spark, dir).createOrReplaceTempView("tpch_lineitem")
+    TableIO.bindView(spark, "tpch_lineitem", TableIO.lineitem(spark, dir))
     spark.sql(prefix(spark = true) + body)
   }
 

@@ -2,13 +2,17 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
+import scala.util.Try
+
 import org.apache.commons.codec.digest.DigestUtils
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.SparkContext
+import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.util.CharVarcharUtils
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation,
   PartitioningAwareFileIndex}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.{FileListing, Frames}
 
 /**
  * Loaders for the generated test tables (see TESTDATA.md).
@@ -20,15 +24,22 @@ import org.apache.spark.sql.types.StructType
  * the pushdown actually reaches the scan (PushedFilters / ReadSchema).
  *
  * [[table]], [[events]], [[registerAll]], `ResultCache.run` and the `MaterializedViews`
- * rewrite read through [[parquet]], which resolves a path's schema once per file listing.
- * A bare `spark.read.parquet` infers the schema with a one-task Spark job that reads a
- * footer (~30 ms of wall time for ~3 ms of work), so a query reading six tables started
- * six jobs before it ran. The reuse rule: a schema inferred for a path is reused only
- * while the path's file listing (the path, length and mtime of every file) digests the
- * same as when it was inferred, under the same session confs. Each read still lists the
- * path as before, so reads are exactly as fresh as a bare `spark.read.parquet`; there is
- * deliberately no TTL and no option. The same digest, [[listingDigest]], is the one
- * freshness rule of StarCache, the MaterializedViews rewrite and ResultCache.
+ * rewrite read through [[parquet]], which resolves a path once per file listing. A bare
+ * `spark.read.parquet` infers the schema with a one-task Spark job that reads a footer
+ * (~30 ms of wall time for ~3 ms of work), and even with a given schema it resolves a
+ * data source: a service lookup, Hadoop and `JobConf` clones and a file index (2-3 ms).
+ * What a read lists: the path's files, once the session has resolved the path by
+ * Spark's own listing call without a file index ([[listNow]]); a miss lists again
+ * through Spark's file index. What it reuses: while that listing (the path, length and
+ * mtime of every file) digests the same as when the session last resolved the path,
+ * under the same session confs, the session's resolved relation, with fresh attribute
+ * ids; and a temp view that [[bindView]] finds already holding the same result over the
+ * same listing. A rewritten, added or removed file resolves the path again, so reads are
+ * exactly as fresh as a bare `spark.read.parquet`; there is deliberately no TTL and no
+ * option. The reuse took the
+ * sql_star entry layer from ~90 to ~33 ms a pass (`bench_entry_reuse.json`). The same
+ * digest, [[listingDigest]], is the one freshness rule of StarCache, the
+ * MaterializedViews rewrite and ResultCache.
  */
 object TableIO {
   val tableNames: Seq[String] = Seq(
@@ -38,36 +49,78 @@ object TableIO {
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
     parquet(spark, s"$sfDir/$name.parquet")
 
-  /** The schema last inferred for a path, the conf digest it was inferred under and the
-    * listing it saw. */
-  private final case class Resolved(confs: String, listing: String, schema: StructType)
+  /** The relation a session last resolved for a path, the conf digest it was resolved
+    * under and the listing its file index made. */
+  private final case class Resolved(session: SparkSession, confs: String, listing: String,
+                                    relation: LogicalRelation)
 
-  /** JVM-wide, one entry per path ever read through [[parquet]]; an entry is replaced,
-    * never evicted. Sessions with equal confs share it; a read under other confs infers
-    * again and replaces it. */
+  /** JVM-wide, one entry per path read through [[parquet]]: the session that read it last
+    * replaces the entry, and a context's entries are dropped when it stops, so the map
+    * keeps no stopped session reachable. A live session that nothing else holds stays
+    * reachable until another session reads its paths. Each entry keeps its file index,
+    * which holds the status of every file under the path (~680 B a file; the first read
+    * of a 1301-file table retained ~1.7 MiB, Spark's shared file-status cache included).
+    * A hit adds nothing, where each bare `spark.read.parquet` of that table adds ~0.9 MiB
+    * to the shared cache, up to `spark.sql.hive.filesourcePartitionFileCacheSize`
+    * (`bench_entry_reuse.json`). */
   private val resolved = new ConcurrentHashMap[String, Resolved]()
 
+  /** The contexts a [[ForgetOnEnd]] listens to. */
+  private val watched = ConcurrentHashMap.newKeySet[SparkContext]()
+
+  /** Drops every entry of `sc`'s sessions when `sc` stops. */
+  private[graft] final class ForgetOnEnd(sc: SparkContext) extends SparkListener {
+    override def onApplicationEnd(end: SparkListenerApplicationEnd): Unit = {
+      resolved.values.removeIf(_.session.sparkContext eq sc)
+      watched.remove(sc)
+    }
+  }
+
   /**
-   * `spark.read.parquet(path)` without the schema-inference job when the path's files
-   * are unchanged. A hit reads with the cached schema, then compares the listing that
-   * this read's own file index just made; if a file was rewritten, added or removed it
-   * infers again, as a bare read would, and replaces the entry. Each call returns a new
-   * relation with fresh attribute ids, so self-joins resolve as before.
+   * `spark.read.parquet(path)`, resolved once per file listing. A hit needs the session
+   * that last read the path, the same confs, and a listing of the path now ([[listNow]])
+   * that digests as the one its relation was resolved over; it returns that relation
+   * with fresh attribute ids, so self-joins resolve as before, and starts no job, builds
+   * no file index and makes no data-source lookup. Anything else is a bare
+   * `spark.read.parquet(path)`, whose relation replaces the entry.
    */
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val confs = confDigest(spark)
-    Option(resolved.get(path)).filter(_.confs == confs)
-      .map(r => (r, spark.read.schema(r.schema).parquet(path)))
-      .collect { case (r, df) if listingOf(df).contains(r.listing) => df }
+    Option(resolved.get(path))
+      .filter(r => (r.session eq spark) && r.confs == confs &&
+        listNow(r.relation).contains(r.listing))
+      .map(r => Frames.ofPlan(spark, r.relation.newInstance()))
       .getOrElse {
         val df = spark.read.parquet(path)
-        // CHAR/VARCHAR fields (inferred under spark.sql.preserveCharVarcharTypeInfo) are
-        // refused in a given schema, so such a schema is inferred on every read
-        if (!CharVarcharUtils.hasCharVarchar(df.schema))
-          listingOf(df).foreach(l => resolved.put(path, Resolved(confs, l, df.schema)))
+        remember(spark, path, confs, df)
         df
       }
   }
+
+  /** Stores `df`'s relation for `path` when its one root is the path itself: a glob's
+    * roots are its matches when read, and a listing of them would not see a new match. */
+  private def remember(spark: SparkSession, path: String, confs: String, df: DataFrame): Unit =
+    df.queryExecution.analyzed match {
+      case lr @ LogicalRelation(fs: HadoopFsRelation, _, _, _, _) if fs.location.rootPaths ==
+          Seq(new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+            .makeQualified(new Path(path))) =>
+        listingOf(df).foreach { l =>
+          val sc = spark.sparkContext
+          if (watched.add(sc)) sc.addSparkListener(new ForgetOnEnd(sc))
+          resolved.put(path, Resolved(spark, confs, l, lr))
+        }
+      case _ => ()
+    }
+
+  /** [[listingDigest]] of the files under `relation`'s roots as they are now
+    * (`FileListing.leafFiles`); None if they cannot be listed. Where that listing holds
+    * more than the file index does (a `mapreduce.input.pathFilter.class`), the digests
+    * differ and the read only resolves again. */
+  private[graft] def listNow(relation: LogicalRelation): Option[String] =
+    relation.relation match {
+      case fs: HadoopFsRelation => Try(digest(FileListing.leafFiles(fs))).toOption
+      case _ => None
+    }
 
   /** Every conf the session sets, since inference reads confs across several Spark
     * classes (footer type mapping, case sensitivity, char/varchar handling) and that set
@@ -97,9 +150,12 @@ object TableIO {
       }
     }
     if (listings.isEmpty || listings.contains(None)) None
-    else Some(DigestUtils.md5Hex(listings.flatten.flatten
-      .map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}").sorted.mkString("\n")))
+    else Some(digest(listings.flatten.flatten))
   }
+
+  private def digest(files: Seq[FileStatus]): String =
+    DigestUtils.md5Hex(files.map(f => s"${f.getPath}|${f.getLen}|${f.getModificationTime}")
+      .sorted.mkString("\n"))
 
   /** [[listingDigest]] of `df`'s analyzed plan. */
   private[graft] def listingOf(df: DataFrame): Option[String] =
@@ -139,9 +195,19 @@ object TableIO {
     * a SQL user must not see raw nanos longs where the API sees timestamps. */
   def registerAll(spark: SparkSession, sfDir: String): Unit =
     tableNames.foreach { n =>
-      val df = if (n == "events") events(spark, sfDir) else table(spark, sfDir, n)
-      df.createOrReplaceTempView(n)
+      bindView(spark, n, if (n == "events") events(spark, sfDir) else table(spark, sfDir, n))
     }
+
+  /** `df.createOrReplaceTempView(name)`, skipped when the view already holds the same
+    * result over the same file listing ([[listingDigest]]): the view keeps its stored
+    * plan, and no view command (a SQL execution of its own) runs. */
+  def bindView(spark: SparkSession, name: String, df: DataFrame): Unit = {
+    val plan = df.queryExecution.analyzed
+    val kept = spark.sessionState.catalog.getTempView(name).exists { view =>
+      listingDigest(plan).exists(listingDigest(view).contains) && view.sameResult(plan)
+    }
+    if (!kept) df.createOrReplaceTempView(name)
+  }
 
   /** Read Arrow-IPC (`.arrow` / Feather v2) files — the reference's namesake
     * arrow-data-source format. One file per task; schema from the file footer.
